@@ -3127,7 +3127,7 @@ class LakeRepo:
             spark, sorted(sel_set), merge_schema=smap, with_lineage=True
         )
         prefix = "file:" + self.root + os.sep
-        sel_df = local_df(spark, 
+        sel_df = local_df(spark,
             [(f,) for f in sorted(sel_set)], "file string"
         )
         anti = dv.join(F.broadcast(sel_df), "file", "left_semi").select(
@@ -3183,7 +3183,7 @@ class LakeRepo:
                 )
             self.stage_table_files(branch, table, files)
             if dv0:
-                drop_df = local_df(spark, 
+                drop_df = local_df(spark,
                     [(f,) for f in sorted(materialized_files)], "file string"
                 )
                 dv = self._read_files(spark, dv0)

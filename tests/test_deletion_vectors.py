@@ -503,6 +503,56 @@ def test_dv_writes_sql_mode_routes_and_falls_back(spark, repo):
     assert sorted(x.k for x in repo.read_table(spark, "u", "main").collect()) == [0, 1]
 
 
+def _dv_history_repo(spark, repo):
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 30).repartition(2))
+    repo.write_table("main", "u", _kv(spark, 0, 30).repartition(2))
+    repo.commit("main", "base")
+    sql = LakeSQL(spark, repo, "main", dv_writes=True)
+    sql.sql("ALTER TABLE t SET TBLPROPERTIES ('owner' = 'ops')")
+    sql.sql("ALTER TABLE t ADD CONSTRAINT k_nonneg CHECK (k >= 0)")
+    sql.sql("DELETE FROM t WHERE k < 3")
+    # commits that touch only u: its data, vectors and properties
+    sql.sql("ALTER TABLE u SET TBLPROPERTIES ('owner' = 'ops')")
+    sql.sql("DELETE FROM u WHERE k < 3")
+    sql.sql("INSERT INTO u VALUES (99, 198)")
+    return sql
+
+
+def test_dv_history_lists_vector_and_metadata_commits(spark, repo):
+    """DESCRIBE HISTORY t lists every commit that changed t's footprint:
+    a DV DELETE (only __dv__t moves), SET TBLPROPERTIES and ADD
+    CONSTRAINT (only t's metadata objects move); commits that touch only
+    another table stay out."""
+    sql = _dv_history_repo(spark, repo)
+    assert DV_PREFIX + "t" in repo._resolve("main").tables  # the DV route ran
+    msgs = [r.message for r in sql.sql("DESCRIBE HISTORY t").collect()]
+    assert msgs == [
+        "DV DELETE FROM t WHERE k < 3",
+        "ADD CONSTRAINT k_nonneg ON t",
+        "SET TBLPROPERTIES (owner) ON t",
+        "base",
+    ]
+    u_msgs = [r.message for r in sql.sql("DESCRIBE HISTORY u").collect()]
+    assert u_msgs == [
+        "SQL: INSERT INTO u",
+        "DV DELETE FROM u WHERE k < 3",
+        "SET TBLPROPERTIES (owner) ON u",
+        "base",
+    ]
+
+
+def test_dv_detail_reports_vector_delete_as_last_change(spark, repo):
+    sql = _dv_history_repo(spark, repo)
+    t_delete = next(
+        c
+        for c in repo.log("main", limit=None)
+        if c.message == "DV DELETE FROM t WHERE k < 3"
+    )
+    assert sql.sql("DESCRIBE DETAIL t").first().version == t_delete.version
+
+
 def test_dv_noop_delete_commits_nothing(spark, repo):
     repo.write_table("main", "t", _kv(spark, 0, 10))
     c1 = repo.commit("main", "v1")
