@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import with_quantized
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
 
 def _make_assign_cells():
@@ -124,7 +124,6 @@ def kmeans_fit(
     k: int = 16,
     iters: int = 5,
     adaptive_k: Callable[[int], int] | None = None,
-    _q: DataFrame | None = None,
     _init_vecs: list[list[int]] | None = None,
 ) -> list[list[int]]:
     """Train k quantized centroids; returns them as plain Python ints
@@ -134,16 +133,18 @@ def kmeans_fit(
     collects exactly k partial-merged centroid rows. Empty cells keep
     their previous centroid (standard Lloyd's degenerate-cell rule).
 
+    The trainer scans the quantized projection (iters + 1) times — init
+    top-k plus one assignment pass per iteration — so it starts from
+    ``_persisted(quantized_norm(df))`` and leaves that cache for the
+    rest of the query (the registry releases it): an IVF search tail or
+    an outer trainer over the same ``df`` rebuilds ``quantized_norm`` and
+    Spark reads the cache instead of quantizing again.
+
     ``adaptive_k``: data-dependent k rule (e.g. ``adaptive_k_flat``).
     The count it needs rides the SAME persisted quantized projection the
     training passes scan — no separate input-scan job (the projection
     must be materialized for the init top-k anyway, and int counts on a
     cached columnar projection are ~free).
-
-    ``_q``: a pre-built (id, q) quantized projection, for callers that
-    already hold one persisted (the hierarchical trainer, the r15 shared
-    query-level projections) — avoids a second quantize+persist of the
-    corpus. Caller keeps ownership (this function does not unpersist it).
 
     ``_init_vecs``: the init centroid vectors (min(k, n) quantized rows,
     ALREADY selected by the canonical (portable_hash(id), id) top-k rule)
@@ -151,89 +152,71 @@ def kmeans_fit(
     collects ONE top-max(k, coarse_k) batch for both trainers, r15) —
     skips this trainer's init job; value-identical by construction.
     """
-    from pyspark import StorageLevel
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
 
-    own_q = _q is None
-    if own_q:
-        q = with_quantized(df, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q").alias("q")
-        )
-        # the trainer scans q (iters + 1) times — init top-k plus one
-        # assignment pass per iteration; persisting the quantized
-        # projection (one row per vector) pays for itself on the second
-        # pass
-        q = q.persist(StorageLevel.MEMORY_AND_DISK)
+    q = _persisted(quantized_norm(df, vec_col, id_col)).select("id", "q")
+    if adaptive_k is not None:
+        k = max(1, int(adaptive_k(q.count())))
+    # deterministic init: the k smallest ids by (portable_hash(id), id)
+    # — a TOTAL rule (always exactly min(k, n) rows for any id space,
+    # unlike an `id % stride == 0` filter, which selects nothing when
+    # no id is a stride multiple) that spreads the picks pseudo-
+    # randomly across the corpus; a distributed top-k, no global sort.
+    # The SQL-replay oracle orders by the same portable hash.
+    if _init_vecs is not None:
+        vecs = list(_init_vecs[:k])
     else:
-        q = _q
-    try:
-        if adaptive_k is not None:
-            k = max(1, int(adaptive_k(q.count())))
-        # deterministic init: the k smallest ids by (portable_hash(id), id)
-        # — a TOTAL rule (always exactly min(k, n) rows for any id space,
-        # unlike an `id % stride == 0` filter, which selects nothing when
-        # no id is a stride multiple) that spreads the picks pseudo-
-        # randomly across the corpus; a distributed top-k, no global sort.
-        # The SQL-replay oracle orders by the same portable hash.
-        from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
+        vecs = [
+            r.q
+            for r in q.orderBy(portable_hash(F.col("id").cast("string")), "id")
+            .limit(k)
+            .collect()
+        ]
+    if not vecs:
+        raise ValueError("kmeans_fit: empty input")
+    k = len(vecs)  # min(k, n) without a separate count() job
+    C = np.array(vecs, dtype=np.int64)
+    dims = C.shape[1]
+    # partials are ≤ #partitions × k tiny rows; below this bound the
+    # driver merges them directly (one job per iteration instead of a
+    # three-shuffle distributed merge — the local/small-cluster fast
+    # path); above it the exact int64 merge stays distributed
+    small_merge = q.rdd.getNumPartitions() * k <= 65536
 
-        if _init_vecs is not None:
-            vecs = list(_init_vecs[:k])
-        else:
-            vecs = [
-                r.q
-                for r in q.select("id", "q")
-                .orderBy(portable_hash(F.col("id").cast("string")), "id")
-                .limit(k)
-                .collect()
-            ]
-        if not vecs:
-            raise ValueError("kmeans_fit: empty input")
-        k = len(vecs)  # min(k, n) without a separate count() job
-        C = np.array(vecs, dtype=np.int64)
-        dims = C.shape[1]
-        # partials are ≤ #partitions × k tiny rows; below this bound the
-        # driver merges them directly (one job per iteration instead of a
-        # three-shuffle distributed merge — the local/small-cluster fast
-        # path); above it the exact int64 merge stays distributed
-        small_merge = q.rdd.getNumPartitions() * k <= 65536
+    for _ in range(iters):
+        C_b = C  # closure capture; k × dims ints ride the task broadcast
 
-        for _ in range(iters):
-            C_b = C  # closure capture; k × dims ints ride the task broadcast
+        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            acc_sum: dict[int, np.ndarray] = {}
+            acc_cnt: dict[int, int] = {}
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                M = np.array(pdf["q"].to_list(), dtype=np.int64)
+                cells = _assign_cells(M, C_b)
+                for c in np.unique(cells):
+                    sel = M[cells == c]
+                    acc_sum[int(c)] = acc_sum.get(
+                        int(c), np.zeros(dims, np.int64)
+                    ) + sel.sum(axis=0)
+                    acc_cnt[int(c)] = acc_cnt.get(int(c), 0) + len(sel)
+            if acc_sum:
+                yield pd.DataFrame(
+                    {
+                        "cell": list(acc_sum),
+                        "vsum": [s.tolist() for s in acc_sum.values()],
+                        "cnt": [acc_cnt[c] for c in acc_sum],
+                    }
+                )
 
-            def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                acc_sum: dict[int, np.ndarray] = {}
-                acc_cnt: dict[int, int] = {}
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    M = np.array(pdf["q"].to_list(), dtype=np.int64)
-                    cells = _assign_cells(M, C_b)
-                    for c in np.unique(cells):
-                        sel = M[cells == c]
-                        acc_sum[int(c)] = acc_sum.get(
-                            int(c), np.zeros(dims, np.int64)
-                        ) + sel.sum(axis=0)
-                        acc_cnt[int(c)] = acc_cnt.get(int(c), 0) + len(sel)
-                if acc_sum:
-                    yield pd.DataFrame(
-                        {
-                            "cell": list(acc_sum),
-                            "vsum": [s.tolist() for s in acc_sum.values()],
-                            "cnt": [acc_cnt[c] for c in acc_sum],
-                        }
-                    )
-
-            part = q.mapInPandas(partials, "cell INT, vsum ARRAY<LONG>, cnt LONG")
-            C_new = C.copy()
-            for (c,), (vsum, cnt) in _merge_partials(
-                part, ["cell"], small_merge
-            ).items():
-                C_new[c] = vsum // cnt
-            C = C_new
-        return [[int(x) for x in row] for row in C]
-    finally:
-        if own_q:
-            q.unpersist(blocking=False)
+        part = q.mapInPandas(partials, "cell INT, vsum ARRAY<LONG>, cnt LONG")
+        C_new = C.copy()
+        for (c,), (vsum, cnt) in _merge_partials(
+            part, ["cell"], small_merge
+        ).items():
+            C_new[c] = vsum // cnt
+        C = C_new
+    return [[int(x) for x in row] for row in C]
 
 
 def kmeans_fit_hierarchical(
@@ -243,7 +226,6 @@ def kmeans_fit_hierarchical(
     k_coarse: int | None = None,
     k_fine: int | None = None,
     iters: int = 2,
-    _q: DataFrame | None = None,
 ) -> tuple[list[list[int]], dict[int, list[list[int]]], int]:
     """Two-level quantizer — the "past broadcastable k" scale path the
     flat trainer's docstring promises: k_coarse shards from ``kmeans_fit``
@@ -279,9 +261,10 @@ def kmeans_fit_hierarchical(
     the EFFECTIVE nominal fine width — the global-cell-id multiplier
     (cell = shard · k_fine + fine) callers must use.
 
-    ``_q``: a pre-built (id, q) quantized projection the caller already
-    persists (the r15 shared query-level projection) — skips this
-    trainer's own quantize+persist; caller keeps ownership.
+    Both levels scan the ONE ``_persisted(quantized_norm(df))`` cache
+    (the coarse ``kmeans_fit`` rebuilds the same plan and reads it), and
+    the cache outlives training so the caller's assignment tail reads it
+    too; only the shard-tagged copy ``qs`` is private to this call.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Window
@@ -289,23 +272,13 @@ def kmeans_fit_hierarchical(
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import topn_cells
 
-    own_q = _q is None
-    if own_q:
-        q0 = (
-            with_quantized(df, vec_col)
-            .select(F.col(id_col).alias("id"), F.col("_q").alias("q"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    else:
-        q0 = _q
+    q0 = _persisted(quantized_norm(df, vec_col, id_col)).select("id", "q")
     if k_coarse is None or k_fine is None:
         k_auto = adaptive_k_hier(q0.count())
         k_coarse = k_coarse if k_coarse is not None else k_auto
         k_fine = k_fine if k_fine is not None else k_auto
 
-    # the coarse level reuses the SAME persisted projection (_q) — one
-    # quantize pass and one cache for both training levels
-    coarse = kmeans_fit(df, vec_col, id_col, k=k_coarse, iters=iters, _q=q0)
+    coarse = kmeans_fit(df, vec_col, id_col, k=k_coarse, iters=iters)
 
     qs = (
         q0.withColumn("shard", topn_cells(F.col("q"), coarse, 1).getItem(0))
@@ -321,12 +294,6 @@ def kmeans_fit_hierarchical(
             .select("shard", "rn", "q")
             .collect()
         )
-        # qs (id, q, shard) is materialized by the init collect; the bare
-        # quantized projection underneath it is no longer needed — drop
-        # it so the corpus is cached once, not twice (only when we own
-        # it: a caller-shared projection outlives this trainer)
-        if own_q:
-            q0.unpersist(blocking=False)
         fines: dict[int, dict[int, np.ndarray]] = {}
         for r in init:
             fines.setdefault(int(r.shard), {})[int(r.rn) - 1] = np.array(
@@ -385,5 +352,3 @@ def kmeans_fit_hierarchical(
         )
     finally:
         qs.unpersist(blocking=False)
-        if own_q:
-            q0.unpersist(blocking=False)

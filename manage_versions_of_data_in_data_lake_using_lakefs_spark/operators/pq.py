@@ -39,7 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, with_quantized
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
 #: hard bound on closure-shipped query batches. ADC builds a
 #: |queries| × m × 256 LUT per task and the collected query rows ride
@@ -54,8 +54,16 @@ def _collect_query_batch(qdf: DataFrame, op: str, bound: int = MAX_QUERY_BATCH) 
     """Collect the query side for closure shipping, refusing silently
     unbounded batches: a caller passing a 10⁶-row query frame previously
     got a driver/closure blowup instead of an error (VERDICT r6 #4).
-    ``limit(bound+1)`` keeps the overflow probe itself cheap."""
-    rows = [(r.id, r.q, r.n) for r in qdf.limit(bound + 1).collect()]
+    ``limit(bound+1)`` keeps the overflow probe itself cheap.
+
+    ``qdf`` is a ``quantized_norm`` frame. Only ``(id, q)`` is collected
+    and each norm q·q is recomputed here with the int64 einsum of the
+    ``dot_q`` kernel (same values), so a small query batch pays no
+    Python-worker round trip for its norms."""
+    rows = []
+    for r in qdf.select("id", "q").limit(bound + 1).collect():
+        v = np.array(r.q, dtype=np.int64)
+        rows.append((r.id, r.q, int(np.einsum("i,i->", v, v))))
     if len(rows) > bound:
         raise ValueError(
             f"{op}: query batch exceeds MAX_QUERY_BATCH={bound} rows; "
@@ -90,7 +98,6 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    _qn: DataFrame | None = None,
 ) -> list[list[list[int]]]:
     """Train ``m`` per-subspace codebooks of ``k`` codewords each →
     ``codebooks[j][c]`` = list of d/m ints (driver-side metadata,
@@ -100,15 +107,14 @@ def pq_train(
     (portable_hash(id), id) seed EVERY subspace (their slices), so the
     SQL oracle replays init with one shared ORDER BY.
 
-    ``_qn``: a caller-persisted ``(id, q, n)`` quantized projection of
-    ``df`` (r15 — one quantize+persist shared by train, encode and
-    search instead of one per stage); caller keeps ownership."""
-    if _qn is not None:
-        return _pq_train_q(_qn.select("id", "q"), m, k, iters, _persist=False)
-    q = with_quantized(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_q").alias("q")
+    Training scans the quantized projection (iters + 1) times, so it
+    starts from ``_persisted(quantized_norm(df))`` and leaves that cache
+    for the rest of the query (the registry releases it): ``pq_encode``,
+    ``pq_topk_adc`` and the refine tail over the same ``df`` rebuild
+    ``quantized_norm`` and read the cache instead of quantizing again."""
+    return _pq_train_q(
+        _persisted(quantized_norm(df, vec_col, id_col)).select("id", "q"), m, k, iters
     )
-    return _pq_train_q(q, m, k, iters)
 
 
 def _pq_train_q(
@@ -117,94 +123,85 @@ def _pq_train_q(
     k: int,
     iters: int,
     _init_vecs: list[list[int]] | None = None,
-    _persist: bool = True,
 ) -> list[list[list[int]]]:
     """Codebook trainer over an already-quantized ``(id, q)`` frame —
     the shared core of ``pq_train`` (raw vectors) and ``ivfpq_train``
-    (IVF-cell residuals).
+    (IVF-cell residuals). It scans ``q`` (iters + 1) times and does not
+    persist it: each caller hands it a cached frame.
 
     ``_init_vecs``: the init vectors (min(k, n) rows already selected by
     the canonical (portable_hash(id), id) top-k rule), for callers that
     derived them without a job (``ivfpq_train`` computes the residual
     init on the driver from the shared init batch, r15) — skips this
-    trainer's init collect. ``_persist=False`` when ``q`` rides a
-    caller-owned cache."""
-    from pyspark import StorageLevel
-
+    trainer's init collect."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import _merge_partials
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
 
-    if _persist:
-        q = q.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        if _init_vecs is not None:
-            vecs = list(_init_vecs[:k])
-        else:
-            vecs = [
-                r.q
-                for r in q.orderBy(
-                    portable_hash(F.col("id").cast("string")), "id"
-                )
-                .limit(k)
-                .collect()
-            ]
-        if not vecs:
-            raise ValueError("pq_train: empty input")
-        k = len(vecs)  # min(k, n) without a separate count job
-        dims = len(vecs[0])
-        if dims % m != 0:
-            raise ValueError(f"pq_train: m={m} must divide dims={dims}")
-        sub = dims // m
-        # C[j]: k × sub int64 codebook for subspace j
-        C = [
-            np.array([v[j * sub : (j + 1) * sub] for v in vecs], dtype=np.int64)
-            for j in range(m)
-        ]
-        small_merge = q.rdd.getNumPartitions() * k * m <= 65536
-
-        for _ in range(iters):
-            C_b = [c.copy() for c in C]
-
-            def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                acc_sum: dict[tuple[int, int], np.ndarray] = {}
-                acc_cnt: dict[tuple[int, int], int] = {}
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    M = np.array(pdf["q"].to_list(), dtype=np.int64)
-                    for j in range(len(C_b)):
-                        Mj = M[:, j * sub : (j + 1) * sub]
-                        cells = _assign_l2(Mj, C_b[j])
-                        for c in np.unique(cells):
-                            sel = Mj[cells == c]
-                            key = (j, int(c))
-                            acc_sum[key] = acc_sum.get(
-                                key, np.zeros(sub, np.int64)
-                            ) + sel.sum(axis=0)
-                            acc_cnt[key] = acc_cnt.get(key, 0) + len(sel)
-                if acc_sum:
-                    yield pd.DataFrame(
-                        {
-                            "j": [j for j, _ in acc_sum],
-                            "cell": [c for _, c in acc_sum],
-                            "vsum": [s.tolist() for s in acc_sum.values()],
-                            "cnt": [acc_cnt[key] for key in acc_sum],
-                        }
-                    )
-
-            part = q.mapInPandas(
-                partials, "j INT, cell INT, vsum ARRAY<LONG>, cnt LONG"
+    if _init_vecs is not None:
+        vecs = list(_init_vecs[:k])
+    else:
+        vecs = [
+            r.q
+            for r in q.orderBy(
+                portable_hash(F.col("id").cast("string")), "id"
             )
-            C_new = [c.copy() for c in C]
-            for (j, c), (vsum, cnt) in _merge_partials(
-                part, ["j", "cell"], small_merge
-            ).items():
-                C_new[j][c] = np.array(vsum, dtype=np.int64) // cnt
-            C = C_new
-        return [[[int(x) for x in row] for row in cb] for cb in C]
-    finally:
-        if _persist:
-            q.unpersist(blocking=False)
+            .limit(k)
+            .collect()
+        ]
+    if not vecs:
+        raise ValueError("pq_train: empty input")
+    k = len(vecs)  # min(k, n) without a separate count job
+    dims = len(vecs[0])
+    if dims % m != 0:
+        raise ValueError(f"pq_train: m={m} must divide dims={dims}")
+    sub = dims // m
+    # C[j]: k × sub int64 codebook for subspace j
+    C = [
+        np.array([v[j * sub : (j + 1) * sub] for v in vecs], dtype=np.int64)
+        for j in range(m)
+    ]
+    small_merge = q.rdd.getNumPartitions() * k * m <= 65536
+
+    for _ in range(iters):
+        C_b = [c.copy() for c in C]
+
+        def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            acc_sum: dict[tuple[int, int], np.ndarray] = {}
+            acc_cnt: dict[tuple[int, int], int] = {}
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                M = np.array(pdf["q"].to_list(), dtype=np.int64)
+                for j in range(len(C_b)):
+                    Mj = M[:, j * sub : (j + 1) * sub]
+                    cells = _assign_l2(Mj, C_b[j])
+                    for c in np.unique(cells):
+                        sel = Mj[cells == c]
+                        key = (j, int(c))
+                        acc_sum[key] = acc_sum.get(
+                            key, np.zeros(sub, np.int64)
+                        ) + sel.sum(axis=0)
+                        acc_cnt[key] = acc_cnt.get(key, 0) + len(sel)
+            if acc_sum:
+                yield pd.DataFrame(
+                    {
+                        "j": [j for j, _ in acc_sum],
+                        "cell": [c for _, c in acc_sum],
+                        "vsum": [s.tolist() for s in acc_sum.values()],
+                        "cnt": [acc_cnt[key] for key in acc_sum],
+                    }
+                )
+
+        part = q.mapInPandas(
+            partials, "j INT, cell INT, vsum ARRAY<LONG>, cnt LONG"
+        )
+        C_new = [c.copy() for c in C]
+        for (j, c), (vsum, cnt) in _merge_partials(
+            part, ["j", "cell"], small_merge
+        ).items():
+            C_new[j][c] = np.array(vsum, dtype=np.int64) // cnt
+        C = C_new
+    return [[[int(x) for x in row] for row in cb] for cb in C]
 
 
 def _make_encode_batches(
@@ -245,16 +242,12 @@ def pq_encode(
     codebooks: list[list[list[int]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _qn: DataFrame | None = None,
 ) -> DataFrame:
     """Compress the corpus → (id, codes array<int> of length m, n) where
     ``n`` is the exact quantized norm² (kept for cosine ranking). One
-    map pass, codebooks ride the closure. ``_qn``: caller-shared
-    quantized projection (see ``pq_train``)."""
-    q = _qn if _qn is not None else with_quantized(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
-    )
-    return q.mapInPandas(
+    map pass, codebooks ride the closure; after ``pq_train(df)`` in the
+    same query the pass reads the trainer's cached projection."""
+    return quantized_norm(df, vec_col, id_col).mapInPandas(
         _make_encode_batches(codebooks), "id LONG, codes ARRAY<INT>, n LONG"
     )
 
@@ -314,8 +307,6 @@ def pq_topk_adc(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _qn: DataFrame | None = None,
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k over the PQ-compressed corpus → (query_id, rank, nbr,
     adc). The query side collects to the driver and rides the task
@@ -323,10 +314,8 @@ def pq_topk_adc(
     small-query-side assumption); the corpus is scanned once, never
     decompressed, never shuffled — only per-partition local top-k rows
     move."""
-    enc = pq_encode(corpus, codebooks, vec_col, id_col, _qn=_qn)
-    return pq_topk_adc_encoded(
-        enc, queries, codebooks, k, vec_col, id_col, _queries_qn=_queries_qn
-    )
+    enc = pq_encode(corpus, codebooks, vec_col, id_col)
+    return pq_topk_adc_encoded(enc, queries, codebooks, k, vec_col, id_col)
 
 
 def pq_topk_adc_encoded(
@@ -336,25 +325,15 @@ def pq_topk_adc_encoded(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k over an ALREADY-ENCODED ``(id, codes, n)`` frame — the
     stored-index entry point: a PQ index persisted as a lake table (plus
     its codebooks object) is searched without re-encoding the corpus,
     and ingest batches encoded with the SAME stored codebooks append to
-    it without retraining. ``_queries_qn``: caller-shared quantized
-    ``(id, q, n)`` projection of the query frame (rides the corpus
-    projection's cache when queries are a corpus slice, r15)."""
+    it without retraining."""
     from pyspark.sql import Window
 
-    qrows = _collect_query_batch(
-        _queries_qn
-        if _queries_qn is not None
-        else with_quantized(queries, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
-        ),
-        "pq_topk_adc",
-    )
+    qrows = _collect_query_batch(quantized_norm(queries, vec_col, id_col), "pq_topk_adc")
     local = _persisted(
         enc.mapInPandas(
             _make_adc_batches(codebooks, qrows, k),
@@ -378,35 +357,18 @@ def _exact_rerank(
     k: int,
     vec_col: str,
     id_col: str,
-    _qn: DataFrame | None = None,
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """Shared refine tail: exact cosine re-rank of a (query_id, nbr)
-    shortlist — only shortlisted rows are re-read at full precision.
-    ``_qn``/``_queries_qn``: caller-shared quantized projections."""
+    shortlist — only shortlisted rows are re-read at full precision."""
     from pyspark.sql import Window
 
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import cosine_q, dot_q
 
-    c = (
-        _qn.select(
-            F.col("id").alias("nbr"), F.col("q").alias("qc"), F.col("n").alias("nc")
-        )
-        if _qn is not None
-        else with_quantized(corpus, vec_col).select(
-            F.col(id_col).alias("nbr"), F.col("_q").alias("qc"), F.col("_n").alias("nc")
-        )
+    c = quantized_norm(corpus, vec_col, id_col).select(
+        F.col("id").alias("nbr"), F.col("q").alias("qc"), F.col("n").alias("nc")
     )
-    qs = (
-        _queries_qn.select(
-            F.col("id").alias("query_id"),
-            F.col("q").alias("qq"),
-            F.col("n").alias("nq"),
-        )
-        if _queries_qn is not None
-        else with_quantized(queries, vec_col).select(
-            F.col(id_col).alias("query_id"), F.col("_q").alias("qq"), F.col("_n").alias("nq")
-        )
+    qs = quantized_norm(queries, vec_col, id_col).select(
+        F.col("id").alias("query_id"), F.col("q").alias("qq"), F.col("n").alias("nq")
     )
     exact = (
         short.join(c, "nbr")
@@ -430,8 +392,6 @@ def pq_topk_refined(
     shortlist: int = 50,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _qn: DataFrame | None = None,
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage PQ search, the production pattern (FAISS IndexIVFPQ +
     refine): ADC over the compressed corpus produces a ``shortlist`` of
@@ -446,13 +406,9 @@ def pq_topk_refined(
     0.675 @50 for top-5 on the embeddings fixture, SCALING.md) while
     the final ordering is exact over what survives."""
     short = pq_topk_adc(
-        corpus, queries, codebooks, k=shortlist, vec_col=vec_col, id_col=id_col,
-        _qn=_qn, _queries_qn=_queries_qn,
+        corpus, queries, codebooks, k=shortlist, vec_col=vec_col, id_col=id_col
     ).select("query_id", "nbr")
-    return _exact_rerank(
-        short, corpus, queries, k, vec_col, id_col,
-        _qn=_qn, _queries_qn=_queries_qn,
-    )
+    return _exact_rerank(short, corpus, queries, k, vec_col, id_col)
 
 
 def _make_residual_batches(cents: list[list[int]]):
@@ -491,7 +447,6 @@ def ivfpq_train(
     m: int = 4,
     k: int = 8,
     iters: int = 2,
-    _qn: DataFrame | None = None,
 ) -> tuple[list[list[int]], list[list[list[int]]]]:
     """FAISS IndexIVFPQ training: a coarse IVF quantizer (the existing
     integer-cosine Lloyd's trainer) plus PQ codebooks trained on the
@@ -500,15 +455,16 @@ def ivfpq_train(
     tightly (the reason the combo beats flat PQ at scale). Returns
     (coarse_centroids, residual_codebooks) — both driver-side metadata.
 
-    r15 job-count shape: ONE quantized projection (caller-shared via
-    ``_qn`` or persisted here) feeds both trainers; ONE top-max(k,
+    Job-count shape: ONE ``_persisted(quantized_norm(df))`` cache feeds
+    both trainers (the nested ``kmeans_fit`` rebuilds the same plan and
+    reads it) and stays for the query's search tail; ONE top-max(k,
     coarse_k) init collect seeds both (the init rule orders by
     (portable_hash(id), id) — id-only, so the residual frame's top-k
     rows are the SAME rows, and their residuals are computed on the
     driver with the same ``_assign_cells`` int64 kernel the distributed
     map uses: bit-identical, no second init job). Driver-paced jobs:
-    1 init + iters (coarse) + iters (PQ) — was 2 + 2·iters, each also
-    paying a fresh corpus quantize."""
+    1 init + iters (coarse) + iters (PQ). The residual frame is private
+    to this call: persisted for the PQ iterations, released after."""
     from pyspark import StorageLevel
 
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import (
@@ -517,47 +473,36 @@ def ivfpq_train(
     )
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
 
-    own_qn = _qn is None
-    if own_qn:
-        qn = with_quantized(df, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-    else:
-        qn = _qn
+    qn = _persisted(quantized_norm(df, vec_col, id_col))
+    init_vecs = [
+        r.q
+        for r in qn.select("id", "q")
+        .orderBy(portable_hash(F.col("id").cast("string")), "id")
+        .limit(max(coarse_k, k))
+        .collect()
+    ]
+    cents = kmeans_fit(
+        df, vec_col, id_col, k=coarse_k, iters=iters, _init_vecs=init_vecs[:coarse_k]
+    )
+    # residual init on the driver: same rows (id-only ordering), same
+    # assignment kernel, same exact int64 subtraction as the
+    # distributed residual map below
+    C = np.array(cents, dtype=np.int64)
+    assign = _make_assign_cells()
+    pq_init = []
+    for v in init_vecs[:k]:
+        vv = np.array(v, dtype=np.int64)
+        cell = int(assign(vv[None, :], C)[0])
+        pq_init.append((vv - C[cell]).tolist())
+    # the residual cache materializes during PQ iteration 1 for free and
+    # saves iteration 2+ the per-pass residual recompute
+    resid = qn.mapInPandas(
+        _make_residual_batches(cents), "id LONG, cell INT, q ARRAY<LONG>, n LONG"
+    ).select("id", "q").persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        init_vecs = [
-            r.q
-            for r in qn.select("id", "q")
-            .orderBy(portable_hash(F.col("id").cast("string")), "id")
-            .limit(max(coarse_k, k))
-            .collect()
-        ]
-        cents = kmeans_fit(
-            df, vec_col, id_col, k=coarse_k, iters=iters,
-            _q=qn.select("id", "q"), _init_vecs=init_vecs[:coarse_k],
-        )
-        # residual init on the driver: same rows (id-only ordering), same
-        # assignment kernel, same exact int64 subtraction as the
-        # distributed residual map below
-        C = np.array(cents, dtype=np.int64)
-        assign = _make_assign_cells()
-        pq_init = []
-        for v in init_vecs[:k]:
-            vv = np.array(v, dtype=np.int64)
-            cell = int(assign(vv[None, :], C)[0])
-            pq_init.append((vv - C[cell]).tolist())
-        resid = qn.mapInPandas(
-            _make_residual_batches(cents), "id LONG, cell INT, q ARRAY<LONG>, n LONG"
-        ).select("id", "q")
-        # resid stays persisted even under a shared qn: its cache
-        # materializes during PQ iteration 1 for free and saves iteration
-        # 2+ the per-pass residual recompute (same 2-projection memory
-        # shape as before the r15 restructure)
-        cbs = _pq_train_q(resid, m, k, iters, _init_vecs=pq_init)
-        return cents, cbs
+        return cents, _pq_train_q(resid, m, k, iters, _init_vecs=pq_init)
     finally:
-        if own_qn:
-            qn.unpersist(blocking=False)
+        resid.unpersist(blocking=False)
 
 
 def _make_ivfpq_adc_batches(
@@ -622,30 +567,18 @@ def ivfpq_topk(
     nprobe: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _qn: DataFrame | None = None,
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """IndexIVFPQ search: each query probes its ``nprobe`` nearest
     coarse cells and ADC-scores ONLY the compressed vectors in them —
     candidate volume is ~|corpus|·nprobe/coarse_k and the scan reads
     m-byte codes, the double reduction that makes billion-scale ANN
-    feasible. Output (query_id, rank, nbr, adc), exact int64 adc.
-    ``_qn``/``_queries_qn``: caller-shared quantized projections (one
-    quantize for train + search, r15)."""
+    feasible. Output (query_id, rank, nbr, adc), exact int64 adc. After
+    ``ivfpq_train(corpus)`` in the same query the corpus pass reads the
+    trainer's cached projection."""
     from pyspark.sql import Window
 
-    qrows = _collect_query_batch(
-        _queries_qn
-        if _queries_qn is not None
-        else with_quantized(queries, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
-        ),
-        "ivfpq_topk",
-    )
-    qn = _qn if _qn is not None else with_quantized(corpus, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
-    )
-    resid = qn.mapInPandas(
+    qrows = _collect_query_batch(quantized_norm(queries, vec_col, id_col), "ivfpq_topk")
+    resid = quantized_norm(corpus, vec_col, id_col).mapInPandas(
         _make_residual_batches(cents), "id LONG, cell INT, q ARRAY<LONG>, n LONG"
     )
     enc = resid.mapInPandas(
@@ -668,9 +601,6 @@ def ivfpq_topk(
     )
 
 
-
-
-
 def ivfpq_topk_refined(
     corpus: DataFrame,
     queries: DataFrame,
@@ -681,8 +611,6 @@ def ivfpq_topk_refined(
     shortlist: int = 50,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    _qn: DataFrame | None = None,
-    _queries_qn: DataFrame | None = None,
 ) -> DataFrame:
     """The full production ANN stack (FAISS IndexIVFPQ + refine): probe
     nprobe coarse cells, ADC-shortlist over their compressed codes, then
@@ -694,9 +622,5 @@ def ivfpq_topk_refined(
     short = ivfpq_topk(
         corpus, queries, cents, codebooks,
         k=shortlist, nprobe=nprobe, vec_col=vec_col, id_col=id_col,
-        _qn=_qn, _queries_qn=_queries_qn,
     ).select("query_id", "nbr")
-    return _exact_rerank(
-        short, corpus, queries, k, vec_col, id_col,
-        _qn=_qn, _queries_qn=_queries_qn,
-    )
+    return _exact_rerank(short, corpus, queries, k, vec_col, id_col)

@@ -33,11 +33,18 @@ def _persisted(df: DataFrame) -> DataFrame:
     the projections persisted here are one row per vector. Tracked so the
     query registry releases it once the query's result is collected
     (runtime.release_tracked) — caches must not outlive their query in a
-    100-query driver session."""
+    100-query driver session.
+
+    A frame whose plan Spark already caches (the same projection rebuilt
+    by a nested trainer or a later stage of the same query) is returned
+    unchanged: the CacheManager already substitutes the cached relation
+    for it, and persisting again would only warn and track it twice."""
     from pyspark import StorageLevel
 
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.runtime import track
 
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     return track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
@@ -105,12 +112,19 @@ def with_quantized(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 def quantized_norm(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
-    """The canonical ``(id, q, n)`` quantized projection — what a query
-    builds ONCE (usually ``_persisted``) and threads through trainers,
-    encoders and search tails via their ``_qn``/``_q_all`` parameters
-    (r15: one quantize+persist per query instead of one per stage).
-    Pure projection of deterministic expressions — sharing it cannot
-    change any value."""
+    """The canonical ``(id, q, n)`` quantized projection, and the ONE
+    spelling every PQ, k-means and IVF operator builds it with.
+
+    Cache rule: a trainer that re-scans the projection starts from
+    ``_persisted(quantized_norm(df, ...))`` and never unpersists it; the
+    query registry releases it before the next query. Encoders and
+    search tails just call ``quantized_norm`` on the same frame — Spark's
+    CacheManager matches the rebuilt plan (and its selects and filters)
+    to the cached relation, so one quantize pass serves the whole query
+    without a cache parameter threaded through any signature. A
+    different spelling (other column names, a filter BELOW the
+    projection) is a different plan and does not match. Pure projection
+    of deterministic expressions — sharing it cannot change any value."""
     return with_quantized(df, vec_col).select(
         F.col(id_col).alias("id"), F.col("_q").alias("q"), F.col("_n").alias("n")
     )
@@ -124,11 +138,9 @@ def cosine_pairs(
 ) -> DataFrame:
     """Embedding near-dup pairs: all (a<b) with cosine ≥ threshold.
     O(n²) verify — use within LSH buckets for large corpora."""
-    q = with_quantized(df, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_q"), F.col("_n")
-    )
-    a = q.select(F.col("id").alias("a"), F.col("_q").alias("qa"), F.col("_n").alias("na"))
-    b = q.select(F.col("id").alias("b"), F.col("_q").alias("qb"), F.col("_n").alias("nb"))
+    q = quantized_norm(df, vec_col, id_col)
+    a = q.select(F.col("id").alias("a"), F.col("q").alias("qa"), F.col("n").alias("na"))
+    b = q.select(F.col("id").alias("b"), F.col("q").alias("qb"), F.col("n").alias("nb"))
     return (
         a.crossJoin(b)
         .where(F.col("a") < F.col("b"))
@@ -230,14 +242,14 @@ def _sampled_centroids(q_all: DataFrame, stride: int) -> DataFrame:
     """Default quantizer: ~1/stride of the corpus, sampled by a portable
     hash of the id — density-robust (an ``id % stride == 0`` rule silently
     selects NOTHING when no id happens to be a stride multiple: all-odd
-    ids, offset ids, hash-derived ids). ``q_all`` must carry (id, _q, _n).
+    ids, offset ids, hash-derived ids). ``q_all`` is a ``quantized_norm`` frame.
     For corpora small enough that the expected n/stride selection could
     round to zero, use exact search or pass trained ``centroids=``."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
 
     sampled = F.pmod(portable_hash(F.col("id").cast("string")), F.lit(stride))
     return q_all.where(sampled == 0).select(
-        F.col("id").alias("cid"), F.col("_q").alias("qc"), F.col("_n").alias("nc")
+        F.col("id").alias("cid"), F.col("q").alias("qc"), F.col("n").alias("nc")
     )
 
 
@@ -249,7 +261,6 @@ def cosine_pairs_ivf(
     centroid_stride: int = 64,
     nprobe: int = 2,
     centroids: list[list[int]] | None = None,
-    _q_all: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-cell-blocked embedding near-dup pairs — the published
     cluster-then-pairwise recipe (SemDeDup): coarse-quantize the corpus,
@@ -273,22 +284,18 @@ def cosine_pairs_ivf(
     Each vector belongs to its ``nprobe`` nearest cells (fixed fan-out),
     and pairs are de-duplicated before the verify join.
 
-    ``_q_all``: a caller-persisted ``(id, _q, _n)`` quantized projection
-    (alias of ``quantized_norm`` output; the r15 shared-cache shape) —
-    skips this function's own persist; caller keeps ownership.
+    The quantized projection feeds assignment and both verify sides, so
+    it is persisted — or, after ``kmeans_fit(df)`` in the same query,
+    read from the trainer's cache.
     """
-    q_all = _q_all if _q_all is not None else _persisted(
-        with_quantized(df, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q"), F.col("_n")
-        )
-    )
+    q_all = _persisted(quantized_norm(df, vec_col, id_col))
     if centroids is not None:
         # trained quantizer: assignment is a pure MAP — each Arrow batch
         # matmuls against the k×d centroid matrix riding the task closure;
         # no join node, no n×k intermediate rows, no per-id window shuffle
         assign = _persisted(
             q_all.select(
-                "id", F.explode(topn_cells(F.col("_q"), centroids, nprobe)).alias("cell")
+                "id", F.explode(topn_cells(F.col("q"), centroids, nprobe)).alias("cell")
             )
         )
     else:
@@ -297,7 +304,7 @@ def cosine_pairs_ivf(
         # join + per-id window — the small-corpus path
         cents = _sampled_centroids(q_all, centroid_stride)
         scored = q_all.join(F.broadcast(cents)).withColumn(
-            "cos_c", cosine_q(dot_q(F.col("_q"), F.col("qc")), F.col("_n"), F.col("nc"))
+            "cos_c", cosine_q(dot_q(F.col("q"), F.col("qc")), F.col("n"), F.col("nc"))
         )
         wc = Window.partitionBy("id").orderBy(F.col("cos_c").desc(), F.col("cid").asc())
         # persisted: both sides of the candidate self-join consume the
@@ -321,12 +328,8 @@ def _pairs_from_assign(q_all: DataFrame, assign: DataFrame, threshold: float) ->
         .select("a", "b")
         .distinct()
     )
-    va = q_all.select(
-        F.col("id").alias("a"), F.col("_q").alias("qa"), F.col("_n").alias("na")
-    )
-    vb = q_all.select(
-        F.col("id").alias("b"), F.col("_q").alias("qb"), F.col("_n").alias("nb")
-    )
+    va = q_all.select(F.col("id").alias("a"), F.col("q").alias("qa"), F.col("n").alias("na"))
+    vb = q_all.select(F.col("id").alias("b"), F.col("q").alias("qb"), F.col("n").alias("nb"))
     return (
         cand.join(va, "a")
         .join(vb, "b")
@@ -430,27 +433,22 @@ def cosine_pairs_ivf_hier(
     ``adaptive_k_hier`` rule (k₁ = k₂ = ⌈√(n/64)⌉ — constant cell width,
     linear candidate volume at any scale); pass ints to pin them.
 
-    r15: ONE persisted quantized projection feeds both training levels
-    AND the assignment/verify tail (the trainer re-quantizing its own
-    copy was a full second quantize pass + cache)."""
+    The assignment/verify tail reads the quantized projection the
+    trainer cached — one quantize pass for both training levels and the
+    tail."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import (
         kmeans_fit_hierarchical,
     )
 
-    q_all = _persisted(
-        with_quantized(df, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q"), F.col("_n")
-        )
-    )
     coarse, fines, k_fine = kmeans_fit_hierarchical(
-        df, vec_col, id_col, k_coarse=k_coarse, k_fine=k_fine, iters=iters,
-        _q=q_all.select("id", F.col("_q").alias("q")),
+        df, vec_col, id_col, k_coarse=k_coarse, k_fine=k_fine, iters=iters
     )
+    q_all = quantized_norm(df, vec_col, id_col)
     assign = _persisted(
         q_all.select(
             "id",
             F.explode(
-                topn_cells_hier(F.col("_q"), coarse, fines, k_fine, nprobe)
+                topn_cells_hier(F.col("q"), coarse, fines, k_fine, nprobe)
             ).alias("cell"),
         )
     )
@@ -580,14 +578,12 @@ def topk_ivf(
     That is also the only policy that survives 100 TB, where the corpus
     cannot be cached but a scan can always be repeated.
     """
-    q_all = with_quantized(corpus, vec_col).select(
-        F.col(id_col).alias("id"), F.col("_q"), F.col("_n")
-    )
+    q_all = quantized_norm(corpus, vec_col, id_col)
     qids = queries.select(F.col(id_col).alias("id")).distinct()
     sel = [
         F.col("id").alias("query_id"),
-        F.col("_q").alias("qq"),
-        F.col("_n").alias("nq"),
+        F.col("q").alias("qq"),
+        F.col("n").alias("nq"),
         "cell",
     ]
     if centroids is not None:
@@ -595,14 +591,14 @@ def topk_ivf(
         # cells[0] is the home cell, the full array is the query probe set
         withcells = _persisted(
             q_all.withColumn(
-                "cells", topn_cells(F.col("_q"), centroids, max(1, nprobe))
+                "cells", topn_cells(F.col("q"), centroids, max(1, nprobe))
             )
         )
         return _topk_via_cells(withcells, qids, k, nprobe)
     else:
         cents = _sampled_centroids(q_all, centroid_stride)
         scored = q_all.join(F.broadcast(cents)).withColumn(
-            "cos_c", cosine_q(dot_q(F.col("_q"), F.col("qc")), F.col("_n"), F.col("nc"))
+            "cos_c", cosine_q(dot_q(F.col("q"), F.col("qc")), F.col("n"), F.col("nc"))
         )
         wc = Window.partitionBy("id").orderBy(F.col("cos_c").desc(), F.col("cid").asc())
         ranked = scored.withColumn("rc", F.row_number().over(wc))
@@ -613,7 +609,7 @@ def topk_ivf(
         # median 2.27 s vs 3.14 s persisted at sf0.1). The trained path
         # below keeps its persist — there the A/B goes the other way.
         assigned = ranked.where(F.col("rc") == 1).select(
-            "id", "_q", "_n", F.col("cid").alias("cell")
+            "id", "q", "n", F.col("cid").alias("cell")
         )
         if nprobe <= 1:
             qs = assigned.join(qids, "id").select(*sel)
@@ -627,7 +623,7 @@ def topk_ivf(
                 assigned.drop("cell").join(qids, "id").join(probe_cells, "id").select(*sel)
             )
     cand = assigned.select(
-        F.col("id").alias("nbr"), F.col("_q").alias("qc2"), F.col("_n").alias("nc2"), "cell"
+        F.col("id").alias("nbr"), F.col("q").alias("qc2"), F.col("n").alias("nc2"), "cell"
     )
     rescored = (
         cand.join(F.broadcast(qs), on="cell")
@@ -644,7 +640,7 @@ def topk_ivf(
 
 def _topk_via_cells(withcells: DataFrame, qids: DataFrame, k: int, nprobe: int) -> DataFrame:
     """Shared trained-quantizer top-k tail: ``withcells`` carries
-    (id, _q, _n, cells) where cells[0] is the home cell (corpus residency)
+    (id, q, n, cells) where cells[0] is the home cell (corpus residency)
     and the full array the query probe set. Probe = equi-join on cell id
     against the broadcast query fan-out; exact rerank per query. Each
     (query, nbr) pair matches at most once — probe cells per query are
@@ -652,12 +648,12 @@ def _topk_via_cells(withcells: DataFrame, qids: DataFrame, k: int, nprobe: int) 
     step is needed."""
     sel = [
         F.col("id").alias("query_id"),
-        F.col("_q").alias("qq"),
-        F.col("_n").alias("nq"),
+        F.col("q").alias("qq"),
+        F.col("n").alias("nq"),
         "cell",
     ]
     assigned = withcells.select(
-        "id", "_q", "_n", F.col("cells").getItem(0).alias("cell")
+        "id", "q", "n", F.col("cells").getItem(0).alias("cell")
     )
     if nprobe <= 1:
         qs = assigned.join(qids, "id").select(*sel)
@@ -665,7 +661,7 @@ def _topk_via_cells(withcells: DataFrame, qids: DataFrame, k: int, nprobe: int) 
         probe_cells = withcells.select("id", F.explode("cells").alias("cell"))
         qs = assigned.drop("cell").join(qids, "id").join(probe_cells, "id").select(*sel)
     cand = assigned.select(
-        F.col("id").alias("nbr"), F.col("_q").alias("qc2"), F.col("_n").alias("nc2"), "cell"
+        F.col("id").alias("nbr"), F.col("q").alias("qc2"), F.col("n").alias("nc2"), "cell"
     )
     rescored = (
         cand.join(F.broadcast(qs), on="cell")
@@ -705,23 +701,15 @@ def topk_ivf_hier(
         kmeans_fit_hierarchical,
     )
 
-    # one persisted quantized projection for both training levels and
-    # the search tail (r15 — the trainer used to quantize+persist its
-    # own copy)
-    q_all = _persisted(
-        with_quantized(corpus, vec_col).select(
-            F.col(id_col).alias("id"), F.col("_q"), F.col("_n")
-        )
-    )
     coarse, fines, k_fine = kmeans_fit_hierarchical(
-        corpus, vec_col, id_col, k_coarse=k_coarse, k_fine=k_fine, iters=iters,
-        _q=q_all.select("id", F.col("_q").alias("q")),
+        corpus, vec_col, id_col, k_coarse=k_coarse, k_fine=k_fine, iters=iters
     )
     qids = queries.select(F.col(id_col).alias("id")).distinct()
+    # the quantized projection is read from the trainer's cache
     withcells = _persisted(
-        q_all.withColumn(
+        quantized_norm(corpus, vec_col, id_col).withColumn(
             "cells",
-            topn_cells_hier(F.col("_q"), coarse, fines, k_fine, max(1, nprobe)),
+            topn_cells_hier(F.col("q"), coarse, fines, k_fine, max(1, nprobe)),
         )
     )
     return _topk_via_cells(withcells, qids, k, nprobe)

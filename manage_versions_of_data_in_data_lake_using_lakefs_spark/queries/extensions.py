@@ -443,23 +443,13 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME max(8, n//64) rule in SQL (scalar-subquery LIMIT), so parity
     holds at any corpus size, not just the driver's current n=500."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import adaptive_k_flat, kmeans_fit
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # ONE persisted quantized projection for the trainer (adaptive count,
-    # init, iterations) AND the assignment/verify tail (r15; the tail
-    # used to quantize+persist its own copy); pure projection sharing —
-    # value-identical by construction
-    qn = _persisted(quantized_norm(emb))
-    cents = kmeans_fit(
-        emb, iters=2, adaptive_k=adaptive_k_flat, _q=qn.select("id", "q")
-    )
-    return cosine_pairs_ivf(
-        emb, threshold=0.4, nprobe=2, centroids=cents,
-        _q_all=qn.select(
-            "id", F.col("q").alias("_q"), F.col("n").alias("_n")
-        ),
-    )
+    # the assignment/verify tail reads the quantized projection the
+    # trainer cached (adaptive count, init, iterations) — one quantize
+    # pass for the whole query
+    cents = kmeans_fit(emb, iters=2, adaptive_k=adaptive_k_flat)
+    return cosine_pairs_ivf(emb, threshold=0.4, nprobe=2, centroids=cents)
 
 
 def q_dedup_embedding_cosine_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1022,17 +1012,12 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     as CTE chains and scores via the PQ-reconstructed vectors (a
     concatenated-codeword dot product ≡ the ADC LUT sum)."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.pq import pq_topk_adc, pq_train
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 4)
-    # one quantize+persist shared by training, encoding and the query
-    # batch (r15) — the filter commutes with the quantize projection
-    qn = _persisted(quantized_norm(emb))
-    cbs = pq_train(emb, m=4, k=8, iters=2, _qn=qn)
-    return pq_topk_adc(
-        emb, queries, cbs, k=5, _qn=qn, _queries_qn=qn.where(F.col("id") < 4)
-    ).orderBy("query_id", "rank")
+    # encoding reads the quantized projection pq_train cached
+    cbs = pq_train(emb, m=4, k=8, iters=2)
+    return pq_topk_adc(emb, queries, cbs, k=5).orderBy("query_id", "rank")
 
 
 def q_sim_topk_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,16 +1027,13 @@ def q_sim_topk_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist's (0.675 @50 on this fixture) while the final order is
     exact; at 1e9 vectors the exact stage touches 50 rows per query."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.pq import pq_topk_refined, pq_train
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 4)
-    qn = _persisted(quantized_norm(emb))
-    cbs = pq_train(emb, m=4, k=8, iters=2, _qn=qn)
-    return pq_topk_refined(
-        emb, queries, cbs, k=5, shortlist=50,
-        _qn=qn, _queries_qn=qn.where(F.col("id") < 4),
-    ).orderBy("query_id", "rank")
+    cbs = pq_train(emb, m=4, k=8, iters=2)
+    return pq_topk_refined(emb, queries, cbs, k=5, shortlist=50).orderBy(
+        "query_id", "rank"
+    )
 
 
 def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,16 +1047,13 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot(q, centroid) + dot(q, reconstructed residual) — exactly the ADC
     lookup-table sum."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.pq import ivfpq_topk, ivfpq_train
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 4)
-    qn = _persisted(quantized_norm(emb))
-    cents, cbs = ivfpq_train(emb, coarse_k=8, m=4, k=8, iters=2, _qn=qn)
-    return ivfpq_topk(
-        emb, queries, cents, cbs, k=5, nprobe=2,
-        _qn=qn, _queries_qn=qn.where(F.col("id") < 4),
-    ).orderBy("query_id", "rank")
+    cents, cbs = ivfpq_train(emb, coarse_k=8, m=4, k=8, iters=2)
+    return ivfpq_topk(emb, queries, cents, cbs, k=5, nprobe=2).orderBy(
+        "query_id", "rank"
+    )
 
 
 def q_sim_topk_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,15 +1062,12 @@ def q_sim_topk_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank of only the survivors — every cost lever composed, final
     ordering exact over what survives."""
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.pq import ivfpq_topk_refined, ivfpq_train
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted, quantized_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 4)
-    qn = _persisted(quantized_norm(emb))
-    cents, cbs = ivfpq_train(emb, coarse_k=8, m=4, k=8, iters=2, _qn=qn)
+    cents, cbs = ivfpq_train(emb, coarse_k=8, m=4, k=8, iters=2)
     return ivfpq_topk_refined(
-        emb, queries, cents, cbs, k=5, nprobe=2, shortlist=50,
-        _qn=qn, _queries_qn=qn.where(F.col("id") < 4),
+        emb, queries, cents, cbs, k=5, nprobe=2, shortlist=50
     ).orderBy("query_id", "rank")
 
 

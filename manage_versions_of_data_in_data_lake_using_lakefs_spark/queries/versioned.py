@@ -624,22 +624,17 @@ def q_vector_lake_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_topk_adc_encoded,
         pq_train,
     )
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import (
-        _persisted,
-        quantized_norm,
-    )
 
     repo = _fresh_repo()
     emb = load_table(spark, sf_dir, "embeddings")
     build = emb.where(F.col("vec_id") < 400)
     ingest = emb.where(F.col("vec_id") >= 400)
-    # one quantize+persist of the build slice shared by training, index
-    # encoding and the query batch (r15); the ingest batch is a single
-    # encode pass and stays uncached
-    qn_build = _persisted(quantized_norm(build))
-    cbs = pq_train(build, m=4, k=8, iters=2, _qn=qn_build)
+    # index encoding reads the build slice's quantized projection that
+    # pq_train cached; the ingest batch is a single encode pass and
+    # stays uncached
+    cbs = pq_train(build, m=4, k=8, iters=2)
     repo.put_object("main", "_index/pq_codebooks.json", _json.dumps(cbs))
-    repo.write_table("main", "vec_codes", pq_encode(build, cbs, _qn=qn_build))
+    repo.write_table("main", "vec_codes", pq_encode(build, cbs))
     repo.commit("main", "index build")
     # a later session: stored codebooks, no retrain, append-only ingest
     cbs2 = _json.loads(
@@ -649,9 +644,7 @@ def q_vector_lake_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo.commit("main", "ingest batch")
     enc = repo.read_table(spark, "vec_codes", "main")
     queries = emb.where(F.col("vec_id") < 4)
-    return pq_topk_adc_encoded(
-        enc, queries, cbs2, k=5, _queries_qn=qn_build.where(F.col("id") < 4)
-    ).orderBy("query_id", "rank")
+    return pq_topk_adc_encoded(enc, queries, cbs2, k=5).orderBy("query_id", "rank")
 
 
 def _oracle_vector_lake_search() -> str:

@@ -44,14 +44,29 @@ def local_df(spark, rows, schema) -> DataFrame:
     schema and values (pinned by tests/test_local_df.py). Rows that are
     not plain tuples/lists (Row objects, dict rows) and empty row lists
     keep the classic path — correctness first, the fast path is only an
-    execution-strategy change."""
-    try:
-        data = rows if isinstance(rows, list) else list(rows)
-        if data and all(type(r) in (tuple, list) for r in data):
-            import pandas as pd
+    execution-strategy change.
 
-            ncols = len(data[0])
-            if ncols and all(len(r) == ncols for r in data):
+    Fast-path rows are first checked with PySpark's own row verifier, the
+    one the classic path runs, so a row the classic path rejects raises
+    the same error here: the Arrow conversion would otherwise coerce it
+    silently (a float 1.7 in a BIGINT column arrives as 1)."""
+    from pyspark.sql.types import StructType, _make_type_verifier
+
+    data = rows if isinstance(rows, list) else list(rows)
+    struct = spark._parse_ddl(schema) if isinstance(schema, str) else schema
+    if (
+        data
+        and isinstance(struct, StructType)
+        and all(type(r) in (tuple, list) for r in data)
+    ):
+        import pandas as pd
+
+        ncols = len(data[0])
+        if ncols and all(len(r) == ncols for r in data):
+            verify = _make_type_verifier(struct)
+            for r in data:
+                verify(r)
+            try:
                 pdf = pd.DataFrame(
                     {
                         i: pd.Series([r[i] for r in data], dtype=object)
@@ -59,9 +74,9 @@ def local_df(spark, rows, schema) -> DataFrame:
                     }
                 )
                 return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        pass
-    return spark.createDataFrame(rows, schema)
+            except Exception:
+                pass
+    return spark.createDataFrame(data, schema)
 
 _LIVE: list[DataFrame] = []
 

@@ -42,3 +42,20 @@ def test_local_df_structtype_schema(spark):
     fast = local_df(spark, [(1, "a")], st)
     assert fast.schema == classic.schema
     assert fast.collect() == classic.collect()
+
+
+def test_local_df_rejects_mistyped_rows_like_classic(spark):
+    """A row the classic path rejects must raise, not be coerced by the
+    Arrow conversion (a float in a BIGINT column used to arrive
+    truncated)."""
+    import pytest
+
+    for rows, schema in [
+        ([(1.7,)], "a BIGINT"),
+        ([("x", 1)], "a LONG, b STRING"),
+        ([(1, None)], "a LONG, b STRING NOT NULL"),
+    ]:
+        with pytest.raises(Exception) as classic:
+            spark.createDataFrame(rows, schema)
+        with pytest.raises(type(classic.value)):
+            local_df(spark, rows, schema)

@@ -1,19 +1,28 @@
-"""r15: the shared-quantized-projection plumbing (`_qn`/`_q_all`/
-`_init_vecs`) must be a pure execution-strategy change — trainers and
-search tails return BIT-IDENTICAL results with and without a shared
-projection, including ivfpq_train's driver-side residual init."""
+"""The quantized ``(id, q, n)`` projection is shared through Spark's
+cache, not through parameters: a trainer leaves
+``_persisted(quantized_norm(df))`` cached for the rest of the query, a
+later stage that rebuilds ``quantized_norm(df)`` plans against that
+cached relation, and results are bit-identical whether or not anything
+was cached first."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from manage_versions_of_data_in_data_lake_using_lakefs_spark import runtime
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import kmeans_fit
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.pq import (
+    _exact_rerank,
     ivfpq_topk,
     ivfpq_train,
+    pq_encode,
     pq_topk_adc,
     pq_train,
 )
-from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import quantized_norm
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import (
+    _persisted,
+    cosine_pairs_ivf,
+    quantized_norm,
+)
 
 
 @pytest.fixture(scope="module")
@@ -26,76 +35,86 @@ def emb(spark):
     return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
 
-def test_kmeans_init_vecs_matches_own_init(spark, emb):
-    from pyspark import StorageLevel
+@pytest.fixture(autouse=True)
+def _released():
+    runtime.release_tracked()
+    yield
+    runtime.release_tracked()
 
+
+def _reads_cache(df) -> bool:
+    return "InMemoryRelation" in df._jdf.queryExecution().withCachedData().toString()
+
+
+def test_kmeans_init_vecs_matches_own_init(spark, emb):
     from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.dedup import portable_hash
 
     base = kmeans_fit(emb, k=5, iters=2)
-    qn = quantized_norm(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        init = [
-            r.q
-            for r in qn.select("id", "q")
-            .orderBy(portable_hash(F.col("id").cast("string")), "id")
-            .limit(5)
-            .collect()
-        ]
-        shared = kmeans_fit(
-            emb, k=5, iters=2, _q=qn.select("id", "q"), _init_vecs=init
-        )
-        assert shared == base
-    finally:
-        qn.unpersist(blocking=False)
+    init = [
+        r.q
+        for r in quantized_norm(emb)
+        .select("id", "q")
+        .orderBy(portable_hash(F.col("id").cast("string")), "id")
+        .limit(5)
+        .collect()
+    ]
+    assert kmeans_fit(emb, k=5, iters=2, _init_vecs=init) == base
 
 
-def test_pq_train_shared_qn_matches(spark, emb):
-    from pyspark import StorageLevel
-
-    base = pq_train(emb, m=4, k=4, iters=2)
-    qn = quantized_norm(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        assert pq_train(emb, m=4, k=4, iters=2, _qn=qn) == base
-    finally:
-        qn.unpersist(blocking=False)
-
-
-def test_ivfpq_train_and_search_shared_qn_matches(spark, emb):
-    from pyspark import StorageLevel
-
-    queries = emb.where(F.col("vec_id") < 3)
-    cents0, cbs0 = ivfpq_train(emb, coarse_k=4, m=4, k=4, iters=2)
-    r0 = ivfpq_topk(emb, queries, cents0, cbs0, k=3, nprobe=2).orderBy(
-        "query_id", "rank"
-    ).collect()
-    qn = quantized_norm(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        cents1, cbs1 = ivfpq_train(emb, coarse_k=4, m=4, k=4, iters=2, _qn=qn)
-        # the driver-computed residual init must reproduce the
-        # distributed init bit-for-bit
-        assert cents1 == cents0
-        assert cbs1 == cbs0
-        r1 = ivfpq_topk(
-            emb, queries, cents1, cbs1, k=3, nprobe=2,
-            _qn=qn, _queries_qn=qn.where(F.col("id") < 3),
-        ).orderBy("query_id", "rank").collect()
-        assert r1 == r0
-    finally:
-        qn.unpersist(blocking=False)
+def test_persisted_on_cached_plan_is_a_no_op(spark, emb):
+    jsc = spark.sparkContext._jsc
+    qn = _persisted(quantized_norm(emb))
+    qn.count()
+    live, rdds = len(runtime._LIVE), len(jsc.getPersistentRDDs())
+    again = quantized_norm(emb)
+    assert _persisted(again) is again
+    again.count()
+    assert len(runtime._LIVE) == live
+    assert len(jsc.getPersistentRDDs()) == rdds
 
 
-def test_pq_adc_shared_queries_qn_matches(spark, emb):
-    from pyspark import StorageLevel
-
+def test_later_stages_read_the_trainer_cache(spark, emb):
     queries = emb.where(F.col("vec_id") < 3)
     cbs = pq_train(emb, m=4, k=4, iters=2)
-    r0 = pq_topk_adc(emb, queries, cbs, k=3).orderBy("query_id", "rank").collect()
+    assert _reads_cache(pq_encode(emb, cbs))
+    short = spark.createDataFrame([(0, 5), (1, 7)], "query_id LONG, nbr LONG")
+    assert _reads_cache(_exact_rerank(short, emb, queries, 1, "embedding", "vec_id"))
+    runtime.release_tracked()
+    assert not _reads_cache(pq_encode(emb, cbs))
+
+    cents = kmeans_fit(emb, k=4, iters=1)
+    assert _reads_cache(quantized_norm(emb))
+    assert _reads_cache(cosine_pairs_ivf(emb, threshold=0.4, centroids=cents))
+
+
+def _ivfpq_then_pq(emb):
+    queries = emb.where(F.col("vec_id") < 3)
+    cents, cbs = ivfpq_train(emb, coarse_k=4, m=4, k=4, iters=2)
+    ivf = ivfpq_topk(emb, queries, cents, cbs, k=3, nprobe=2)
+    pcbs = pq_train(emb, m=4, k=4, iters=2)
+    adc = pq_topk_adc(emb, queries, pcbs, k=3)
+    return (
+        cents,
+        cbs,
+        ivf.orderBy("query_id", "rank").collect(),
+        pcbs,
+        adc.orderBy("query_id", "rank").collect(),
+    )
+
+
+def test_results_do_not_depend_on_a_caller_cache(spark, emb):
+    from pyspark import StorageLevel
+
+    base = _ivfpq_then_pq(emb)
+    runtime.release_tracked()
     qn = quantized_norm(emb).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        r1 = pq_topk_adc(
-            emb, queries, cbs, k=3, _qn=qn, _queries_qn=qn.where(F.col("id") < 3)
-        ).orderBy("query_id", "rank").collect()
-        assert r1 == r0
+        qn.count()
+        assert _ivfpq_then_pq(emb) == base
+        # the operators read the caller's cache without tracking it, so
+        # releasing what they tracked leaves it to the caller
+        runtime.release_tracked()
+        assert qn.storageLevel != StorageLevel.NONE
     finally:
         qn.unpersist(blocking=False)
 

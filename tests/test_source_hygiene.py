@@ -20,3 +20,14 @@ def test_no_trailing_whitespace():
         if line != line.rstrip()
     ]
     assert not bad, f"{len(bad)} lines end in whitespace: {bad[:20]}"
+
+
+def test_no_runs_of_three_blank_lines():
+    bad = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        run = 0
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            run = run + 1 if not line.strip() else 0
+            if run == 3:
+                bad.append(f"{path.relative_to(PACKAGE.parent)}:{n - 2}")
+    assert not bad, f"{len(bad)} runs of 3+ blank lines start at: {bad[:20]}"
