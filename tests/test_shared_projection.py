@@ -5,7 +5,10 @@ later stage that rebuilds ``quantized_norm(df)`` plans against that
 cached relation, and results are bit-identical whether or not anything
 was cached first."""
 
+from contextlib import contextmanager
+
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from manage_versions_of_data_in_data_lake_using_lakefs_spark import runtime
@@ -87,36 +90,51 @@ def test_later_stages_read_the_trainer_cache(spark, emb):
     assert _reads_cache(cosine_pairs_ivf(emb, threshold=0.4, centroids=cents))
 
 
-def _ivfpq_then_pq(emb):
-    queries = emb.where(F.col("vec_id") < 3)
-    cents, cbs = ivfpq_train(emb, coarse_k=4, m=4, k=4, iters=2)
-    ivf = ivfpq_topk(emb, queries, cents, cbs, k=3, nprobe=2)
-    pcbs = pq_train(emb, m=4, k=4, iters=2)
-    adc = pq_topk_adc(emb, queries, pcbs, k=3)
-    return (
-        cents,
-        cbs,
-        ivf.orderBy("query_id", "rank").collect(),
-        pcbs,
-        adc.orderBy("query_id", "rank").collect(),
-    )
-
-
-def test_results_do_not_depend_on_a_caller_cache(spark, emb):
-    from pyspark import StorageLevel
-
-    base = _ivfpq_then_pq(emb)
-    runtime.release_tracked()
+@contextmanager
+def _caller_cache(emb):
+    """Persist ``quantized_norm(emb)`` the way a caller would, outside
+    the runtime's tracking, and check on exit that the operators left
+    it cached for the caller to release."""
     qn = quantized_norm(emb).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         qn.count()
-        assert _ivfpq_then_pq(emb) == base
-        # the operators read the caller's cache without tracking it, so
-        # releasing what they tracked leaves it to the caller
+        yield qn
         runtime.release_tracked()
         assert qn.storageLevel != StorageLevel.NONE
     finally:
         qn.unpersist(blocking=False)
+
+
+def test_pq_train_shared_qn_matches(spark, emb):
+    base = pq_train(emb, m=4, k=4, iters=2)
+    runtime.release_tracked()
+    with _caller_cache(emb):
+        assert pq_train(emb, m=4, k=4, iters=2) == base
+
+
+def test_ivfpq_train_and_search_shared_qn_matches(spark, emb):
+    queries = emb.where(F.col("vec_id") < 3)
+
+    def train_and_search():
+        cents, cbs = ivfpq_train(emb, coarse_k=4, m=4, k=4, iters=2)
+        hits = ivfpq_topk(emb, queries, cents, cbs, k=3, nprobe=2)
+        return cents, cbs, hits.orderBy("query_id", "rank").collect()
+
+    base = train_and_search()
+    runtime.release_tracked()
+    # ivfpq_train must not unpersist the caller's identical plan
+    with _caller_cache(emb):
+        assert train_and_search() == base
+
+
+def test_pq_adc_shared_queries_qn_matches(spark, emb):
+    queries = emb.where(F.col("vec_id") < 3)
+    cbs = pq_train(emb, m=4, k=4, iters=2)
+    runtime.release_tracked()
+    r0 = pq_topk_adc(emb, queries, cbs, k=3).orderBy("query_id", "rank").collect()
+    with _caller_cache(emb):
+        r1 = pq_topk_adc(emb, queries, cbs, k=3).orderBy("query_id", "rank").collect()
+    assert r1 == r0
 
 
 def test_aligned_select_matches_column_path(spark, tmp_path):
