@@ -1100,7 +1100,7 @@ def stream_table_from_repo(
     granularity — a rewrite emits delete+insert for each row of the
     rewritten files — so it is multiset-correct to fold (inserts minus
     deletes per row ≡ the table at the drained version) but not
-    row-minimal like the batch TABLE_CHANGES TVF's exceptAll diff.
+    row-minimal like the batch TABLE_CHANGES TVF's signed diff.
 
     ``max_files_per_trigger`` (append mode only) bounds each microbatch
     to at most N source files — Spark's ``maxFilesPerTrigger`` rate

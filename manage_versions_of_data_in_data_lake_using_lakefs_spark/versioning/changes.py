@@ -1,15 +1,34 @@
-"""Batch change-data-feed: ``table_changes`` over a version range.
+"""Change reads between commits: the row-minimal diff behind
+``TABLE_CHANGES`` and ``LakeRepo.diff``, and the file-granular batch
+change-data feed ``table_changes`` (``TABLE_CHANGES_FEED``).
 
-Delta exposes its CDF both as a stream AND as a batch relation
-(``table_changes('t', v1, v2)``); the streaming half shipped in r7
-(streaming/source.py, mode=cdc). This is the batch half — the shape an
-incremental ETL or audit job actually wants: "give me every change to
-``t`` between the version my last run saw and now", as one DataFrame,
-no checkpoint machinery.
+Data files are immutable, so two commits that list the same file under
+the same deletion vector share that file's rows. Every read here starts
+from ``file_delta``, one split of a table's files between two commits,
+and reads only what differs:
 
-Semantics match the streaming feed exactly (file-granularity CDF, like
-Delta CDF without change files — multiset-correct to fold, not
-row-minimal):
+- files only the older commit lists, minus its vector's positions;
+- files only the newer commit lists, minus its vector's positions;
+- on shared files, the rows at positions the newer vector adds (gone)
+  or drops (revoked: back again). Vector file groups are immutable, so
+  entry containment tells, with no read, whether either set can be
+  non-empty.
+
+Shared files with an unchanged vector are never read.
+
+``row_changes`` is the row-minimal spelling: signed rows whose multiset
+is exactly the two snapshots' ``EXCEPT ALL`` in both directions. When
+only one sign can occur (an append, a vector-only delete, a restore that
+only revokes) it is a plain scan with no shuffle. Otherwise one signed
+``groupBy`` over the payload cancels the rows a rewrite carried over
+unchanged, and each surviving row expands by its net count.
+
+``table_changes`` is the batch half of Delta's change-data feed (the
+streaming half is streaming/source.py, mode=cdc): every change to ``t``
+between the version an incremental job last saw and now, as one
+DataFrame, no checkpoint machinery. Semantics match the streaming feed
+(file-granularity CDF, like Delta CDF without change files —
+multiset-correct to fold, not row-minimal):
 
 - each commit in the range is diffed against ITS OWN parent on the
   branch's first-parent chain;
@@ -25,19 +44,28 @@ row-minimal):
   version) and mid-range schema changes are not representable — loud
   errors, never silent corruption.
 
-Scale shape: one column-pruned scan per changed file group per commit;
-the only joins are against the deletion vector (a few rows per file —
-broadcast-sized). No shuffle, no driver collect of data rows.
+Scale shape of both: one column-pruned scan per changed file set per
+commit; the only joins are against deletion vectors (a few rows per
+file — broadcast-sized). No driver collect of data rows.
 """
 
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.runtime import local_df
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.log import Commit
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo import DV_PREFIX
+
+#: ``row_changes``'s change column: +1 for a row only the newer snapshot
+#: holds, -1 for one only the older holds; one output row per unit
+SIGN = "__lg_sign"
+_POS = ["__lg_fp", "__lg_ri"]
 
 
 def _files_of(root: str, entries: list[str]) -> list[str]:
@@ -71,6 +99,152 @@ def _files_of(root: str, entries: list[str]) -> list[str]:
     return out
 
 
+def _entries(c: Commit | None, key: str) -> list[str]:
+    return list(c.tables.get(key) or []) if c is not None else []
+
+
+def first_parent_range(
+    repo, ref: str, start: int, end: int
+) -> list[tuple[Commit | None, Commit]]:
+    """``(first parent, commit)`` for every commit on ``ref``'s
+    first-parent line with ``start <= version <= end``, oldest first.
+    Versions are global, so commits of other branches inside the range
+    are not on this line and have no changes here."""
+    pairs = []
+    c = repo.head(ref)
+    while c is not None and c.version >= start:
+        parent = repo.get_commit(c.parents[0]) if c.parents else None
+        if c.version <= end:
+            pairs.append((parent, c))
+        c = parent
+    pairs.reverse()
+    return pairs
+
+
+@dataclass(frozen=True)
+class FileDelta:
+    """``table``'s files in an older commit ``a`` against a newer ``b``."""
+
+    removed: list[str]  # parquet files only ``a`` lists
+    added: list[str]  # parquet files only ``b`` lists
+    shared: list[str]  # entries and files both list
+    dv_a: list[str]  # deletion-vector entries of each side
+    dv_b: list[str]
+    smap_a: dict | None  # schema map of each side
+    smap_b: dict | None
+
+    @property
+    def vector_grows(self) -> bool:
+        """``b``'s vector may hold positions ``a``'s lacks."""
+        return not set(self.dv_b) <= set(self.dv_a)
+
+    @property
+    def vector_shrinks(self) -> bool:
+        """``a``'s vector may hold positions ``b``'s lacks."""
+        return not set(self.dv_a) <= set(self.dv_b)
+
+
+def file_delta(repo, table: str, a: Commit | None, b: Commit | None) -> FileDelta:
+    """Split ``table``'s files between commits ``a`` and ``b`` (either
+    may be None or lack the table: it then has no files). Entries both
+    list are shared with no directory listing; the rest expand to
+    parquet files, so the part files a pruned rewrite carried over are
+    shared too. When the schema maps differ nothing is shared: the same
+    bytes read as different columns on the two sides."""
+    ea, eb = _entries(a, table), _entries(b, table)
+    smap_a = repo._schema_map_of_commit(a, table) if a else None
+    smap_b = repo._schema_map_of_commit(b, table) if b else None
+    same = smap_a == smap_b
+    common = set(ea) & set(eb) if same else set()
+    fa = set(_files_of(repo.root, [e for e in ea if e not in common]))
+    fb = set(_files_of(repo.root, [e for e in eb if e not in common]))
+    both = fa & fb if same else set()
+    dvt = DV_PREFIX + table
+    return FileDelta(
+        removed=sorted(fa - both),
+        added=sorted(fb - both),
+        shared=sorted(common | both),
+        dv_a=_entries(a, dvt),
+        dv_b=_entries(b, dvt),
+        smap_a=smap_a,
+        smap_b=smap_b,
+    )
+
+
+def _positions(repo, spark: SparkSession, dv: list[str]) -> DataFrame | None:
+    return repo._dv_positions(spark, dv) if dv else None
+
+
+def _minus(x: DataFrame | None, y: DataFrame | None) -> DataFrame | None:
+    return x if x is None or y is None else x.join(y, _POS, "left_anti")
+
+
+def _read(
+    repo,
+    spark: SparkSession,
+    files: list[str],
+    smap: dict | None,
+    dv: list[str] | None = None,
+    at: DataFrame | None = None,
+) -> DataFrame:
+    """The rows of ``files`` as a snapshot read returns them: minus the
+    vector ``dv``'s positions, or only the rows at positions ``at``."""
+    df = repo._read_files(
+        spark, files, smap or False, with_lineage=bool(dv) or at is not None
+    )
+    if dv:
+        df = repo._apply_dv(spark, df, dv)
+    elif at is not None:
+        df = df.join(at, _POS, "left_semi").drop(*_POS)
+    return repo.apply_schema_map(df, smap) if smap else df
+
+
+def _col(name: str):
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def row_changes(
+    repo, spark: SparkSession, table: str, a: Commit | None, b: Commit | None
+) -> DataFrame | None:
+    """Row-minimal changes of ``table`` from commit ``a`` to commit
+    ``b``: the payload columns plus ``SIGN``, one row per unit of
+    change. As a multiset it equals ``B.exceptAll(A)`` signed +1 plus
+    ``A.exceptAll(B)`` signed -1 over the two snapshots ``A`` and ``B``
+    (a side that lacks the table reads as empty). None when no file or
+    vector position differs."""
+    d = file_delta(repo, table, a, b)
+    parts: list[tuple[DataFrame, int]] = []
+    if d.added:
+        parts.append((_read(repo, spark, d.added, d.smap_b, dv=d.dv_b), 1))
+    if d.removed:
+        parts.append((_read(repo, spark, d.removed, d.smap_a, dv=d.dv_a), -1))
+    if d.shared and (d.vector_grows or d.vector_shrinks):
+        pa, pb = _positions(repo, spark, d.dv_a), _positions(repo, spark, d.dv_b)
+        if d.vector_grows:
+            gone = _minus(pb, pa)
+            parts.append((_read(repo, spark, d.shared, d.smap_b, at=gone), -1))
+        if d.vector_shrinks:
+            back = _minus(pa, pb)
+            parts.append((_read(repo, spark, d.shared, d.smap_b, at=back), 1))
+    if not parts:
+        return None
+    out = reduce(
+        DataFrame.unionByName, [df.withColumn(SIGN, F.lit(s)) for df, s in parts]
+    )
+    if len({s for _, s in parts}) == 1:
+        return out
+    cols = [_col(c) for c in out.columns if c != SIGN]
+    net = (
+        out.groupBy(*cols)
+        .agg(F.sum(SIGN).alias("__lg_n"))
+        .where(F.col("__lg_n") != 0)
+    )
+    units = F.array_repeat(
+        F.signum("__lg_n").cast("int"), F.abs("__lg_n").cast("int")
+    )
+    return net.select(*cols, F.explode(units).alias(SIGN))
+
+
 def table_changes(
     repo,
     spark: SparkSession,
@@ -88,19 +262,9 @@ def table_changes(
     +1/−1 per insert/delete over (v0, v] reproduces exactly the
     snapshot diff between the two versions.
     """
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo import DV_PREFIX
-
-    head = repo.head(ref)
-    end = ending_version if ending_version is not None else head.version
-    # first-parent chain, oldest-first, bracketed to the range
-    chain = []
-    c = head
-    while c is not None and c.version >= starting_version:
-        if c.version <= end:
-            chain.append(c)
-        c = repo.get_commit(c.parents[0]) if c.parents else None
-    chain.reverse()
-    if not chain:
+    end = ending_version if ending_version is not None else repo.head(ref).version
+    pairs = first_parent_range(repo, ref, starting_version, end)
+    if not pairs:
         raise ValueError(
             f"table_changes: no commits of {ref!r} in versions "
             f"[{starting_version}, {end}]"
@@ -108,109 +272,62 @@ def table_changes(
 
     # mid-range schema changes are not representable as one relation
     # (Delta CDF fails the same way); constant maps replay fine
-    smaps = {
-        repr(repo._schema_map_of_commit(cc, table)) for cc in chain
-    }
-    parent0 = (
-        repo.get_commit(chain[0].parents[0]) if chain[0].parents else None
-    )
-    if parent0 is not None:
-        smaps.add(repr(repo._schema_map_of_commit(parent0, table)))
+    smaps = {repr(repo._schema_map_of_commit(c, table)) for _, c in pairs}
+    if pairs[0][0] is not None:
+        smaps.add(repr(repo._schema_map_of_commit(pairs[0][0], table)))
     if len(smaps) > 1:
         raise NotImplementedError(
             f"table_changes: {table!r}'s schema mapping changed inside the "
             f"version range — split the range at the ALTER commit"
         )
-    smap = repo._schema_map_of_commit(chain[-1], table)
-
+    smap = repo._schema_map_of_commit(pairs[-1][1], table)
     prefix = "file:" + repo.root + os.sep
 
-    def dv_df(entries):
-        d = repo._read_files(spark, entries)
-        return d.select(
-            F.concat(F.lit(prefix), F.col("file")).alias("__lg_fp"),
-            F.col("pos").cast("long").alias("__lg_ri"),
-        )
-
-    def tagged(files, version, tag, dv_entries=None, only_dv=None):
-        """Rows of ``files`` (lineage-read), minus ``dv_entries``
-        positions / restricted to ``only_dv`` positions, tagged."""
-        df = repo._read_files(spark, files, merge_schema=bool(smap), with_lineage=True)
-        if dv_entries:
-            df = df.join(dv_df(dv_entries), ["__lg_fp", "__lg_ri"], "left_anti")
-        if only_dv is not None:
-            df = df.join(only_dv, ["__lg_fp", "__lg_ri"], "left_semi")
-        df = df.drop("__lg_fp", "__lg_ri")
-        if smap:
-            df = repo.apply_schema_map(df, smap)
+    def tagged(df: DataFrame, version: int, tag: str) -> DataFrame:
         return df.withColumn("_change_type", F.lit(tag)).withColumn(
             "_commit_version", F.lit(version).cast("long")
         )
 
     parts: list[DataFrame] = []
     probes: list[DataFrame] = []  # revocation checks, batched to ONE job
-    dvt = DV_PREFIX + table
-    for cc in chain:
-        parent = repo.get_commit(cc.parents[0]) if cc.parents else None
-        prev_e = parent.tables.get(table, []) if parent else []
-        cur_e = cc.tables.get(table, [])
-        dv_prev = parent.tables.get(dvt, []) if parent else []
-        dv_cur = cc.tables.get(dvt, [])
-        if prev_e == cur_e and dv_prev == dv_cur:
-            continue
+    for parent, cc in pairs:
         if cc.meta.get("data_change") is False:
-            continue  # pure rearrangement: the multiset is unchanged
-        prev = set(_files_of(repo.root, prev_e))
-        cur = set(_files_of(repo.root, cur_e))
-        removed, added = sorted(prev - cur), sorted(cur - prev)
-        if removed:
+            continue  # a pure rearrangement leaves the multiset unchanged
+        d = file_delta(repo, table, parent, cc)
+        if d.removed:
             parts.append(
-                tagged(removed, cc.version, "delete", dv_entries=dv_prev or None)
+                tagged(_read(repo, spark, d.removed, smap, dv=d.dv_a), cc.version, "delete")
             )
-        if added:
+        if d.added:
             parts.append(
-                tagged(added, cc.version, "insert", dv_entries=dv_cur or None)
+                tagged(_read(repo, spark, d.added, smap, dv=d.dv_b), cc.version, "insert")
             )
-        if dv_prev != dv_cur:
-            survive = sorted(prev & cur)
-            prev_pos = dv_df(dv_prev) if dv_prev else None
-            cur_pos = dv_df(dv_cur) if dv_cur else None
-            # vector file groups are immutable, so entry-set containment
-            # proves no positions were removed — the common pure-append
-            # case (delete_where_dv / update_where_dv) skips the eager
-            # revocation probe job entirely
-            if survive and prev_pos is not None and not set(dv_prev) <= set(dv_cur):
-                surv_df = local_df(spark,
-                    [(prefix + f,) for f in survive], schema="__lg_fp string"
-                )
-                revoked = prev_pos.join(
-                    F.broadcast(surv_df), "__lg_fp", "left_semi"
-                )
-                if cur_pos is not None:
-                    revoked = revoked.join(
-                        cur_pos, ["__lg_fp", "__lg_ri"], "left_anti"
-                    )
-                # deferred: a long range with many restore-shaped commits
-                # would otherwise pay one driver-paced job per commit —
-                # the union below makes the whole range ONE probe job
-                probes.append(
-                    revoked.select(
-                        F.lit(cc.version).cast("long").alias("_v")
-                    )
-                )
-            if survive and cur_pos is not None:
-                newly = cur_pos
-                if prev_pos is not None:
-                    newly = newly.join(prev_pos, ["__lg_fp", "__lg_ri"], "left_anti")
-                parts.append(
-                    tagged(survive, cc.version, "delete", only_dv=newly)
-                )
+        if not d.shared or not (d.vector_grows or d.vector_shrinks):
+            continue
+        prev_pos, cur_pos = _positions(repo, spark, d.dv_a), _positions(repo, spark, d.dv_b)
+        # the common pure-append case (delete_where_dv / update_where_dv)
+        # cannot revoke and skips the eager revocation probe job entirely
+        if d.vector_shrinks:
+            surv_df = local_df(spark,
+                [(prefix + f,) for f in _files_of(repo.root, d.shared)],
+                schema="__lg_fp string",
+            )
+            revoked = _minus(
+                prev_pos.join(F.broadcast(surv_df), "__lg_fp", "left_semi"), cur_pos
+            )
+            # deferred: a long range with many restore-shaped commits
+            # would otherwise pay one driver-paced job per commit —
+            # the union below makes the whole range ONE probe job
+            probes.append(revoked.select(F.lit(cc.version).cast("long").alias("_v")))
+        if d.vector_grows:
+            newly = _minus(cur_pos, prev_pos)
+            parts.append(
+                tagged(_read(repo, spark, d.shared, smap, at=newly), cc.version, "delete")
+            )
     if probes:
-        probe = probes[0]
-        for p in probes[1:]:
-            probe = probe.unionByName(p)
         # MIN keeps the error deterministic: "split the range" must name
         # the FIRST offending version, or the user iterates blindly
+        probe = reduce(DataFrame.unionByName, probes)
         hit = probe.agg(F.min("_v").alias("_v")).collect()[0]["_v"]
         if hit is not None:
             raise ValueError(
@@ -225,7 +342,4 @@ def table_changes(
         return base.withColumn("_change_type", F.lit("")).withColumn(
             "_commit_version", F.lit(0).cast("long")
         ).limit(0)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)

@@ -16,7 +16,7 @@ Capability map:
   V8     reset uncommitted            reset
   V9     revert/rollback              revert — new commit of old snapshot
   V10    show current commit          head / log
-  V11    diff branches                diff (row-level, Spark anti-joins) /
+  V11    diff branches                diff (row-level, unshared files only) /
                                       diff_tables (object-level, like lakectl)
   V12    merge branch→branch          merge — three-way over the commit DAG,
                                       fast-forward when possible; row-level
@@ -2406,7 +2406,9 @@ class LakeRepo:
         if not blob:
             return None
         with open(os.path.join(self.root, blob)) as f:
-            return json.loads(f.read())
+            smap = json.loads(f.read())
+        # the pre-r6 bare step list, normalized as table_schema_map does
+        return {"base": [], "steps": smap} if isinstance(smap, list) else smap
 
     def _drop_schema_map_object(self, branch: str, table: str) -> None:
         """Remove a table's schema-evolution object if present — dropping
@@ -2838,14 +2840,18 @@ class LakeRepo:
         deletion-vector read semantics. Shuffle-free when the DV side
         broadcasts (typical: a few positions per file); never rewrites
         data."""
-        dv = self._read_files(spark, dv_entries)
+        anti = self._dv_positions(spark, dv_entries)
+        out = df.join(anti, ["__lg_fp", "__lg_ri"], "left_anti")
+        return out if keep_lineage else out.drop("__lg_fp", "__lg_ri")
+
+    def _dv_positions(self, spark: SparkSession, dv_entries: list[str]) -> DataFrame:
+        """A vector's positions keyed like a lineage read: the absolute
+        ``__lg_fp`` file path and the ``__lg_ri`` row index."""
         prefix = "file:" + self.root + os.sep
-        anti = dv.select(
+        return self._read_files(spark, dv_entries).select(
             F.concat(F.lit(prefix), F.col("file")).alias("__lg_fp"),
             F.col("pos").alias("__lg_ri"),
         )
-        out = df.join(anti, ["__lg_fp", "__lg_ri"], "left_anti")
-        return out if keep_lineage else out.drop("__lg_fp", "__lg_ri")
 
     def _check_lg_columns(self, table: str, df: DataFrame) -> None:
         """DV DML guard for tables written before the write-time __lg_
@@ -3567,13 +3573,24 @@ class LakeRepo:
         self, spark: SparkSession, table: str, ref_a: str, ref_b: str
     ) -> DataFrame:
         """Row-level diff of one table between two refs: full rows tagged
-        ``__change`` ∈ {added, removed}. Distributed anti-joins — no
-        driver-side row handling, so it scales to the data, not the diff."""
-        da = self.read_table(spark, table, ref_a)
-        db = self.read_table(spark, table, ref_b)
-        removed = da.exceptAll(db).withColumn("__change", F.lit("removed"))
-        added = db.exceptAll(da).withColumn("__change", F.lit("added"))
-        return removed.unionByName(added)
+        ``__change`` ∈ {added, removed}, row-minimal (a multiset
+        ``EXCEPT ALL`` both ways). Reads only the files and vector
+        positions the two snapshots do not share (``changes.row_changes``)
+        — no driver-side row handling, so it scales to the diff, not the
+        table."""
+        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import SIGN, row_changes
+
+        a, b = self._resolve(ref_a), self._resolve(ref_b)
+        for ref, c in ((ref_a, a), (ref_b, b)):
+            if not c.tables.get(table):
+                raise KeyError(f"table {table} not in snapshot {c.id[:8]} ({ref})")
+        out = row_changes(self, spark, table, a, b)
+        if out is None:
+            return self.read_table(spark, table, ref_a).limit(0).withColumn(
+                "__change", F.lit("removed")
+            )
+        change = F.when(F.col(SIGN) > 0, "added").otherwise("removed")
+        return out.withColumn("__change", change).drop(SIGN)
 
     # -- merge (V12) -------------------------------------------------------
     def _merge_base(self, a_id: str, b_id: str) -> str | None:

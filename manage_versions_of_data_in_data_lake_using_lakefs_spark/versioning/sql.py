@@ -2790,51 +2790,41 @@ class LakeSQL:
 
     def _register_changes(self, table: str, v_start: int, v_end: int) -> str:
         """CDC: register a view of row-level changes in commit versions
-        [v_start, v_end] — Delta's ``table_changes`` TVF. Each commit
-        contributes its snapshot-vs-predecessor diff (two distributed
-        anti-joins, repo.diff semantics) tagged with ``_change_type``
-        ('insert' | 'delete' — an update is a delete+insert pair, as in
-        Delta without deletion vectors) and ``_commit_version``. Commits
-        that did not touch the table contribute nothing.
+        [v_start, v_end] — Delta's ``table_changes`` TVF. Each commit on
+        the branch's first-parent line contributes its diff against its
+        own first parent (``changes.row_changes``, the ``repo.diff``
+        semantics), tagged with ``_change_type`` ('insert' | 'delete' —
+        an update is a delete+insert pair, as in Delta without deletion
+        vectors) and ``_commit_version``. Commits that did not touch
+        the table, commits of other branches and ``data_change=false``
+        rearrangements contribute nothing and cost no Spark work.
 
-        This spelling is ROW-MINIMAL (a rewrite emits only the net
-        change) at the cost of two full-snapshot scans per version — the
-        right trade for small audit ranges. Incremental ETL over long
-        ranges wants ``versioning.changes.table_changes`` (r9): the
-        file-granularity feed that scans only each commit's CHANGED
-        files, reads deletion-vector commits as position lists, and
-        skips ``data_change=false`` rearrangements — multiset-correct to
+        This spelling is ROW-MINIMAL: a rewrite emits only the net
+        change. It reads only the files each commit removed or added and
+        the rows its deletion-vector change moved; rows a rewrite
+        carried over cancel in one signed aggregation. The scale
+        spelling is ``TABLE_CHANGES_FEED`` (``changes.table_changes``):
+        the same file split with no aggregation — multiset-correct to
         fold, not row-minimal."""
+        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import (
+            SIGN,
+            first_parent_range,
+            row_changes,
+        )
+
         name = self._resolve_table(table)
-
-        def snap(v: int) -> DataFrame | None:
-            if v < 0:
-                return None
-            try:
-                return self.repo.read_table(
-                    self.spark, name, ref=self.branch, version_as_of=v
-                )
-            except KeyError:
-                return None  # table absent at this version
-
+        change = F.when(F.col(SIGN) > 0, "insert").otherwise("delete")
         parts: list[DataFrame] = []
-        for v in range(v_start, v_end + 1):
-            cur, prev = snap(v), snap(v - 1)
-            if cur is None and prev is None:
+        for parent, c in first_parent_range(self.repo, self.branch, v_start, v_end):
+            if c.meta.get("data_change") is False:
                 continue
-            if prev is None:
-                delta = cur.withColumn("_change_type", F.lit("insert"))
-            elif cur is None:
-                delta = prev.withColumn("_change_type", F.lit("delete"))
-            else:
-                delta = (
-                    cur.exceptAll(prev)
-                    .withColumn("_change_type", F.lit("insert"))
-                    .unionByName(
-                        prev.exceptAll(cur).withColumn("_change_type", F.lit("delete"))
-                    )
+            delta = row_changes(self.repo, self.spark, name, parent, c)
+            if delta is not None:
+                parts.append(
+                    delta.withColumn("_change_type", change)
+                    .drop(SIGN)
+                    .withColumn("_commit_version", F.lit(c.version))
                 )
-            parts.append(delta.withColumn("_commit_version", F.lit(v)))
         if not parts:
             head = self.repo.read_table(self.spark, name, ref=self.branch)
             parts = [
@@ -2851,10 +2841,12 @@ class LakeSQL:
 
     def _register_changes_feed(self, table: str, v_start: int, v_end: int) -> str:
         """``TABLE_CHANGES_FEED(t, v1[, v2])`` — the scale spelling of the
-        change TVF: ``versioning.changes.table_changes`` (file-granularity
-        diffs scanning only changed files, DV commits as position lists,
-        data_change=false skipped; multiset-correct to fold, not
-        row-minimal — see _register_changes for the trade)."""
+        change TVF: ``versioning.changes.table_changes``. It reads the
+        same changed files and vector positions as ``TABLE_CHANGES`` but
+        skips the signed aggregation, so a rewrite emits every row of
+        the rewritten files as a delete+insert pair (multiset-correct to
+        fold, not row-minimal), and a commit that revokes vector
+        positions raises."""
         from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import table_changes
 
         name = self._resolve_table(table)
