@@ -150,54 +150,6 @@ def cosine_pairs(
     )
 
 
-def cosine_pairs_lsh(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-) -> DataFrame:
-    """Bucketed embedding near-dup pairs — the scale path for
-    ``cosine_pairs``: candidates are pairs sharing a random-hyperplane LSH
-    bucket (one equi-join on the bucket key, no cross join), verified with
-    the exact quantized cosine inside the bucket.
-
-    Recall is the standard LSH trade: a pair split by any hyperplane lands
-    in different buckets and is not emitted (probability shrinks as cosine
-    → 1, which is exactly the near-dup regime). The DuckDB oracle mirrors
-    the same deterministic planes, so results stay bit-identical.
-
-    The quantized+bucketed projection is persisted before branching into
-    the self-join: HOF expressions (transform/aggregate) are interpreted,
-    and Catalyst's project-collapse substitutes the quantize expression
-    into every consumer (self-dot + n_planes bucket dots + both join
-    sides) — measured ~3× end-to-end on the unpersisted plan. The
-    persisted set is one row per vector (columnar, LRU-evicted), so this
-    holds at corpus scale.
-    """
-    q = _persisted(
-        with_quantized(df, vec_col).select(
-            F.col(id_col).alias("id"),
-            F.col("_q"),
-            F.col("_n"),
-            lsh_bucket(F.col("_q"), n_planes).alias("bucket"),
-        )
-    )
-    a = q.select(
-        F.col("id").alias("a"), F.col("_q").alias("qa"), F.col("_n").alias("na"), "bucket"
-    )
-    b = q.select(
-        F.col("id").alias("b"), F.col("_q").alias("qb"), F.col("_n").alias("nb"), "bucket"
-    )
-    return (
-        a.join(b, on="bucket")
-        .where(F.col("a") < F.col("b"))
-        .withColumn("cos", cosine_q(dot_q(F.col("qa"), F.col("qb")), F.col("na"), F.col("nb")))
-        .where(F.col("cos") >= F.lit(threshold))
-        .select("a", "b", "cos")
-    )
-
-
 def _make_topn_cells(centroids: list[list[int]], nprobe: int):
     """Factory (by-value pickling, see ``_make_dot_q_batch``): per-batch
     top-``nprobe`` nearest trained cells for each quantized vector — one
@@ -776,43 +728,4 @@ def topk_lsh(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "nbr", "rank", "cos")
-    )
-
-
-def cosine_pairs_auto(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.4,
-    nprobe: int = 2,
-    iters: int = 2,
-    max_broadcast_k: int = 65536,
-) -> DataFrame:
-    """Near-dup pairs with the quantizer flavor chosen by corpus size —
-    the single entry point a 100 TB deployment calls.
-
-    While the corpus-scaled flat rule k = max(8, n/64) still broadcasts
-    (``max_broadcast_k`` default 65 536 → a 64-dim int64 centroid matrix
-    of ~32 MB, Spark's practical task-closure comfort zone), train the
-    flat adaptive-k quantizer — one level, cheapest assignment. Past
-    that horizon (n ≳ 4·10⁶ at the default stride; tens of GB of flat
-    centroids at 10⁹ vectors), switch to the two-level hierarchical
-    quantizer: same constant ~64-vector cell width, but each training
-    level only ever broadcasts √(n/64) centroids. The one extra job is
-    a count on the quantized projection both trainers persist anyway.
-    Both branches are individually oracle-verified
-    (``dedup_embedding_cosine`` / ``dedup_embedding_cosine_hier``)."""
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.clustering import (
-        adaptive_k_flat,
-        kmeans_fit,
-    )
-
-    n = df.count()
-    if adaptive_k_flat(n) <= max_broadcast_k:
-        cents = kmeans_fit(df, vec_col, id_col, iters=iters, adaptive_k=adaptive_k_flat)
-        return cosine_pairs_ivf(
-            df, vec_col, id_col, threshold, nprobe=nprobe, centroids=cents
-        )
-    return cosine_pairs_ivf_hier(
-        df, vec_col, id_col, threshold, iters=iters, nprobe=nprobe
     )

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.aggregates import decimal_sum
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.windows import modal_value_per_group
+from manage_versions_of_data_in_data_lake_using_lakefs_spark.runtime import track_path
 from manage_versions_of_data_in_data_lake_using_lakefs_spark.sources.io import (
     load_table,
     load_tables,
@@ -43,9 +44,10 @@ from manage_versions_of_data_in_data_lake_using_lakefs_spark.sources.io import (
 
 
 def _tmp(prefix: str) -> str:
+    """A fresh sink path, deleted when the next registry query is built."""
     path = tempfile.mkdtemp(prefix=f"lakegraft_{prefix}_")
     shutil.rmtree(path, ignore_errors=True)
-    return path
+    return track_path(path)
 
 
 def _yyyymmdd(col: F.Column) -> F.Column:

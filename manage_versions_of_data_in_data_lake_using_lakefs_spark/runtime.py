@@ -9,11 +9,13 @@ driver heap (the driver brings its own session; nothing guarantees ours'
 generous defaults). Observed failure mode: broadcast/stage materialization
 errors on late-in-session similarity queries under a 1 GiB default heap.
 
-``track()`` registers every persisted DataFrame; ``release_tracked()``
-unpersists all of them and is invoked by the query-registry wrapper right
-before building the NEXT query — by which point the previous query's
-result has been fully collected, so dropping its caches is free (and at
-worst forces a recompute, never a wrong answer).
+``track()`` registers every persisted DataFrame and ``track_path()``
+every scratch directory a query's result reads from; ``release_tracked()``
+unpersists the former, deletes the latter, and is invoked by the
+query-registry wrapper right before building the NEXT query — by which
+point the previous query's result has been fully collected, so dropping
+its caches is free (and at worst forces a recompute, never a wrong
+answer) and its scratch files are no longer read.
 
 **Sequencing contract (strict build→collect→build)**: the registry
 wrapper assumes each query is collected before the next one is *built*
@@ -21,12 +23,16 @@ wrapper assumes each query is collected before the next one is *built*
 run. A caller that builds several registry DataFrames first and collects
 later stays CORRECT (plans are deterministic; an unpersisted cache just
 recomputes) but silently forfeits the persists on all but the
-newest-built query. Library users driving operators directly are bounded
-by ``_MAX_LIVE`` FIFO eviction instead and should call
-``release_tracked()`` themselves between logical queries.
+newest-built query — except a result that reads a tracked scratch
+directory, which the next build deletes: collect it first. Library
+users driving operators directly are bounded by ``_MAX_LIVE`` FIFO
+eviction instead and should call ``release_tracked()`` themselves
+between logical queries.
 """
 
 from __future__ import annotations
+
+import shutil
 
 from pyspark.sql import DataFrame
 
@@ -79,6 +85,7 @@ def local_df(spark, rows, schema) -> DataFrame:
     return spark.createDataFrame(data, schema)
 
 _LIVE: list[DataFrame] = []
+_PATHS: list[str] = []
 
 #: direct operator users (library/notebook callers that never go through
 #: the query registry) would otherwise grow _LIVE without bound; no sane
@@ -99,8 +106,17 @@ def track(df: DataFrame) -> DataFrame:
     return df
 
 
+def track_path(path: str) -> str:
+    """Register a scratch directory for deletion at the next release."""
+    _PATHS.append(path)
+    return path
+
+
 def release_tracked() -> None:
-    """Unpersist every tracked DataFrame (non-blocking, best-effort)."""
+    """Unpersist every tracked DataFrame (non-blocking, best-effort) and
+    delete every tracked scratch directory."""
+    while _PATHS:
+        shutil.rmtree(_PATHS.pop(), ignore_errors=True)
     while _LIVE:
         df = _LIVE.pop()
         try:

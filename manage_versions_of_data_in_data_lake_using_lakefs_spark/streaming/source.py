@@ -9,11 +9,13 @@ here it is a native Spark 4 Python DataSource).
 Design:
 
 - **Offsets are commit versions.** ``latestOffset`` reads the branch
-  head's global version; a microbatch covers versions ``(start, end]``.
-  Offsets live in the query checkpoint, so a restarted query resumes at
-  the exact commit it left off — combined with the deterministic
-  per-version file lists this gives exactly-once delivery into any of
-  the repo's exactly-once sinks.
+  head's global version; a microbatch covers the versions ``(start,
+  end]`` on the branch's first-parent line. Offsets live in the query
+  checkpoint, so a restarted query resumes at the exact commit it left
+  off — combined with the deterministic per-version file split this
+  gives exactly-once delivery into any of the repo's exactly-once sinks.
+  The split is ``versioning/changes.py``'s, the one ``TABLE_CHANGES``,
+  ``TABLE_CHANGES_FEED`` and ``repo.diff`` read: both feeds use it.
 - **A microbatch's rows are the files ADDED in its versions** (the
   append-only reading of a table history). A version that *removes*
   files (overwrite/DELETE/compaction) is not representable as an append
@@ -112,16 +114,14 @@ def make_lake_stream_source():
         )
 
     def _open_repo(opts):
-        import importlib
         import sys as _sys
 
         pkg_root = opts.get("package_root") or "."
         if pkg_root not in _sys.path:
             _sys.path.insert(0, pkg_root)
-        mod = importlib.import_module(
-            "manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo"
-        )
-        return mod.LakeRepo(opts["root"])
+        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo import LakeRepo
+
+        return LakeRepo(opts["root"])
 
     def _alias_chains(smap):
         """Replay ALTER steps into per-file resolution structures:
@@ -192,51 +192,21 @@ def make_lake_stream_source():
             if "=" in part
         )
 
-    def _expand_entries(root, entries, missing=None):
-        """Commit entries → ``(relative file path, partition values)``
-        pairs. Entries may be file-group dirs, individual part-files
-        (pruned rewrites), or Hive ``k=v`` partition trees (both as
-        subdirs of a group and path-encoded in pruned-rewrite entries).
-
-        An entry whose backing dir/file is GONE (vacuumed history) is a
-        hard error — silently skipping it would drain an incomplete
-        stream with no signal. Pass ``missing`` (a list) to collect such
-        entries instead of raising (used for the diff's parent side,
-        where the caller decides)."""
-        out = []
-
-        def walk(rel):
-            full = os.path.join(root, rel)
-            for fn in sorted(os.listdir(full)):
-                sub = os.path.join(rel, fn)
-                if os.path.isdir(os.path.join(root, sub)):
-                    if "=" in fn:
-                        walk(sub)  # Hive partition subtree
-                    else:
-                        raise NotImplementedError(
-                            f"lake stream source: unrecognized nested "
-                            f"layout under {rel} ({fn}); read the table "
-                            f"in batch"
-                        )
-                elif fn.endswith(".parquet"):
-                    out.append((sub, _split_partvals(sub)))
-
-        for e in entries:
-            full = os.path.join(root, e)
-            if os.path.isdir(full):
-                walk(e)
-            elif e.endswith(".parquet") and os.path.exists(full):
-                out.append((e, _split_partvals(e)))
-            elif missing is not None:
-                missing.append(e)
-            else:
-                raise FileNotFoundError(
-                    f"lake stream source: commit entry {e} has no backing "
-                    f"files on disk — the history this stream still needs "
-                    f"was likely vacuumed; keep retention >= stream lag, "
-                    f"or restart the stream from a live version"
+    def _check_layout(files, entries):
+        """Below its commit entry a file may nest only in Hive ``k=v``
+        subdirs (both as subdirs of a group and path-encoded in
+        pruned-rewrite entries); any other nesting has no partition
+        values to decode and raises."""
+        tops = set(entries)
+        for rel in set(files) - tops:
+            d = os.path.dirname(rel)
+            while d not in tops and "=" in os.path.basename(d):
+                d = os.path.dirname(d)
+            if d not in tops:
+                raise NotImplementedError(
+                    f"lake stream source: unrecognized nested layout "
+                    f"({d}); read the table in batch"
                 )
-        return out
 
     def _partition_keys(files):
         """The ordered partition-column names shared by every file, or
@@ -244,8 +214,8 @@ def make_lake_stream_source():
         partitioned, some not, or differing key orders) raise — one
         snapshot must path-encode one consistent scheme."""
         keys = None
-        for _rel, pv in files:
-            ks = tuple(k for k, _ in pv)
+        for rel in files:
+            ks = tuple(k for k, _ in _split_partvals(rel))
             if keys is None:
                 keys = ks
             elif ks != keys:
@@ -340,33 +310,17 @@ def make_lake_stream_source():
             return datetime.date.fromisoformat(v)
         return v
 
-    def _commit_chain(repo, branch, start_v, end_v):
-        """Commits on the branch's FIRST-PARENT line with version in
-        (start_v, end_v], oldest first. Walking the chain (not raw
-        version integers) is what makes multi-branch repos safe: the
-        global version counter is shared across branches (and aborted
-        commits burn numbers), so versions absent from this line simply
-        never appear — they are other branches' history, not deletions."""
-        chain = []
-        c = repo.head(branch)
-        while c is not None and c.version > start_v:
-            if c.version <= end_v:
-                chain.append(c)
-            c = repo.get_commit(c.parents[0]) if c.parents else None
-        chain.reverse()
-        return chain
-
-    def _dv_positions(root, dv_entries, cap=2_000_000):
+    def _dv_positions(changes, root, dv_entries, cap=2_000_000):
         """file_rel → frozenset of deleted row positions, read from the
         DV companion table's parquet (driver-side pyarrow — DV commits
         are metadata-sized by design; the loud cap catches a vector that
         outgrew the driver, where the remedy is OPTIMIZE to materialize
-        the deletions)."""
+        the deletions). Executors get plain sets."""
         import pyarrow.parquet as pq
 
         out: dict = {}
         n = 0
-        for rel, _pv in _expand_entries(root, dv_entries):
+        for rel in changes._files_of(root, dv_entries):
             t = pq.ParquetFile(os.path.join(root, rel)).read(
                 columns=["file", "pos"]
             )
@@ -413,27 +367,35 @@ def make_lake_stream_source():
             self.include_pos = include_pos
             self.exclude_pos = exclude_pos
 
-    def _append_new_files(repo, table, dv_prefix, c, parent):
-        """The APPEND path's per-commit contribution: sorted new
-        (rel, pv) tuples, or None when the commit contributes nothing
-        (table untouched, or a data_change=false rearrangement). The
-        SAME construction partitions() uses inline — the rate limiter's
-        per-version counts and partitions' slicing must agree exactly,
-        or a capped stream would drop or duplicate files."""
-        prev_entries = parent.tables.get(table, []) if parent else []
-        cur_entries = c.tables.get(table, [])
-        dvt = dv_prefix + table
-        dv_changed = (
-            parent.tables.get(dvt, []) if parent else []
-        ) != c.tables.get(dvt, [])
-        if cur_entries == prev_entries and not dv_changed:
-            return None
+    def _commit_split(changes, root, table, parent, c, missing):
+        """``table``'s files in commit ``c`` against its first parent,
+        split by ``changes.split_files``: ``(removed, added, shared,
+        dv_prev, dv_cur)`` with the two sides' deletion-vector entries.
+        The rate limiter counts and partitions() slices this one split,
+        so a capped stream can neither drop nor duplicate files. A
+        commit that did not touch the table splits with no listing.
+        Unlike ``changes.file_delta`` files stay shared across an ALTER:
+        the stream reads every era through the head's column map.
+
+        None for a ``data_change=false`` commit: the writer asserts a
+        pure REARRANGEMENT of its parent's rows (OPTIMIZE / compaction)
+        — Delta's dataChange contract: append streams skip it instead
+        of failing on its file removals, and the CDC feed emits nothing
+        (the multiset is unchanged). Later commits diff against the
+        compacted snapshot, so only genuinely new rows flow."""
         if c.meta.get("data_change") is False:
             return None
-        miss: list = []
-        prev = set(_expand_entries(repo.root, prev_entries, miss))
-        cur = set(_expand_entries(repo.root, cur_entries))
-        return sorted(cur - prev)
+        prev, cur = changes._entries(parent, table), changes._entries(c, table)
+        removed, added, shared = changes.split_files(root, prev, cur, missing)
+        _check_layout(removed + added, prev + cur)
+        dvt = changes.DV_PREFIX + table
+        return (
+            removed,
+            added,
+            shared,
+            changes._entries(parent, dvt),
+            changes._entries(c, dvt),
+        )
 
     class _LakeStreamReader(DataSourceStreamReader):
         def __init__(self, options, schema):
@@ -515,80 +477,59 @@ def make_lake_stream_source():
                 # initialOffset, so seed the position ourselves (a
                 # restarted stream never lands here — its partitions()
                 # WAL replay set _pos first)
-                self._pos = {
-                    "version": int(self.opts.get("starting_version", -1))
-                }
-            import importlib
+                self.initialOffset()
+            from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning import changes
 
-            dv_prefix = importlib.import_module(
-                type(repo).__module__
-            ).DV_PREFIX
             branch, table = self.opts["branch"], self.opts["table"]
             sv = self._pos["version"]
             sf = self._pos.get("fidx")
             admitted = 0
             used_bytes = 0
+
+            def spent():
+                return (self.cap and admitted >= self.cap) or (
+                    self.bcap and used_bytes >= self.bcap
+                )
+
             # a partially consumed start version is walked INCLUSIVELY
             end: dict = dict(self._pos)
-            for c in _commit_chain(
-                repo, branch, sv - 1 if sf is not None else sv, head_v
+            for parent, c in changes.first_parent_range(
+                repo, branch, sv if sf is not None else sv + 1, head_v
             ):
-                if sf is not None and c.version < sv:
-                    continue
-                files = _append_new_files(repo, table, dv_prefix, c, None
-                    if not c.parents else repo.get_commit(c.parents[0]))
-                if files is None:
-                    end = {"version": c.version}
-                    continue
+                split = _commit_split(changes, repo.root, table, parent, c, [])
+                files = split[1] if split else []
                 skip = sf if (sf is not None and c.version == sv) else 0
-                stopped = False
                 for idx in range(skip, len(files)):
                     # the file cap is HARD; the byte cap is SOFT (Delta's
                     # maxBytesPerTrigger admission: files are taken while
                     # the budget is not yet MET, so the last admitted
                     # file may overshoot it)
-                    if admitted and (
-                        (self.cap and admitted >= self.cap)
-                        or (self.bcap and used_bytes >= self.bcap)
-                    ):
+                    if admitted and spent():
                         # idx files of this version consumed so far; 0
                         # means none — the previous end stands
-                        if idx:
-                            end = {"version": c.version, "fidx": idx}
-                        stopped = True
-                        break
+                        return {"version": c.version, "fidx": idx} if idx else end
                     admitted += 1
                     if self.bcap:
-                        rel = files[idx][0]
+                        rel = files[idx]
                         vsizes = self._sizes.setdefault(c.version, {})
-                        size = vsizes.get(rel)
-                        if size is None:
-                            size = os.path.getsize(
-                                os.path.join(repo.root, rel)
-                            )
-                            vsizes[rel] = size
-                        used_bytes += size
-                if stopped:
-                    break
+                        if rel not in vsizes:
+                            vsizes[rel] = os.path.getsize(os.path.join(repo.root, rel))
+                        used_bytes += vsizes[rel]
                 end = {"version": c.version}
-                if c.version < head_v and (
-                    (self.cap and admitted >= self.cap)
-                    or (self.bcap and used_bytes >= self.bcap)
-                ):
+                if c.version < head_v and spent():
                     break
             return end
 
-        def _plan_file(self, filepv, chains, consumed, declared, addable):
-            """The replay plan for one file: resolve each stream field
-            through its alias chain (or to its path-encoded partition
-            constant) and pin the set of legal extra physical names.
+        def _partition(self, root, rel, chains, consumed, addable, *tag, **pos):
+            """One file's partition with its replay plan: each stream
+            field resolves through its alias chain (or to its path-encoded
+            partition constant), and the legal extra names are pinned.
             Each spec entry carries whether a missing physical column is
             LEGITIMATE (only later-ADDed columns may be absent — pre-ADD
             era files); anything else missing fails loudly at read
             instead of silently streaming nulls (a flat file appended
             into a partitioned table, or a foreign file)."""
-            rel, pv = filepv
-            pdict = dict(pv)
+            pdict = dict(_split_partvals(rel))
             stray = sorted(k for k in pdict if k not in self.fields)
             if stray:
                 raise ValueError(
@@ -608,11 +549,11 @@ def make_lake_stream_source():
             allowed = frozenset(
                 consumed | {p for a in spec if a[1] for p in a[1]}
             )
-            return tuple(spec), allowed
+            return _FilePartition(
+                os.path.join(root, rel), tuple(spec), allowed, *tag, **pos
+            )
 
         def partitions(self, start: dict, end: dict):
-            import importlib
-
             self._pos = dict(end)  # feeds the next trigger's rate limit
             s_fidx = start.get("fidx")
             e_fidx = end.get("fidx")
@@ -624,11 +565,8 @@ def make_lake_stream_source():
                     "with a fresh checkpoint"
                 )
             repo = _open_repo(self.opts)
-            # single source of truth for the companion-table prefix
-            # (driver-side: _open_repo just bootstrapped the package)
-            dv_prefix = importlib.import_module(
-                type(repo).__module__
-            ).DV_PREFIX
+            from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning import changes
+
             branch, table = self.opts["branch"], self.opts["table"]
             ignore = str(self.opts.get("ignorechanges", "")).lower() == "true"
             # the column mapping at the CURRENT branch head, applied
@@ -636,7 +574,7 @@ def make_lake_stream_source():
             # read-at-head semantics (and Delta's field-id mapping). A
             # commit's own older map would strand pre-ALTER files: the
             # stream schema speaks post-ALTER names.
-            chains, consumed, declared, addable = _alias_chains(
+            chains, consumed, _, addable = _alias_chains(
                 repo.table_schema_map(table, ref=branch, include_staged=False)
             )
             drift = [L for L in self.fields if L in consumed]
@@ -649,64 +587,31 @@ def make_lake_stream_source():
                     f"the new schema"
                 )
             parts: list[_FilePartition] = []
-            # one walk of the first-parent chain; each commit diffs
-            # against its OWN parent's entries (O(chain), not
-            # O(chain²) re-resolves from head)
-            for c in _commit_chain(
-                repo,
-                branch,
-                # a partially consumed start version re-enters the walk
-                start["version"] - 1 if s_fidx is not None else start["version"],
-                end["version"],
-            ):
-                if s_fidx is not None and c.version < start["version"]:
-                    continue
-                parent = (
-                    repo.get_commit(c.parents[0]) if c.parents else None
+
+            def plan(rel, *tag, **pos):
+                parts.append(
+                    self._partition(
+                        repo.root, rel, chains, consumed, addable, *tag, **pos
+                    )
                 )
-                prev_entries = parent.tables.get(table, []) if parent else []
-                cur_entries = c.tables.get(table, [])
+
+            sv = start["version"]
+            # a partially consumed start version re-enters the walk
+            for parent, c in changes.first_parent_range(
+                repo, branch, sv if s_fidx is not None else sv + 1, end["version"]
+            ):
+                # an append stream only needs the NAMES of the parent's
+                # removed entries, so it tolerates vacuumed ones; the CDC
+                # feed reads their rows as deletes, so they raise
+                miss_prev: list[str] | None = None if self.cdc else []
+                split = _commit_split(changes, repo.root, table, parent, c, miss_prev)
+                if split is None:
+                    continue
+                removed, added, shared, dv_prev, dv_cur = split
                 # deletion-vector companion: a commit may delete rows by
                 # ONLY touching the vector
-                dvt = dv_prefix + table
-                dv_prev_entries = parent.tables.get(dvt, []) if parent else []
-                dv_cur_entries = c.tables.get(dvt, [])
-                dv_changed = dv_cur_entries != dv_prev_entries
-                if cur_entries == prev_entries and not dv_changed:
-                    continue  # commit did not touch this table
-                if c.meta.get("data_change") is False:
-                    # the writer asserts this commit is a pure
-                    # REARRANGEMENT of its parent's rows (OPTIMIZE /
-                    # compaction) — Delta's dataChange contract: append
-                    # streams skip it instead of failing on its file
-                    # removals, and the CDC feed emits nothing (the
-                    # multiset is unchanged). Later commits diff against
-                    # the compacted snapshot, so only genuinely new rows
-                    # flow.
-                    continue
-                # the parent side tolerates vacuumed entries at the DIFF
-                # level (we may only need their names); the current side
-                # is strict — its rows are about to be read
-                miss_prev: list[str] = []
-                prev = set(
-                    _expand_entries(repo.root, prev_entries, miss_prev)
-                )
-                cur = set(_expand_entries(repo.root, cur_entries))
-                removed = prev - cur
+                dv_changed = dv_cur != dv_prev
                 if self.cdc:
-                    if miss_prev:
-                        shown = ", ".join(miss_prev[:3]) + (
-                            ", ..." if len(miss_prev) > 3 else ""
-                        )
-                        raise FileNotFoundError(
-                            f"lake stream source (mode=cdc): version "
-                            f"{c.version} removed {len(miss_prev)} "
-                            f"entr{'y' if len(miss_prev) == 1 else 'ies'} "
-                            f"whose files were vacuumed ({shown}); their "
-                            f"delete rows are unrecoverable — keep "
-                            f"retention >= stream lag or restart past "
-                            f"this version"
-                        )
                     # CDC mode: removals become 'delete' rows (removed
                     # files persist on disk until vacuum), additions
                     # 'insert' rows — FILE-granularity CDF: a rewrite
@@ -720,73 +625,41 @@ def make_lake_stream_source():
                     # exclude the current DV, and a DV-only commit emits
                     # delete rows at exactly the newly vectored positions.
                     dv_prev_pos = (
-                        _dv_positions(repo.root, dv_prev_entries)
-                        if dv_prev_entries and (removed or dv_changed)
+                        _dv_positions(changes, repo.root, dv_prev)
+                        if removed or dv_changed
                         else {}
                     )
-                    if dv_changed:
-                        # a dropped vector (dv_cur empty) must yield {}
-                        # here, NOT the parent's positions — otherwise
-                        # the un-delete guard below can't see surviving
-                        # files whose deletions were silently revoked
-                        dv_cur_pos = (
-                            _dv_positions(repo.root, dv_cur_entries)
-                            if dv_cur_entries
-                            else {}
-                        )
-                    else:
-                        dv_cur_pos = dv_prev_pos
-                    for tag, group, dvpos in (
-                        ("delete", sorted(removed), dv_prev_pos),
-                        ("insert", sorted(cur - prev), dv_cur_pos),
-                    ):
-                        for fpv in group:
-                            spec, allowed = self._plan_file(
-                                fpv, chains, consumed, declared, addable
+                    # a dropped vector (dv_cur empty) must yield {} here,
+                    # NOT the parent's positions — otherwise the un-delete
+                    # guard below can't see surviving files whose
+                    # deletions were silently revoked
+                    dv_cur_pos = (
+                        _dv_positions(changes, repo.root, dv_cur)
+                        if dv_changed
+                        else dv_prev_pos
+                    )
+                    for rel in removed:
+                        plan(rel, "delete", c.version, exclude_pos=dv_prev_pos.get(rel))
+                    for rel in added:
+                        plan(rel, "insert", c.version, exclude_pos=dv_cur_pos.get(rel))
+                    if not dv_changed:
+                        continue
+                    # only a vector change reads shared files: list them
+                    kept = sorted(changes._files_of(repo.root, shared))
+                    _check_layout(kept, shared)
+                    for rel in kept:
+                        was = dv_prev_pos.get(rel, frozenset())
+                        now = dv_cur_pos.get(rel, frozenset())
+                        if was - now:
+                            raise ValueError(
+                                f"lake stream source (mode=cdc): version "
+                                f"{c.version} REMOVED deletion-vector "
+                                f"positions for surviving file {rel} "
+                                f"(un-delete) — not representable as a "
+                                f"change feed; restart past this version"
                             )
-                            parts.append(
-                                _FilePartition(
-                                    os.path.join(repo.root, fpv[0]),
-                                    spec,
-                                    allowed,
-                                    tag,
-                                    c.version,
-                                    exclude_pos=dvpos.get(fpv[0]),
-                                )
-                            )
-                    if dv_changed:
-                        for rel_pv in sorted(prev & cur):
-                            rel = rel_pv[0]
-                            newly = frozenset(
-                                dv_cur_pos.get(rel, frozenset())
-                                - dv_prev_pos.get(rel, frozenset())
-                            )
-                            undeleted = dv_prev_pos.get(
-                                rel, frozenset()
-                            ) - dv_cur_pos.get(rel, frozenset())
-                            if undeleted:
-                                raise ValueError(
-                                    f"lake stream source (mode=cdc): version "
-                                    f"{c.version} REMOVED deletion-vector "
-                                    f"positions for surviving file {rel} "
-                                    f"(un-delete) — not representable as a "
-                                    f"change feed; restart past this version"
-                                )
-                            if not newly:
-                                continue
-                            spec, allowed = self._plan_file(
-                                rel_pv, chains, consumed, declared, addable
-                            )
-                            parts.append(
-                                _FilePartition(
-                                    os.path.join(repo.root, rel),
-                                    spec,
-                                    allowed,
-                                    "delete",
-                                    c.version,
-                                    include_pos=newly,
-                                )
-                            )
+                        if now - was:
+                            plan(rel, "delete", c.version, include_pos=now - was)
                     continue
                 if dv_changed and not ignore:
                     raise ValueError(
@@ -812,44 +685,23 @@ def make_lake_stream_source():
                         f"represent it — set ignorechanges=true to skip "
                         f"removals and stream additions only{vac}"
                     )
-                new_files = sorted(cur - prev)
                 # rate-limited offsets slice a version's new-file list
-                # (same sorted construction the limiter counted)
-                lo = (
-                    s_fidx
-                    if s_fidx is not None and c.version == start["version"]
-                    else 0
-                )
-                hi = (
-                    e_fidx - lo
-                    if e_fidx is not None and c.version == end["version"]
-                    else None
-                )
-                if lo:
-                    new_files = new_files[lo:]
-                if hi is not None:
-                    new_files = new_files[:hi]
-                for fpv in new_files:
-                    spec, allowed = self._plan_file(fpv, chains, consumed, declared, addable)
-                    parts.append(
-                        _FilePartition(
-                            os.path.join(repo.root, fpv[0]), spec, allowed
-                        )
-                    )
+                # at the indices the limiter counted
+                lo = s_fidx if s_fidx is not None and c.version == sv else 0
+                hi = e_fidx if c.version == end["version"] else None
+                for rel in added[lo:hi]:
+                    plan(rel)
             return parts
 
         def commit(self, end: dict) -> None:
             self._pos = dict(end)
-            if self._sizes:
-                # versions at or below the committed position can never
-                # be re-admitted (a partially consumed version — fidx
-                # set — still has pending files, keep its entries)
-                v = end["version"]
-                fully = end.get("fidx") is None
-                for ver in [
-                    k for k in self._sizes if k < v or (fully and k == v)
-                ]:
-                    del self._sizes[ver]
+            # versions at or below the committed position can never be
+            # re-admitted (a partially consumed version — fidx set —
+            # still has pending files, keep its entries)
+            v, partial = end["version"], end.get("fidx") is not None
+            self._sizes = {
+                k: d for k, d in self._sizes.items() if k > v or (partial and k == v)
+            }
 
         # -- executor-side: pyarrow + stdlib ONLY ----------------------
         def read(self, partition):
@@ -931,21 +783,23 @@ def make_lake_stream_source():
             import pyarrow.parquet as pq
 
             repo = _open_repo(self.options)
+            from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning import changes
+
             table = self.options["table"]
             cdc = str(self.options.get("mode", "")).lower() == "cdc"
             smap = repo.table_schema_map(
                 table, ref=self.options["branch"], include_staged=False
             )
             c = repo.head(self.options["branch"])
-            files: list[tuple] = []
+            files: list[str] = []
             while c is not None:
                 # tolerate vacuumed entries here (collector) — schema
                 # inference just needs ONE live file; if the whole walk
                 # comes up empty the actionable remedy is an explicit
                 # .schema(...), not a vacuum complaint
-                files = _expand_entries(
-                    repo.root, c.tables.get(table, []), []
-                )
+                entries = changes._entries(c, table)
+                files = changes._files_of(repo.root, entries, [])
+                _check_layout(files, entries)
                 if files or not cdc:
                     # append mode pins the HEAD snapshot's schema; CDC
                     # walks back to the last version that had files — a
@@ -961,8 +815,8 @@ def make_lake_stream_source():
                 )
             part_keys = _partition_keys(files)
             part_raws: dict[str, list[str]] = {k: [] for k in part_keys}
-            for _rel, pv in files:
-                for k, v in pv:
+            for rel in files:
+                for k, v in _split_partvals(rel):
                     part_raws[k].append(v)
             if smap:
                 touched = {
@@ -1003,7 +857,7 @@ def make_lake_stream_source():
                 if smap.get("base"):
                     needed = set(_replay_order(smap["base"])) | set(declared)
                 seen_phys: dict[str, object] = {}
-                for rel, _pv in reversed(files):
+                for rel in reversed(files):
                     sch = pq.ParquetFile(
                         os.path.join(repo.root, rel)
                     ).schema_arrow
@@ -1042,10 +896,10 @@ def make_lake_stream_source():
                 # oldest file's columns
                 root = repo.root
                 sch = pq.ParquetFile(
-                    os.path.join(root, files[0][0])
+                    os.path.join(root, files[0])
                 ).schema_arrow
                 last = pq.ParquetFile(
-                    os.path.join(root, files[-1][0])
+                    os.path.join(root, files[-1])
                 ).schema_arrow
                 if [f.name for f in sch] != [f.name for f in last]:
                     raise NotImplementedError(
@@ -1140,9 +994,9 @@ def _progress_end_version(progress) -> int | None:
     """Committed end-offset version from a StreamingQuery progress dict.
     The Python DataSource surfaces the offset dict as its *repr* string
     (``"{'version': 1}"`` — single quotes, not JSON), so parse with
-    ``ast.literal_eval`` and fall back to JSON for safety."""
+    ``ast.literal_eval`` (which also reads the JSON spelling of the
+    int-only offsets this source emits)."""
     import ast
-    import json
 
     if not progress:
         return None
@@ -1151,12 +1005,10 @@ def _progress_end_version(progress) -> int | None:
         return None
     eo = sources[0].get("endOffset")
     if isinstance(eo, str):
-        for parse in (ast.literal_eval, json.loads):
-            try:
-                eo = parse(eo)
-                break
-            except (ValueError, SyntaxError):
-                continue
+        try:
+            eo = ast.literal_eval(eo)
+        except (ValueError, SyntaxError):
+            return None
     if isinstance(eo, dict) and "version" in eo:
         v = int(eo["version"])
         # a rate-limited (maxFilesPerTrigger) offset mid-version carries
@@ -1192,13 +1044,11 @@ def drain_stream_to_head(
     after ``timeout_s`` (slow trigger intervals: raise the timeout, not
     the poll rate).
     """
-    import importlib
     import time
 
-    repo_mod = importlib.import_module(
-        "manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo"
-    )
-    target = repo_mod.LakeRepo(repo_root).head(branch).version
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo import LakeRepo
+
+    target = LakeRepo(repo_root).head(branch).version
     deadline = time.monotonic() + timeout_s
     while True:
         exc = query.exception()

@@ -1,11 +1,14 @@
 """Change reads between commits: the row-minimal diff behind
-``TABLE_CHANGES`` and ``LakeRepo.diff``, and the file-granular batch
-change-data feed ``table_changes`` (``TABLE_CHANGES_FEED``).
+``TABLE_CHANGES`` and ``LakeRepo.diff``, the file-granular batch
+change-data feed ``table_changes`` (``TABLE_CHANGES_FEED``), and the
+per-commit file split of the lake stream source (streaming/source.py).
 
 Data files are immutable, so two commits that list the same file under
-the same deletion vector share that file's rows. Every read here starts
-from ``file_delta``, one split of a table's files between two commits,
-and reads only what differs:
+the same deletion vector share that file's rows. ``split_files`` is the
+one split of a table's files between two commits. Every read here
+starts from it through ``file_delta``; the stream source calls it
+directly, since it reads every era through the head's column map. Both
+read only what differs:
 
 - files only the older commit lists, minus its vector's positions;
 - files only the newer commit lists, minus its vector's positions;
@@ -24,7 +27,8 @@ only revokes) it is a plain scan with no shuffle. Otherwise one signed
 unchanged, and each surviving row expands by its net count.
 
 ``table_changes`` is the batch half of Delta's change-data feed (the
-streaming half is streaming/source.py, mode=cdc): every change to ``t``
+streaming half is streaming/source.py, mode=cdc, over the same split
+and first-parent walk): every change to ``t``
 between the version an incremental job last saw and now, as one
 DataFrame, no checkpoint machinery. Semantics match the streaming feed
 (file-granularity CDF, like Delta CDF without change files —
@@ -68,11 +72,12 @@ SIGN = "__lg_sign"
 _POS = ["__lg_fp", "__lg_ri"]
 
 
-def _files_of(root: str, entries: list[str]) -> list[str]:
+def _files_of(root: str, entries: list[str], missing: list | None = None) -> list[str]:
     """Commit entries → relative parquet file paths. Entries may be
     file-group dirs, individual part-files (pruned rewrites), or Hive
     partition trees. A vanished entry (vacuumed history) is a hard
-    error: silently skipping it would emit an incomplete feed."""
+    error, since silently skipping it would read an incomplete change,
+    unless ``missing`` (a list) collects it for the caller to judge."""
     out: list[str] = []
 
     def walk(rel: str) -> None:
@@ -90,11 +95,13 @@ def _files_of(root: str, entries: list[str]) -> list[str]:
             walk(e)
         elif os.path.exists(full):
             out.append(e)
+        elif missing is not None:
+            missing.append(e)
         else:
             raise FileNotFoundError(
-                f"table_changes: commit entry {e} was vacuumed; its change "
-                f"rows are unrecoverable — keep retention >= the range you "
-                f"audit, or start past the vacuumed version"
+                f"commit entry {e} was vacuumed; the rows it held are "
+                f"unrecoverable — keep retention >= the history you read, "
+                f"or start past the vacuumed version"
             )
     return out
 
@@ -144,26 +151,40 @@ class FileDelta:
         return not set(self.dv_a) <= set(self.dv_b)
 
 
+def split_files(
+    root: str, older: list[str], newer: list[str], missing: list | None = None
+) -> tuple[list[str], list[str], list[str]]:
+    """Split the files two entry lists reference into ``(removed, added,
+    shared)``, each sorted. Entries both list are shared with no
+    directory listing; the rest expand to parquet files, so the part
+    files a pruned rewrite carried over are shared too. ``missing``
+    collects vacuumed ``older`` entries instead of raising; a vacuumed
+    ``newer`` entry raises."""
+    common = set(older) & set(newer)
+    fa = set(_files_of(root, [e for e in older if e not in common], missing))
+    fb = set(_files_of(root, [e for e in newer if e not in common]))
+    both = fa & fb
+    return sorted(fa - both), sorted(fb - both), sorted(common | both)
+
+
 def file_delta(repo, table: str, a: Commit | None, b: Commit | None) -> FileDelta:
     """Split ``table``'s files between commits ``a`` and ``b`` (either
-    may be None or lack the table: it then has no files). Entries both
-    list are shared with no directory listing; the rest expand to
-    parquet files, so the part files a pruned rewrite carried over are
-    shared too. When the schema maps differ nothing is shared: the same
-    bytes read as different columns on the two sides."""
+    may be None or lack the table: it then has no files) with
+    ``split_files``. When the schema maps differ nothing is shared: the
+    same bytes read as different columns on the two sides."""
     ea, eb = _entries(a, table), _entries(b, table)
     smap_a = repo._schema_map_of_commit(a, table) if a else None
     smap_b = repo._schema_map_of_commit(b, table) if b else None
-    same = smap_a == smap_b
-    common = set(ea) & set(eb) if same else set()
-    fa = set(_files_of(repo.root, [e for e in ea if e not in common]))
-    fb = set(_files_of(repo.root, [e for e in eb if e not in common]))
-    both = fa & fb if same else set()
+    if smap_a == smap_b:
+        removed, added, shared = split_files(repo.root, ea, eb)
+    else:
+        removed = sorted(set(_files_of(repo.root, ea)))
+        added, shared = sorted(set(_files_of(repo.root, eb))), []
     dvt = DV_PREFIX + table
     return FileDelta(
-        removed=sorted(fa - both),
-        added=sorted(fb - both),
-        shared=sorted(common | both),
+        removed=removed,
+        added=added,
+        shared=shared,
         dv_a=_entries(a, dvt),
         dv_b=_entries(b, dvt),
         smap_a=smap_a,

@@ -790,27 +790,6 @@ def test_jl_projection_preserves_relative_distances(spark):
             assert not (B[i] == B[j]).all() and not (B[i] == -B[j]).all()
 
 
-def test_cosine_pairs_auto_switches_on_broadcast_horizon(spark):
-    """cosine_pairs_auto picks flat-trained IVF under the broadcastable-k
-    horizon and the hierarchical quantizer past it, and both branches
-    return the same exact-verified pairs on a small separable corpus."""
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import cosine_pairs_auto
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.sources.io import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    flat = {
-        (r.a, r.b) for r in cosine_pairs_auto(emb, threshold=0.9).collect()
-    }
-    # force the hier branch by shrinking the horizon below adaptive k
-    hier = {
-        (r.a, r.b)
-        for r in cosine_pairs_auto(emb, threshold=0.9, max_broadcast_k=1).collect()
-    }
-    # exact verify means no false positives on either path; at 0.9 the
-    # true pair set is tiny and both blockings recover it
-    assert flat == hier
-
-
 def test_pagerank_ppb_properties(spark):
     """On a star graph the hub outranks leaves; total rank mass is
     conserved up to the documented <=1-ppb-per-hop floor loss; results

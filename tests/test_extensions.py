@@ -178,16 +178,6 @@ def test_simhash_pairs_plan_has_no_cross_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_cosine_pairs_lsh_plan_has_no_cross_join(spark):
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import cosine_pairs_lsh
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.sources.io import load_table
-
-    df = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    plan = cosine_pairs_lsh(df, threshold=0.4)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_simhash_banded_equals_bruteforce(spark):
     """Pigeonhole exactness: banded candidates lose no pair within the
     hamming budget — banded output == all-pairs output."""
