@@ -3,10 +3,11 @@
 The production corpus-curation pattern (CCNet, fastText quality filters,
 FineWeb-edu): score every document with a TRAINED classifier instead of
 a hand heuristic. The whole loop lives in the engine — feature
-extraction is a map-only pass, each full-batch gradient-descent
-iteration is ONE distributed aggregation of k partial sums, and scoring
-is another map-only pass — so the same code trains on 500 rows or 100 TB
-(the per-iteration shuffle moves exactly k numbers per partition).
+extraction is a map-only pass, each Newton/IRLS iteration is ONE
+distributed aggregation of exact partial sums (``train_logreg_newton``),
+and scoring is another map-only pass — so the same code trains on 500
+rows or 100 TB (the per-iteration shuffle moves a fixed handful of
+numbers per partition).
 
 Engine-fit rules (the kmeans/PQ playbook, operators/clustering.py):
 
@@ -31,16 +32,10 @@ Engine-fit rules (the kmeans/PQ playbook, operators/clustering.py):
   (DuckDB ``//`` truncates toward zero; Python ``//`` floors — the
   builder emits ``(a - ((a % b) + b) % b) / b`` so negatives agree).
 
-Weight update (all integers): with features x ∈ [0, 1e6] ppm, labels
-y ∈ {0, 1e6} ppm, weights w micro, learning rate η_ppm:
-
-    z_micro   = floor(Σ_j w_j·x_j / 1e6)            (per row)
-    diff      = σ̃_ppm(z_micro) − y_ppm              (per row)
-    S_j       = Σ_rows x_j·diff                     (128-bit exact)
-    w_j      ← clamp(w_j − floor(η_ppm·S_j / (n·1e12)), ±CLAMP_W)
-
-The clamp keeps |Σ w·x| < 2^53 so the per-row floor of the logit stays
-exact under either engine's arithmetic.
+Per-row logit (all integers): with features x ∈ [0, 1e6] ppm and
+weights w micro, z_micro = floor(Σ_j w_j·x_j / 1e6). Weights clamp to
+±CLAMP_W after every update, which keeps |Σ w·x| < 2^53 so the per-row
+floor of the logit stays exact under either engine's arithmetic.
 """
 
 from __future__ import annotations
@@ -169,72 +164,6 @@ def _logit_micro(w: list[int]) -> Column:
     return F.floor(acc / F.lit(PPM)).cast("long")
 
 
-def train_logreg(
-    feats: DataFrame,
-    iters: int = 24,
-    eta_ppm: int = 2 * PPM,
-    tol_micro: int | None = None,
-    return_iters: bool = False,
-) -> list[int] | tuple[list[int], int]:
-    """Full-batch GD over a ``quality_features`` frame → final micro
-    weights. Each iteration is ONE distributed aggregation (k 128-bit
-    sums); the update itself is exact Python big-int on the driver.
-    Deterministic: same data → same weights, any partitioning.
-
-    The row count rides iteration 0's aggregation (one fewer full scan;
-    VERDICT r7 #2), and ``tol_micro`` adds FREEZE-style early stopping:
-    an iteration whose max |Δw| ≤ tol leaves the weights unchanged and
-    ends the loop. Freezing is absorbing — the unchanged weights would
-    recompute the identical below-tol Δ forever — so a SQL replay that
-    runs all ``iters`` iterations with the same freeze CASE
-    (queries/logreg_sql.py) lands on bit-identical weights, keeping the
-    early-stopped trainer oracle-certifiable with a STATIC oracle.
-    ``return_iters=True`` additionally returns how many aggregations ran."""
-    n: int | None = None
-    w = [0] * len(FEATURE_COLS)
-    y_ppm = F.col("label").cast("long") * PPM
-    # iteration-invariant Column trees built once (r14; see
-    # train_logreg_newton for the measurement)
-    lut_arr = sigmoid_lut_array()
-    aggs = [
-        F.sum((F.col(c) * F.col("_d")).cast("decimal(38,0)")).alias(c)
-        for c in FEATURE_COLS
-    ]
-    it = 0
-    for it in range(iters):
-        # σ̃ projected once as a named column (see train_logreg_newton:
-        # a raw Column reference clones the ~70-node LUT tree into every
-        # aggregate expression; the alias evaluates it once per row)
-        proj = feats.select(
-            *FEATURE_COLS,
-            (sigmoid_ppm(_logit_micro(w), lut_arr) - y_ppm).alias("_d"),
-        )
-        it_aggs = aggs + [F.count(F.lit(1)).alias("_n")] if n is None else aggs
-        row = proj.select(*it_aggs).collect()[0]
-        if n is None:
-            n = int(row["_n"])
-            if n == 0:
-                return ([0] * len(FEATURE_COLS), 0) if return_iters else [
-                    0
-                ] * len(FEATURE_COLS)
-        new_w = [
-            max(
-                -CLAMP_W,
-                min(CLAMP_W, wj - (eta_ppm * int(row[j])) // (n * PPM * PPM)),
-            )
-            for j, wj in enumerate(w)
-        ]
-        if tol_micro is not None and max(
-            abs(a - b) for a, b in zip(new_w, w)
-        ) <= tol_micro:
-            it += 1
-            break  # frozen: w unchanged, and would stay unchanged forever
-        w = new_w
-    else:
-        it = iters
-    return (w, it) if return_iters else w
-
-
 NEWTON_RIDGE = 1000  # scaled-Hessian units (entries ≤ ~2.5e5): ~0.4% of
 # the max diagonal — dominates the ≤ ~1-unit flooring perturbation that
 # could otherwise push a semidefinite direction negative, negligible bias
@@ -320,12 +249,13 @@ def train_logreg_newton(
     exact 128-bit sums (5 gradient + 15 upper-triangle Hessian entries,
     ``H_jk = Σ floor(x_j·x_k/PPM)·floor(σ̃(PPM−σ̃)/PPM)``) — and the
     5×5 solve is exact big-int adjugate/Cramer on the driver
-    (``_newton_solve``), so the trainer keeps every fixed-point
-    property of ``train_logreg``: bit-identical at any partitioning and
-    replayable as DuckDB CTEs (queries/logreg_sql.py generates the SAME
-    cofactor expansion via ``cofactor_terms``). ``tol_micro`` freeze
-    semantics are identical (absorbing: unchanged weights recompute the
-    identical below-tol step)."""
+    (``_newton_solve``), so the trainer is fixed-point throughout:
+    bit-identical at any partitioning and replayable as DuckDB CTEs (queries/logreg_sql.py generates the SAME
+    cofactor expansion via ``cofactor_terms``). ``tol_micro`` freezes
+    the weights at the first iteration whose max |Δw| ≤ tol; freezing is
+    absorbing (unchanged weights recompute the identical below-tol
+    step), so a SQL replay of all ``iters`` iterations with the same
+    freeze CASE lands on bit-identical weights."""
     k_ = len(FEATURE_COLS)
     n: int | None = None
     w = [0] * k_
@@ -388,7 +318,7 @@ def train_logreg_newton(
             abs(a - b) for a, b in zip(new_w, w)
         ) <= tol_micro:
             it += 1
-            break  # frozen: absorbing, same argument as train_logreg
+            break  # frozen: absorbing (see the docstring)
         w = new_w
     else:
         it = iters

@@ -1,11 +1,12 @@
 """DuckDB CTE replay of the fixed-point logistic-regression trainer.
 
-The oracle re-runs operators/classifier.py's ENTIRE training loop in
-SQL — every gradient-descent iteration is a 4-CTE block (logit →
-clamp/offset → LUT segment → interpolated σ̃, then the 5 gradient sums
-and the clamped weight update), chained ``iters`` times from w0 = 0 —
-so a hash match proves the distributed trainer bit-exactly, not just
-the final scores (the kmeans_sql.py discipline, applied to GD).
+The oracle re-runs operators/classifier.py's ENTIRE Newton/IRLS training
+loop in SQL — every iteration is a sig block (logit → clamp/offset →
+LUT segment → interpolated σ̃) plus a Newton block (the gradient and
+Hessian sums, the cofactor solve and the clamped weight update),
+chained ``iters`` times from w0 = 0 — so a hash match proves the
+distributed trainer bit-exactly, not just the final scores (the
+kmeans_sql.py discipline).
 
 Integer-exactness notes mirrored from the operator:
 - gradient sums ride DuckDB's automatic SUM(BIGINT) → HUGEINT (exact
@@ -103,62 +104,6 @@ p{t} AS (
   FROM i{t})"""
 
 
-def logreg_ctes(
-    iters: int, eta_ppm: int, tol_micro: int | None = None
-) -> tuple[str, str]:
-    """(cte_sql, final_weights_cte_name): the feats CTE, the row count,
-    w0 = 0, and ``iters`` chained sig/gradient/update blocks.
-
-    ``tol_micro`` mirrors the trainer's FREEZE early stop: each update
-    becomes CASE WHEN max|Δw| ≤ tol THEN old ELSE new — absorbing, so
-    running all ``iters`` blocks here equals the trainer breaking out
-    at its first frozen iteration (classifier.py:train_logreg)."""
-    parts = [
-        _feats_cte(),
-        "nn AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM feats)",
-        "w_it0 AS MATERIALIZED (SELECT "
-        + ", ".join(f"CAST(0 AS HUGEINT) AS {wc}" for wc in _W)
-        + ")",
-    ]
-    # HUGEINT first factor: n * PPM² overflows BIGINT past ~9.2M rows
-    denom = f"(CAST(nn.n AS HUGEINT) * {PPM} * {PPM})"
-    for t in range(iters):
-        parts.append(_sig_block(t, f"w_it{t}"))
-        sums = ", ".join(
-            f"SUM({xc} * (sig - y_ppm)) AS s{j}" for j, xc in enumerate(_X)
-        )
-        parts.append(f"g{t} AS MATERIALIZED (SELECT {sums} FROM p{t})")
-        updates = ", ".join(
-            "GREATEST(LEAST(w.{wc} - {d}, {cw}), -{cw}) AS n_{wc}".format(
-                wc=wc,
-                d=_fdiv(f"{eta_ppm} * g.s{j}", denom),
-                cw=CLAMP_W,
-            )
-            for j, wc in enumerate(_W)
-        )
-        if tol_micro is None:
-            parts.append(
-                f"w_it{t + 1} AS MATERIALIZED (SELECT "
-                + ", ".join(f"n_{wc} AS {wc}" for wc in _W)
-                + f" FROM (SELECT {updates} FROM w_it{t} w, g{t} g, nn))"
-            )
-        else:
-            olds = ", ".join(f"w.{wc} AS o_{wc}" for wc in _W)
-            maxd = "GREATEST(" + ", ".join(
-                f"ABS(n_{wc} - o_{wc})" for wc in _W
-            ) + ")"
-            frozen = ", ".join(
-                f"CASE WHEN {maxd} <= {tol_micro} THEN o_{wc} "
-                f"ELSE n_{wc} END AS {wc}"
-                for wc in _W
-            )
-            parts.append(
-                f"w_it{t + 1} AS MATERIALIZED (SELECT {frozen} FROM "
-                f"(SELECT {olds}, {updates} FROM w_it{t} w, g{t} g, nn))"
-            )
-    return ",\n".join(parts), f"w_it{iters}"
-
-
 def _newton_block(t: int, ridge: int) -> str:
     """The per-iteration CTEs of the Newton trainer beyond the shared
     sig block: per-row IRLS weight hrow, the 20-sum aggregation, the
@@ -212,8 +157,8 @@ def logreg_newton_ctes(
     """(cte_sql, final_weights_cte_name) for the Newton/IRLS trainer
     (operators/classifier.py:train_logreg_newton): feats, n, w0 = 0,
     then ``iters`` chained sig + Newton blocks. The weight update is
-    Δw_j = floor(PPM · Σ_k c{k}{j}·g_k / d), clamped — with the same
-    absorbing freeze CASE as the GD oracle when ``tol_micro`` is set,
+    Δw_j = floor(PPM · Σ_k c{k}{j}·g_k / d), clamped — with the
+    trainer's absorbing freeze CASE when ``tol_micro`` is set,
     and a d > 0 guard mirroring the driver's unreachable-with-ridge
     no-op branch."""
     parts = [
@@ -263,7 +208,7 @@ def oracle_classifier_quality_newton(
     iters: int = 6, ridge: int = NEWTON_RIDGE, tol_micro: int | None = None
 ) -> str:
     """Newton-trained per-document scores: (doc_id, label, score_ppm,
-    pred) — the GD oracle's shape with the Newton CTE chain."""
+    pred), the final σ̃ evaluated with the it-``iters`` weights."""
     ctes, w_final = logreg_newton_ctes(iters, ridge, tol_micro)
     score_block = _sig_block(iters, w_final)
     return f"""WITH {ctes},
@@ -273,18 +218,3 @@ SELECT doc_id, label, CAST(sig AS BIGINT) AS score_ppm,
 FROM p{iters}
 ORDER BY doc_id"""
 
-
-def oracle_classifier_quality(
-    iters: int = 24, eta_ppm: int = 2 * PPM, tol_micro: int | None = None
-) -> str:
-    """Per-document trained-classifier scores: (doc_id, label,
-    score_ppm, pred), the final σ̃ evaluated with the it-``iters``
-    weights — one more sig block reusing the same machinery."""
-    ctes, w_final = logreg_ctes(iters, eta_ppm, tol_micro)
-    score_block = _sig_block(iters, w_final)  # scoring pass, same σ̃
-    return f"""WITH {ctes},
-{score_block}
-SELECT doc_id, label, CAST(sig AS BIGINT) AS score_ppm,
-       CAST(CASE WHEN sig >= {PPM // 2} THEN 1 ELSE 0 END AS INT) AS pred
-FROM p{iters}
-ORDER BY doc_id"""

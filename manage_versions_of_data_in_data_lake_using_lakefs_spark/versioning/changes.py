@@ -193,11 +193,11 @@ def file_delta(repo, table: str, a: Commit | None, b: Commit | None) -> FileDelt
 
 
 def _positions(repo, spark: SparkSession, dv: list[str]) -> DataFrame | None:
-    return repo._dv_positions(spark, dv) if dv else None
+    return repo._read_files(spark, dv) if dv else None
 
 
 def _minus(x: DataFrame | None, y: DataFrame | None) -> DataFrame | None:
-    return x if x is None or y is None else x.join(y, _POS, "left_anti")
+    return x if x is None or y is None else x.join(y, ["file", "pos"], "left_anti")
 
 
 def _read(
@@ -209,14 +209,15 @@ def _read(
     at: DataFrame | None = None,
 ) -> DataFrame:
     """The rows of ``files`` as a snapshot read returns them: minus the
-    vector ``dv``'s positions, or only the rows at positions ``at``."""
+    vector ``dv``'s positions, or only the rows at the stored vector
+    positions ``at``."""
     df = repo._read_files(
         spark, files, smap or False, with_lineage=bool(dv) or at is not None
     )
     if dv:
         df = repo._apply_dv(spark, df, dv)
     elif at is not None:
-        df = df.join(at, _POS, "left_semi").drop(*_POS)
+        df = df.join(repo._dv_keys(spark, at, df), _POS, "left_semi").drop(*_POS)
     return repo.apply_schema_map(df, smap) if smap else df
 
 
@@ -302,7 +303,6 @@ def table_changes(
             f"version range — split the range at the ALTER commit"
         )
     smap = repo._schema_map_of_commit(pairs[-1][1], table)
-    prefix = "file:" + repo.root + os.sep
 
     def tagged(df: DataFrame, version: int, tag: str) -> DataFrame:
         return df.withColumn("_change_type", F.lit(tag)).withColumn(
@@ -330,11 +330,10 @@ def table_changes(
         # cannot revoke and skips the eager revocation probe job entirely
         if d.vector_shrinks:
             surv_df = local_df(spark,
-                [(prefix + f,) for f in _files_of(repo.root, d.shared)],
-                schema="__lg_fp string",
+                [(f,) for f in _files_of(repo.root, d.shared)], schema="file string"
             )
             revoked = _minus(
-                prev_pos.join(F.broadcast(surv_df), "__lg_fp", "left_semi"), cur_pos
+                prev_pos.join(F.broadcast(surv_df), "file", "left_semi"), cur_pos
             )
             # deferred: a long range with many restore-shaped commits
             # would otherwise pay one driver-paced job per commit —

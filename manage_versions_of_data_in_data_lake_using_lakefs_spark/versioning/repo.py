@@ -37,6 +37,7 @@ import shutil
 import time
 import warnings
 from collections import deque
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,8 +77,9 @@ class DirtyBranchError(Exception):
 
 #: hidden companion-table prefix for deletion vectors: `__dv__<table>`
 #: holds (file string, pos long) rows — positions deleted from the named
-#: physical file. Riding the ordinary snapshot machinery is what makes
-#: DVs branch/merge/time-travel/vacuum/manifest-spill correct for free.
+#: physical file (its real path relative to the repo root). Riding the
+#: ordinary snapshot machinery is what makes DVs
+#: branch/merge/time-travel/vacuum/manifest-spill correct for free.
 DV_PREFIX = "__dv__"
 
 #: reserved TBLPROPERTIES key holding a table's declared PARTITIONED BY
@@ -1034,7 +1036,7 @@ class LakeRepo:
         spec: every spec key must be present with the given value
         (compared against both the raw path spelling and its
         percent-decoded form, keys case-insensitively)."""
-        from urllib.parse import unquote
+        from urllib.parse import unquote, urlsplit
 
         vals: dict[str, tuple[str, str]] = {}
         for seg in part.split("/"):
@@ -2840,16 +2842,53 @@ class LakeRepo:
         deletion-vector read semantics. Shuffle-free when the DV side
         broadcasts (typical: a few positions per file); never rewrites
         data."""
-        anti = self._dv_positions(spark, dv_entries)
+        anti = self._dv_keys(spark, self._read_files(spark, dv_entries), df)
         out = df.join(anti, ["__lg_fp", "__lg_ri"], "left_anti")
         return out if keep_lineage else out.drop("__lg_fp", "__lg_ri")
 
-    def _dv_positions(self, spark: SparkSession, dv_entries: list[str]) -> DataFrame:
-        """A vector's positions keyed like a lineage read: the absolute
-        ``__lg_fp`` file path and the ``__lg_ri`` row index."""
-        prefix = "file:" + self.root + os.sep
-        return self._read_files(spark, dv_entries).select(
-            F.concat(F.lit(prefix), F.col("file")).alias("__lg_fp"),
+    def _dv_prefix(self, spark: SparkSession) -> str:
+        """How a lineage read spells the repo root, separator included:
+        Spark reports ``_metadata.file_path`` as the URI of the file's
+        Hadoop path, which escapes a space, ``%`` or ``#`` in the root.
+        One JVM call, no Spark job."""
+        uri = spark._jvm.org.apache.hadoop.fs.Path(self.root).toUri()
+        return "file:" + uri.toString() + "/"
+
+    def _dv_rows(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
+        """Lineage keys (``__lg_fp``, ``__lg_ri``) → stored vector rows
+        (``file``, ``pos``), ``file`` being the real path relative to
+        the root. ``url_decode`` alone would turn a ``+`` into a space,
+        so ``+`` is escaped first."""
+        start = len(self._dv_prefix(spark)) + 1
+        return keys.select(
+            F.expr(
+                f"url_decode(replace(substring(__lg_fp, {start}), '+', '%2B'))"
+            ).alias("file"),
+            F.col("__lg_ri").cast("long").alias("pos"),
+        )
+
+    def _dv_keys(
+        self, spark: SparkSession, rows: DataFrame, scan: DataFrame
+    ) -> DataFrame:
+        """Stored vector rows (``file``, ``pos``) → the lineage keys
+        (``__lg_fp``, ``__lg_ri``) of the rows they name in ``scan``, a
+        lineage read; the inverse of ``_dv_rows``. Spark spells a file
+        as its listing did, so the scan's own file list gives the
+        spelling of each file whose relative path needs escaping (a
+        partition value holding a space or ``%``); the others only
+        take the root prefix. No Spark job, and no per-row work beyond
+        the prefix unless some file needs escaping."""
+        prefix = self._dv_prefix(spark)
+        start = len(urlsplit(prefix).path)
+        spelled = {urlsplit(uri).path[start:] for uri in scan.inputFiles()}
+        escaped = [(unquote(rel), rel) for rel in sorted(spelled) if "%" in rel]
+        file = F.col("file")
+        if escaped:
+            rels = local_df(spark, escaped, "file string, __lg_rel string")
+            rows = rows.join(F.broadcast(rels), "file", "left")
+            file = F.coalesce(F.col("__lg_rel"), file)
+        return rows.select(
+            F.concat(F.lit(prefix), file).alias("__lg_fp"),
             F.col("pos").alias("__lg_ri"),
         )
 
@@ -2872,6 +2911,65 @@ class LakeRepo:
                 f"before running deletion-vector DML"
             )
 
+    def _dv_read(
+        self, spark: SparkSession, branch: str, table: str, op: str
+    ) -> tuple[DataFrame, dict | None]:
+        """The read every deletion-vector DML matches against, and the
+        table's schema map: the live rows of ``table`` with their
+        ``__lg_fp``/``__lg_ri`` lineage keys, in the LOGICAL schema (the
+        rename replay carries the lineage columns through untouched, so
+        the keys stay physical). Raises ``DirtyBranchError`` before
+        anything is staged: the DML's commit must contain only its own
+        change, and on a clean branch the committed head's vector is
+        the whole story."""
+        if self._is_dirty(self._read_ref(branch)):
+            raise DirtyBranchError(
+                f"{op} on {branch}: uncommitted staged changes for "
+                f"{sorted(self.status(branch))}; commit or reset first"
+            )
+        smap = self.table_schema_map(table, ref=branch)
+        entries = self.current_files(branch, table, include_staged=False)
+        df = self._read_files(spark, entries, merge_schema=smap, with_lineage=True)
+        self._check_lg_columns(table, df)
+        dv0 = self.head(branch).tables.get(DV_PREFIX + table)
+        if dv0:
+            df = self._apply_dv(spark, df, dv0, keep_lineage=True)
+        return (self.apply_schema_map(df, smap) if smap else df), smap
+
+    def _dv_publish(
+        self,
+        spark: SparkSession,
+        branch: str,
+        table: str,
+        positions: DataFrame | None,
+        images: DataFrame | None,
+        message: str,
+        meta: dict,
+    ) -> "Commit":
+        """The one publish of a deletion-vector DML: the lineage keys in
+        ``positions`` join the vector and ``images`` (updated rows,
+        inserts) append to the table, in ONE commit, so readers flip
+        from the old rows to the new atomically. Any failure before the
+        commit lands resets the branch (``_dv_read`` proved it clean, so
+        nothing else is lost): a vector append without its images would
+        be a plain delete. Returns the DML commit; under
+        ``dv_materialize_fraction`` a trailing data_change=false commit
+        may follow it (``_maybe_materialize_dv``)."""
+        try:
+            if positions is not None:
+                self.write_table(
+                    branch, DV_PREFIX + table, self._dv_rows(spark, positions),
+                    mode="append", _internal=True,
+                )
+            if images is not None:
+                self.write_table(branch, table, images, mode="append")
+            c = self.commit(branch, message, meta=meta)
+        except Exception:
+            self.reset(branch)
+            raise
+        self._maybe_materialize_dv(spark, branch, table)
+        return c
+
     def delete_where_dv(
         self,
         spark: SparkSession,
@@ -2892,42 +2990,19 @@ class LakeRepo:
 
         Second deletes APPEND to the vector (rows already deleted are
         excluded from the match scan, so the vector never duplicates).
-        Requires a clean branch (the auto-commit must contain only the
-        DV append). ALTERed tables work: ``cond`` binds the LOGICAL
-        schema via the same rename-replay the read path uses — the
-        lineage columns ride through the replay untouched, so the
-        recorded (file, pos) pairs stay physical.
+        ``cond`` binds the LOGICAL schema. The clean-branch gate and the
+        lineage read are ``_dv_read``'s, the vector append and commit
+        ``_dv_publish``'s; only the match is this method's own.
 
         Returns the DML commit. When ``dv_materialize_fraction`` is
         set, a trailing data_change=false rearrangement commit may land
         AFTER it (see ``_maybe_materialize_dv``), so the returned
         version can be one behind ``head()`` — the trailing commit, if
         any, is in ``last_maintenance_commit``."""
-        if self._is_dirty(self._read_ref(branch)):
-            raise DirtyBranchError(
-                f"delete_where_dv on {branch}: uncommitted staged changes "
-                f"for {sorted(self.status(branch))}; commit or reset first"
-            )
-        smap = self.table_schema_map(table, ref=branch)
-        entries = self.current_files(branch, table, include_staged=False)
-        df = self._read_files(
-            spark, entries, merge_schema=smap, with_lineage=True
-        )
-        self._check_lg_columns(table, df)
-        # the branch is clean (checked above), so the committed head's
-        # vector is the whole story
-        dv0 = self.head(branch).tables.get(DV_PREFIX + table)
-        if dv0:
-            df = self._apply_dv(spark, df, dv0, keep_lineage=True)
-        if smap:
-            df = self.apply_schema_map(df, smap)
-        prefix = "file:" + self.root + os.sep
+        df, _ = self._dv_read(spark, branch, table, "delete_where_dv")
         # persist: the count (for the no-op gate + commit metadata) and
         # the vector write must not each re-run the full match scan
-        matches = df.where(cond).select(
-            F.expr(f"substring(__lg_fp, {len(prefix) + 1})").alias("file"),
-            F.col("__lg_ri").cast("long").alias("pos"),
-        ).persist()
+        matches = df.where(cond).select("__lg_fp", "__lg_ri").persist()
         try:
             n = matches.count()
             if n == 0:
@@ -2935,18 +3010,13 @@ class LakeRepo:
                 # empty vector append would still break append-mode streams
                 # and disqualify metadata aggregates forever
                 return self.head(branch)
-            self.write_table(
-                branch, DV_PREFIX + table, matches, mode="append", _internal=True
+            return self._dv_publish(
+                spark, branch, table, matches, None,
+                message or f"DV DELETE FROM {table} WHERE {cond}",
+                {"dv_delete": {"table": table, "where": cond, "rows": n}},
             )
         finally:
             matches.unpersist(blocking=False)
-        c = self.commit(
-            branch,
-            message or f"DV DELETE FROM {table} WHERE {cond}",
-            meta={"dv_delete": {"table": table, "where": cond, "rows": n}},
-        )
-        self._maybe_materialize_dv(spark, branch, table)
-        return c
 
     def update_where_dv(
         self,
@@ -2960,13 +3030,14 @@ class LakeRepo:
         """Row-level UPDATE with ZERO existing-file rewrites (Delta's DV
         update): the matching rows' (file, position) pairs join the
         deletion vector and their UPDATED images append as a new file —
-        both staged into ONE commit, so readers atomically flip from the
-        old rows to the new. A point update of one row in a 1 GB file
-        costs a DV row + a one-row file instead of the 1 GB rewrite.
+        both staged into ONE commit by ``_dv_publish``, so readers
+        atomically flip from the old rows to the new. A point update of
+        one row in a 1 GB file costs a DV row + a one-row file instead
+        of the 1 GB rewrite.
 
         ``set_exprs`` maps column → SQL expression, evaluated against
-        the matching row's LOGICAL schema (``cond`` too — ALTERed tables
-        bind through the rename-replay map, like ``delete_where_dv``).
+        the matching row's LOGICAL schema (``cond`` too; both bind on
+        ``_dv_read``'s lineage read, like ``delete_where_dv``).
         GENERATED columns are recomputed on read and cannot be SET.
         The CDC feed needs no new machinery: the commit is a vector
         append (delete rows at exactly the updated positions) plus a
@@ -2977,12 +3048,7 @@ class LakeRepo:
         trailing data_change=false commit may follow it (recorded in
         ``last_maintenance_commit``), so compare against that rather
         than expecting the returned version to equal ``head()``."""
-        if self._is_dirty(self._read_ref(branch)):
-            raise DirtyBranchError(
-                f"update_where_dv on {branch}: uncommitted staged changes "
-                f"for {sorted(self.status(branch))}; commit or reset first"
-            )
-        smap = self.table_schema_map(table, ref=branch)
+        df, smap = self._dv_read(spark, branch, table, "update_where_dv")
         gen = self._generated_names(smap)
         bad = {c for c in set_exprs if c.lower() in gen}
         if bad:
@@ -2991,16 +3057,6 @@ class LakeRepo:
                 f"(recomputed on every read, never stored) — change the "
                 f"generating expression via ALTER instead"
             )
-        entries = self.current_files(branch, table, include_staged=False)
-        df = self._read_files(
-            spark, entries, merge_schema=smap, with_lineage=True
-        )
-        self._check_lg_columns(table, df)
-        dv0 = self.head(branch).tables.get(DV_PREFIX + table)
-        if dv0:
-            df = self._apply_dv(spark, df, dv0, keep_lineage=True)
-        if smap:
-            df = self.apply_schema_map(df, smap)
         # validate BEFORE the empty-match early return: a typo'd SET
         # column must raise even when the predicate matches nothing
         unknown = set(set_exprs) - {
@@ -3019,11 +3075,6 @@ class LakeRepo:
             n = matched.count()
             if n == 0:
                 return self.head(branch)  # no-op: don't birth a vector
-            prefix = "file:" + self.root + os.sep
-            positions = matched.select(
-                F.expr(f"substring(__lg_fp, {len(prefix) + 1})").alias("file"),
-                F.col("__lg_ri").cast("long").alias("pos"),
-            )
             # updated images: stored logical columns only (generated
             # columns recompute from these on read; lineage never
             # persists)
@@ -3040,25 +3091,13 @@ class LakeRepo:
                     for c in out_cols
                 ]
             )
-            self.write_table(
-                branch, DV_PREFIX + table, positions, mode="append", _internal=True
+            return self._dv_publish(
+                spark, branch, table, matched.select("__lg_fp", "__lg_ri"), images,
+                message or f"DV UPDATE {table} SET {sorted(set_exprs)} WHERE {cond}",
+                {"dv_update": {"table": table, "where": cond, "rows": n}},
             )
-            try:
-                self.write_table(branch, table, images, mode="append")
-            except Exception:
-                # never leave half an update staged: the vector append
-                # without its images is a plain delete
-                self.reset(branch)
-                raise
         finally:
             matched.unpersist(blocking=False)
-        c = self.commit(
-            branch,
-            message or f"DV UPDATE {table} SET {sorted(set_exprs)} WHERE {cond}",
-            meta={"dv_update": {"table": table, "where": cond, "rows": n}},
-        )
-        self._maybe_materialize_dv(spark, branch, table)
-        return c
 
     def purge_deletion_vectors(
         self,
@@ -3132,13 +3171,11 @@ class LakeRepo:
         df = self._read_files(
             spark, sorted(sel_set), merge_schema=smap, with_lineage=True
         )
-        prefix = "file:" + self.root + os.sep
         sel_df = local_df(spark,
             [(f,) for f in sorted(sel_set)], "file string"
         )
-        anti = dv.join(F.broadcast(sel_df), "file", "left_semi").select(
-            F.concat(F.lit(prefix), F.col("file")).alias("__lg_fp"),
-            F.col("pos").alias("__lg_ri"),
+        anti = self._dv_keys(
+            spark, dv.join(F.broadcast(sel_df), "file", "left_semi"), df
         )
         kept = df.join(anti, ["__lg_fp", "__lg_ri"], "left_anti").drop(
             "__lg_fp", "__lg_ri"

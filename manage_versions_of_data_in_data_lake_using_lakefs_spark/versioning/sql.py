@@ -82,6 +82,7 @@ import re
 from collections.abc import Callable
 from contextlib import contextmanager
 from datetime import datetime, timezone
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3457,29 +3458,7 @@ class LakeSQL:
             dv_snap = self.repo.staged_entry(self.branch, DV_PREFIX + name)
             try:
                 if split is not None:
-                    safe, cand, info = split
-                    steps = self.repo.table_schema_map(name, ref=self.branch)
-                    files = list(safe)
-                    deleted = 0
-                    if cand:
-                        cand_df = self.repo._read_files(
-                            self.spark, cand, merge_schema=bool(steps)
-                        )
-                        if steps:
-                            cand_df = self.repo.apply_schema_map(cand_df, steps)
-                        kept = cand_df.filter(F.expr(f"({cond}) IS NOT TRUE"))
-                        kept_n = kept.count()
-                        before = info.get("candidate_rows")
-                        if before is None:
-                            before = cand_df.count()
-                        if kept_n > 0:
-                            files.append(
-                                self.repo.write_table(
-                                    self.branch, name, kept, mode="overwrite"
-                                )
-                            )
-                        deleted = before - kept_n
-                    self.repo.stage_table_files(self.branch, name, files)
+                    deleted = self._rewrite_pruned(name, split, cond)
                 else:
                     cur = self.repo.read_table(
                         self.spark, name, ref=self.branch, include_staged=True
@@ -3595,7 +3574,9 @@ class LakeSQL:
             # safe-file row and commit silent loss
             snap = self.repo.staged_entry(self.branch, name)
             try:
-                return self._delete_pruned(name, cond, *split)
+                rows = self._rewrite_pruned(name, split, cond)
+                c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
+                return self._dml_result(name, c.version, rows)
             except ConstraintViolation:
                 self.repo.restore_staged_entry(self.branch, name, snap)
                 raise  # the full rewrite would fail identically — don't pay it
@@ -3628,10 +3609,12 @@ class LakeSQL:
 
     def _try_dv_dml(self, name: str, op, meta_key: str, stmt: str) -> DataFrame | None:
         """Run a deletion-vector DML; None means "fall back to the
-        rewrite path". Declines on a dirty branch (the DV paths refuse
-        it — the auto-commit must contain only the vector change; at
-        that point nothing is staged, so the rewrite path proceeds from
-        untouched state). A failure AFTER staging is reset — the branch
+        rewrite path". Declines on a dirty branch (``repo._dv_read``,
+        which every DV writer starts from, refuses it before anything is
+        staged — the auto-commit must contain only the vector change —
+        so the rewrite path proceeds from untouched state). A failure
+        AFTER staging is reset (``repo._dv_publish`` resets its own
+        staging; this reset backs it up for the rest) — the branch
         was provably clean, so reset loses nothing — otherwise the
         half-staged vector would ride the fallback's commit.
         ConstraintViolation re-raises after the reset: the full rewrite
@@ -3654,7 +3637,7 @@ class LakeSQL:
             return None
         if c.version == before:
             # matched nothing: the vector stays unborn, but every DML
-            # lands a version (same rule as _delete_pruned's no-op)
+            # lands a version (as a pruned DELETE that matches no file)
             self.repo.stage_table_files(
                 self.branch, name, self.repo.current_files(self.branch, name)
             )
@@ -3709,29 +3692,19 @@ class LakeSQL:
         append is the standard delete+insert change pair, identical in
         shape to ``update_where_dv``.
 
-        Called through ``_try_dv_dml`` so the fallback discipline (clean
-        branch required, reset on failure, ValueError surfaces, no-op
+        The clean-branch gate and lineage read are ``repo._dv_read``'s,
+        the vector and image appends, commit and auto-materialize
+        ``repo._dv_publish``'s, shared with ``delete_where_dv`` and
+        ``update_where_dv``; the clause matching is this method's own.
+        Called through ``_try_dv_dml`` so the fallback discipline (dirty
+        branch declines, reset on failure, ValueError surfaces, no-op
         still lands a version) is shared with DELETE/UPDATE routing.
-        Returns the unchanged head for a no-op. Like the other DV DML
-        paths, returns the DML commit itself — under
-        ``dv_materialize_fraction`` a trailing data_change=false commit
-        may follow (``repo.last_maintenance_commit``)."""
+        Returns the unchanged head for a no-op, else the DML commit
+        itself — under ``dv_materialize_fraction`` a trailing
+        data_change=false commit may follow
+        (``repo.last_maintenance_commit``)."""
         repo, spark, branch = self.repo, self.spark, self.branch
-        if repo._is_dirty(repo._read_ref(branch)):
-            raise DirtyBranchError(
-                f"MERGE INTO {name} (dv): uncommitted staged changes; "
-                f"the rewrite path handles dirty branches"
-            )
-        smap = repo.table_schema_map(name, ref=branch)
-        entries = repo.current_files(branch, name, include_staged=False)
-        df = repo._read_files(
-            spark, entries, merge_schema=bool(smap), with_lineage=True
-        )
-        dv0 = repo.head(branch).tables.get(DV_PREFIX + name)
-        if dv0:
-            df = repo._apply_dv(spark, df, dv0, keep_lineage=True)
-        if smap:
-            df = repo.apply_schema_map(df, smap)
+        df, _ = repo._dv_read(spark, branch, name, f"MERGE INTO {name} (dv)")
         tview, sview = "lake__mdv_t", "lake__mdv_s"
         df.createOrReplaceTempView(tview)
         sdf.createOrReplaceTempView(sview)
@@ -3834,101 +3807,68 @@ class LakeSQL:
                 n_ins = inserts.count()
             if n_matched == 0 and n_ins == 0 and n_bs == 0:
                 return repo.head(branch)  # no-op: caller lands the version
-            if n_matched or n_bs:
-                prefix = "file:" + repo.root + os.sep
-                pos_src = None
-                if n_matched:
-                    pos_src = matched.select("__lg_fp", "__lg_ri")
-                if n_bs:
-                    bs_pos = bs.select("__lg_fp", "__lg_ri")
-                    pos_src = (
-                        bs_pos
-                        if pos_src is None
-                        else pos_src.unionByName(bs_pos)
-                    )
-                positions = pos_src.select(
-                    F.expr(f"substring(__lg_fp, {len(prefix) + 1})").alias(
-                        "file"
-                    ),
-                    F.col("__lg_ri").cast("long").alias("pos"),
-                )
-                repo.write_table(
-                    branch, DV_PREFIX + name, positions,
-                    mode="append", _internal=True,
-                )
-            appended = None
-            if m_upd and n_m_img:
-                appended = matched.where(
-                    F.col("__lg_cl").isin(m_upd)
-                ).drop("__lg_fp", "__lg_ri", "__lg_cl")
-            if bs_upd and n_bs_img:
-                bs_img = bs.where(F.col("__lg_cl").isin(bs_upd)).drop(
-                    "__lg_fp", "__lg_ri", "__lg_cl"
-                )
-                appended = (
-                    bs_img if appended is None
-                    else appended.unionByName(bs_img)
-                )
-            if inserts is not None and n_ins:
-                appended = (
-                    inserts if appended is None
-                    else appended.unionByName(inserts)
-                )
-            if appended is not None:
-                try:
-                    repo.write_table(branch, name, appended, mode="append")
-                except Exception:
-                    # never leave half a merge staged: a vector append
-                    # without its images/inserts is a plain delete
-                    repo.reset(branch)
-                    raise
-        finally:
-            if matched is not None:
-                matched.unpersist(blocking=False)
-            if inserts is not None:
-                inserts.unpersist(blocking=False)
-            if bs is not None:
-                bs.unpersist(blocking=False)
-        c = repo.commit(
-            branch,
-            f"SQL: MERGE INTO {name}",
-            meta={
-                "dv_merge": {
-                    "table": name, "rows": n_matched + n_ins + n_bs,
-                }
-            },
-        )
-        repo._maybe_materialize_dv(spark, branch, name)
-        return c
-
-    def _delete_pruned(
-        self, name: str, cond: str, safe: list, cand: list, info: dict
-    ) -> DataFrame:
-        if not cand:
-            # no file can hold a matching row: DELETE is a no-op on data;
-            # commit the (unchanged) file list so every DML lands a version
-            self.repo.stage_table_files(self.branch, name, safe)
-            c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
-            return self._dml_result(name, c.version, 0)
-        # candidate files are read raw, so a column-mapped table needs the
-        # same schema-step replay the branch views get from read_table
-        steps = self.repo.table_schema_map(name, ref=self.branch)
-        cand_df = self.repo._read_files(self.spark, cand, merge_schema=bool(steps))
-        if steps:
-            cand_df = self.repo.apply_schema_map(cand_df, steps)
-        kept = cand_df.filter(F.expr(f"({cond}) IS NOT TRUE"))
-        kept_n = kept.count()
-        before = info.get("candidate_rows")
-        if before is None:
-            before = cand_df.count()
-        files = list(safe)
-        if kept_n > 0:
-            files.append(
-                self.repo.write_table(self.branch, name, kept, mode="overwrite")
+            lineage = ["__lg_fp", "__lg_ri", "__lg_cl"]
+            positions = [
+                f.select(*lineage[:2])
+                for f, n in ((matched, n_matched), (bs, n_bs)) if n
+            ]
+            images = [
+                f.where(F.col("__lg_cl").isin(upd)).drop(*lineage)
+                for f, upd, n in ((matched, m_upd, n_m_img), (bs, bs_upd, n_bs_img))
+                if n
+            ] + ([inserts] if n_ins else [])
+            return repo._dv_publish(
+                spark, branch, name,
+                reduce(DataFrame.unionByName, positions) if positions else None,
+                reduce(DataFrame.unionByName, images) if images else None,
+                f"SQL: MERGE INTO {name}",
+                {"dv_merge": {"table": name, "rows": n_matched + n_ins + n_bs}},
             )
+        finally:
+            for f in (matched, inserts, bs):
+                if f is not None:
+                    f.unpersist(blocking=False)
+
+    def _rewrite_pruned(
+        self, name: str, split: tuple, cond: str, proj: list | None = None
+    ) -> int:
+        """The copy-on-write pruned rewrite shared by DELETE, UPDATE and
+        the delete half of INSERT ... REPLACE WHERE: read the candidate
+        files of ``split`` (``_prune_split``'s safe, candidate, info)
+        through the schema map, rewrite them, and stage the safe files
+        plus the rewritten ones. Without ``proj`` the rows where
+        ``cond`` is TRUE are dropped; with it every candidate row is
+        re-projected (UPDATE's CASE projection). Returns the affected
+        rows; the caller commits. Raises (→ the caller's fallback) when
+        an expression needs the SQL rewriter (e.g. a subquery on a repo
+        table)."""
+        safe, cand, info = split
+        files = list(safe)
+        rows = 0
+        if cand:
+            # candidate files are read raw, so a column-mapped table needs
+            # the same schema-step replay the branch views get from
+            # read_table
+            steps = self.repo.table_schema_map(name, ref=self.branch)
+            cand_df = self.repo._read_files(self.spark, cand, merge_schema=bool(steps))
+            if steps:
+                cand_df = self.repo.apply_schema_map(cand_df, steps)
+            if proj is None:
+                kept = cand_df.filter(F.expr(f"({cond}) IS NOT TRUE"))
+                kept_n = kept.count()
+                before = info.get("candidate_rows")
+                if before is None:
+                    before = cand_df.count()
+                rows, out = before - kept_n, (kept if kept_n else None)
+            else:
+                rows = cand_df.filter(F.expr(f"({cond}) IS TRUE")).count()
+                out = cand_df.selectExpr(*proj)
+            if out is not None:
+                files.append(
+                    self.repo.write_table(self.branch, name, out, mode="overwrite")
+                )
         self.repo.stage_table_files(self.branch, name, files)
-        c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
-        return self._dml_result(name, c.version, before - kept_n)
+        return rows
 
     def _update(self, table: str, sets: str, cond: str | None) -> DataFrame:
         """UPDATE t SET c = expr, ... [WHERE cond] — rewritten as one
@@ -3999,7 +3939,9 @@ class LakeSQL:
             # path's half-mutated staging must never leak into the fallback
             snap = self.repo.staged_entry(self.branch, name)
             try:
-                return self._update_pruned(name, guard, proj, *split)
+                rows = self._rewrite_pruned(name, split, cond, proj)
+                c = self.repo.commit(self.branch, f"SQL: UPDATE {name}")
+                return self._dml_result(name, c.version, rows)
             except ConstraintViolation:
                 self.repo.restore_staged_entry(self.branch, name, snap)
                 raise  # the full rewrite would fail identically — don't pay it
@@ -4010,29 +3952,6 @@ class LakeSQL:
         rows = self.sql(f"SELECT * FROM {name} WHERE {guard}").count()
         updated = self.sql(f"SELECT {', '.join(proj)} FROM {name}")
         self.repo.write_table(self.branch, name, updated, mode="overwrite")
-        c = self.repo.commit(self.branch, f"SQL: UPDATE {name}")
-        return self._dml_result(name, c.version, rows)
-
-    def _update_pruned(
-        self, name: str, guard: str, proj: list, safe: list, cand: list, info: dict
-    ) -> DataFrame:
-        """Rewrite only files whose stats overlap the UPDATE condition;
-        files that provably hold no matching row carry by reference.
-        Raises (→ caller falls back) when a SET expression needs the SQL
-        rewriter (e.g. a subquery on a repo table)."""
-        rows = 0
-        files = list(safe)
-        if cand:
-            steps = self.repo.table_schema_map(name, ref=self.branch)
-            cand_df = self.repo._read_files(self.spark, cand, merge_schema=bool(steps))
-            if steps:
-                cand_df = self.repo.apply_schema_map(cand_df, steps)
-            rows = cand_df.filter(F.expr(guard)).count()
-            updated = cand_df.selectExpr(*proj)
-            files.append(
-                self.repo.write_table(self.branch, name, updated, mode="overwrite")
-            )
-        self.repo.stage_table_files(self.branch, name, files)
         c = self.repo.commit(self.branch, f"SQL: UPDATE {name}")
         return self._dml_result(name, c.version, rows)
 

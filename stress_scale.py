@@ -241,20 +241,20 @@ def main() -> None:
         return cms_heavy_hitters(words, "word", width=64, depth=4, threshold=1)
 
     def op_classifier(d: DataFrame) -> DataFrame:
-        # each GD iteration is one distributed 5-sum aggregation over the
-        # persisted ppm-feature projection; per-row cost must stay flat
-        # (iteration count fixed at 8 for wall-time sanity — the ratio is
+        # each Newton iteration is one distributed 20-sum aggregation over
+        # the persisted ppm-feature projection; per-row cost must stay
+        # flat (the trainer's default 6 iterations — the ratio is
         # iteration-count invariant)
         from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.classifier import (
             FEATURE_COLS,
             quality_features,
             score_logreg,
-            train_logreg,
+            train_logreg_newton,
         )
         from manage_versions_of_data_in_data_lake_using_lakefs_spark.operators.similarity import _persisted
 
         feats = _persisted(quality_features(d).select("doc_id", *FEATURE_COLS, "label"))
-        w = train_logreg(feats, iters=8)
+        w = train_logreg_newton(feats)
         return score_logreg(feats, w).select("doc_id", "score_ppm", "pred")
 
     def op_quantiles(x: DataFrame) -> DataFrame:

@@ -1781,3 +1781,132 @@ def test_insert_no_space_spellings_and_duplicate_source_names(spark, repo):
     ).first().rows_affected == 1
     got = sorted((x.k, x.v) for x in repo.read_table(spark, "t", "main").collect())
     assert got == [(0, 0), (0, 0), (1, 2), (7, 14)]
+
+
+def _dv_dml_script(spark, root):
+    """DV DELETE, UPDATE and MERGE through ``LakeSQL``, ``TABLE_CHANGES``
+    over them and a thresholded purge, on a fresh repo at ``root``:
+    every result, in order. Each vector row must name a real file
+    relative to the root."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo = LakeRepo.init(root)
+    repo.write_table("main", "t", _kv(spark, 0, 20).repartition(2))
+    repo.write_table(
+        "main", "s",
+        spark.range(15, 25).select(F.col("id").alias("k"), (F.col("id") * 7).alias("v")),
+    )
+    repo.commit("main", "base")
+    sql = LakeSQL(spark, repo, "main", dv_writes=True)
+    out = []
+
+    def observe(extra):
+        entries = repo._resolve("main").tables.get(DV_PREFIX + "t")
+        dv = repo._read_files(spark, entries).collect() if entries else []
+        assert all(os.path.isfile(os.path.join(repo.root, d.file)) for d in dv)
+        rows = sorted(tuple(r) for r in repo.read_table(spark, "t", "main").collect())
+        out.append((extra, len(dv), rows))
+
+    def step(stmt):
+        r = sql.sql(stmt).first()
+        observe(r.rows_affected)
+        return r.version
+
+    first = step("DELETE FROM t WHERE k < 5")
+    step("UPDATE t SET v = v + 1000 WHERE k >= 10 AND k < 13")
+    last = step(
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED AND t.k < 17 THEN DELETE "
+        "WHEN NOT MATCHED THEN INSERT * "
+        "WHEN NOT MATCHED BY SOURCE AND t.k < 7 THEN DELETE"
+    )
+    changes = sql.sql(f"SELECT * FROM TABLE_CHANGES(t, {first}, {last})").collect()
+    out.append(sorted(tuple(r) for r in changes))
+    c = repo.purge_deletion_vectors(spark, "main", "t", min_fraction=0.1)
+    observe(c.meta.get("dv_purge"))
+    return out
+
+
+def test_dv_dml_under_a_root_that_needs_uri_escaping(spark, tmp_path):
+    """Spark reports a scanned file's path URI-escaped (a space becomes
+    ``%20``, ``%`` becomes ``%25``, ``#`` becomes ``%23``), so vector
+    keys must translate through that spelling of the repo root: the
+    same DV script answers identically under a plain root and under one
+    that needs escaping."""
+    plain = _dv_dml_script(spark, str(tmp_path / "plain"))
+    assert [o[0] for o in plain[:3]] == [5, 3, 9]  # rows affected
+    assert all(o[1] for o in plain[:3])  # each statement took the DV route
+    assert _dv_dml_script(spark, str(tmp_path / "lake root %20#")) == plain
+
+
+def test_dv_publish_failure_leaves_branch_clean_and_sql_falls_back(
+    spark, repo, monkeypatch
+):
+    """The DV writers publish in one place. An image append that fails
+    there leaves nothing staged and moves neither the head nor the
+    vector; ``LakeSQL`` then answers the statement through the rewrite
+    route, with the rows a ``dv_writes=False`` run gives."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 20).repartition(2))
+    repo.write_table(
+        "main", "s",
+        spark.range(15, 25).select(F.col("id").alias("k"), (F.col("id") * 7).alias("v")),
+    )
+    repo.commit("main", "base")
+    repo.delete_where_dv(spark, "main", "t", "k < 3")
+    repo.create_branch("rw", "main")
+    real_write = LakeRepo.write_table
+    failed = []
+
+    def fail_first_image_append(self, branch, table, df, mode="overwrite", **kw):
+        if table == "t" and mode == "append" and not failed:
+            failed.append(branch)
+            raise OSError("injected image append failure")
+        return real_write(self, branch, table, df, mode=mode, **kw)
+
+    monkeypatch.setattr(LakeRepo, "write_table", fail_first_image_append)
+    head = repo.head("main")
+    vector = repo._resolve("main").tables[DV_PREFIX + "t"]
+    with pytest.raises(OSError, match="injected"):
+        repo.update_where_dv(spark, "main", "t", "k >= 10", {"v": "v + 1"})
+    assert failed == ["main"]
+    assert not repo.status("main")
+    assert repo.head("main").id == head.id
+    assert repo._resolve("main").tables[DV_PREFIX + "t"] == vector
+
+    failed.clear()
+    stmt = (
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = LakeSQL(spark, repo, "main", dv_writes=True).sql(stmt).first()
+    assert failed == ["main"]  # the DV route ran and failed at its publish
+    want = LakeSQL(spark, repo, "rw", dv_writes=False).sql(stmt).first()
+    assert not repo.status("main")
+    assert got.rows_affected == want.rows_affected == 10
+    assert sorted(repo.read_table(spark, "t", "main").collect()) == sorted(
+        repo.read_table(spark, "t", "rw").collect()
+    )
+
+
+def test_dv_keys_spell_files_as_spark_does_and_round_trip(spark, tmp_path):
+    """Stored vector rows translate to the lineage keys a scan of their
+    file reports, for characters that need URI escaping in the root and
+    in the relative path alike (a partition value keeps a space, a ``+``, a
+    no-break space and a Spark-escaped ``%25``), and the keys translate
+    back to the real relative path."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    repo = LakeRepo.init(str(tmp_path / "r o%20#t"))
+    rel = "data/x/p=a b%25c+\u00e9\u00a0|<>`/part-0.parquet"
+    os.makedirs(os.path.dirname(os.path.join(repo.root, rel)))
+    pq.write_table(pa.table({"k": [7, 8]}), os.path.join(repo.root, rel))
+    scanned = spark.read.parquet(os.path.join(repo.root, rel)).select(
+        F.col("_metadata.file_path").alias("__lg_fp"),
+        F.col("_metadata.row_index").alias("__lg_ri"),
+    )
+    stored = spark.createDataFrame([(rel, 0), (rel, 1)], "file string, pos long")
+    assert sorted(repo._dv_keys(spark, stored, scanned).collect()) == sorted(scanned.collect())
+    assert sorted(repo._dv_rows(spark, scanned).collect()) == sorted(stored.collect())

@@ -329,3 +329,51 @@ def test_analyze_table_zero_scan_and_dv_fallback(spark, repo):
     ).collect()}
     assert rows["k"].source == "scan"
     assert (rows["k"].min, rows["k"].max, rows["k"].row_count) == ("5", "29", 25)
+
+
+def test_meta_count_matches_scan_after_every_vector_writer(spark, repo):
+    """The manifest-derived COUNT(*) (footer rows minus vector
+    cardinality) against the ``count()`` of a read, after every writer
+    that moves a deletion vector, in order: DV DELETE, UPDATE and MERGE
+    (matched DELETE/UPDATE, INSERT, BY SOURCE DELETE), a BY SOURCE
+    UPDATE, a purge, an auto-materialize and OPTIMIZE."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.repo import DV_PREFIX
+
+    repo.write_table("main", "t", _df(spark, 0, 60).repartition(3))
+    repo.write_table("main", "s", _df(spark, 50, 70))
+    repo.commit("main", "base")
+    sql = LakeSQL(spark, repo, "main", dv_writes=True)
+    counts = []
+
+    def check(vectored):
+        n = sql.sql("SELECT COUNT(*) AS n FROM t").first().n
+        assert n == repo.read_table(spark, "t", "main").count()
+        assert (DV_PREFIX + "t" in repo._resolve("main").tables) == vectored
+        counts.append(n)
+
+    sql.sql("DELETE FROM t WHERE k < 5")
+    check(True)
+    sql.sql("UPDATE t SET v = -v WHERE k < 20")
+    check(True)
+    sql.sql(
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN MATCHED AND s.k < 53 THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT * "
+        "WHEN NOT MATCHED BY SOURCE AND t.k < 10 THEN DELETE"
+    )
+    check(True)
+    sql.sql(
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN NOT MATCHED BY SOURCE AND t.k < 15 THEN UPDATE SET v = 0"
+    )
+    check(True)
+    repo.purge_deletion_vectors(spark, "main", "t", min_fraction=0.1)
+    check(False)  # every vectored file held over 10% of its rows
+    repo.dv_materialize_fraction = 0.01
+    sql.sql("DELETE FROM t WHERE k = 20")
+    assert repo.last_maintenance_commit is not None
+    check(False)
+    sql.sql("OPTIMIZE t")
+    check(False)
+    assert counts == [55, 55, 57, 57, 57, 56, 56]
