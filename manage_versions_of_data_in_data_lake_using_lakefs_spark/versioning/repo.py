@@ -127,6 +127,7 @@ def _check_name_unreserved(name: str, kind: str) -> None:
 #: the dependency graph) and imported by sql.py's grammar so the parser
 #: regexes and the column-spec validator can never drift.
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+_GLOB_ESCAPES = {ord(c): "\\" + c for c in "\\[]{}?*"}
 
 
 def _validate_col_spec(
@@ -2479,7 +2480,7 @@ class LakeRepo:
         if not cons:
             return
         try:
-            df = spark.read.parquet(out_dir)
+            df = spark.read.parquet(*self._literal(out_dir))
             # constraints bind the LOGICAL schema: a raw read of the new
             # files lacks GENERATED columns (write_table strips them),
             # and _check_rows would skip any constraint on them as
@@ -3366,6 +3367,15 @@ class LakeRepo:
         except Exception:
             return None
 
+    @staticmethod
+    def _literal(*paths: str) -> list[str]:
+        """Repo paths are data, never glob patterns: Spark globs each
+        path it reads, so a root or file name holding ``[``, ``{`` or
+        ``?`` would match other files or none. Each Hadoop glob
+        character is escaped with ``\\``. A ``basePath`` option is not
+        globbed and must stay as it is."""
+        return [p.translate(_GLOB_ESCAPES) for p in paths]
+
     def _read_files(
         self,
         spark: SparkSession,
@@ -3460,7 +3470,7 @@ class LakeRepo:
                 # (the file index is already built) restores the old
                 # failure surface (caught by test_meta_agg's gutted-file
                 # pins).
-                d = spark.read.schema(schema).parquet(*ps)
+                d = spark.read.schema(schema).parquet(*self._literal(*ps))
                 if not d.inputFiles():
                     raise IOError(
                         f"table snapshot lists {len(ps)} entr"
@@ -3485,7 +3495,7 @@ class LakeRepo:
                             lineage(pinned_read(self._schema_from_json(k), ps))
                         )
                 else:
-                    pinned.append(lineage(reader().parquet(*paths)))
+                    pinned.append(lineage(reader().parquet(*self._literal(*paths))))
                 dfs.extend(pinned)
             except Exception as e:
                 if not widened or "merg" not in str(e).lower():
@@ -3504,13 +3514,13 @@ class LakeRepo:
                 for p in paths:
                     eras2.setdefault(self._entry_schema_key(p), []).append(p)
                 for _k, ps in sorted(eras2.items()):
-                    dfs.append(lineage(spark.read.parquet(*ps)))
+                    dfs.append(lineage(spark.read.parquet(*self._literal(*ps))))
         for group, fs in sorted(by_group.items()):
             dfs.append(
                 lineage(
                     reader()
                     .option("basePath", os.path.join(self.root, group))
-                    .parquet(*[os.path.join(self.root, f) for f in fs])
+                    .parquet(*self._literal(*[os.path.join(self.root, f) for f in fs]))
                 )
             )
         out = dfs[0]

@@ -11,8 +11,8 @@ Mechanics: time-travel clauses are recognized lexically and each pinned
 snapshot is registered as a temp view resolving through
 ``LakeRepo.read_table`` — the rewritten query then runs through plain
 ``spark.sql`` and Catalyst sees ordinary parquet scans (pruning/pushdown
-intact). This is a clause rewriter, not a SQL parser, but it is careful
-where lexical rewriters classically go wrong:
+intact). For queries this is a clause rewriter, not a SQL parser, but
+it is careful where lexical rewriters classically go wrong:
 
 - **string literals are masked first** ('...' with doubled-'' or
   backslash escapes, and "..." double-quoted literals — Spark's default
@@ -67,6 +67,15 @@ Dispatch: every non-SELECT statement is one row of the ordered
 first matching row handles the statement, and whatever no row claims
 runs through the SELECT rewriter. A new verb is one row in that table.
 
+MERGE, DELETE, UPDATE, ``INSERT ... REPLACE WHERE`` and the CREATE
+TABLE column list are not rewritten lexically: their row claims them by
+keyword and ``_parse`` reads them with Spark's own SQL parser into
+plain values that both DML routes (deletion vector and copy-on-write)
+consume. Expression text is sliced from the statement, so the user's
+spelling reaches the rewriter unchanged. The other verbs (RESTORE,
+OPTIMIZE, COPY, CLONE, the branch verbs, ...) are not Spark grammar and
+keep their regex rows.
+
 Known lexical limits: a *bare* column whose name equals a repo *table*
 name referenced in the same query would be rewritten too — the standard
 hazard of rewriting identifiers without a parse tree (backtick-quote the
@@ -83,7 +92,9 @@ from collections.abc import Callable
 from contextlib import contextmanager
 from datetime import datetime, timezone
 from functools import reduce
+from typing import NamedTuple
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -441,85 +452,282 @@ _DESCRIBE_TABLE_RE = re.compile(
     rf"^\s*DESC(?:RIBE)?\s+(?:TABLE\s+)?(?P<table>{_IDENT})\s*;?\s*$",
     re.IGNORECASE,
 )
+# MERGE, DELETE, UPDATE and INSERT ... REPLACE WHERE are claimed by their
+# keyword prefix alone: from there on the grammar is Spark's (``_parse``)
 _MERGE_INTO_RE = re.compile(
-    rf"^\s*MERGE\s+(?P<evolve>WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+"
-    rf"(?P<table>{_IDENT})(?:\s+(?:AS\s+)?(?P<talias>(?!USING\b)\w+))?"
-    r"\s+USING\s+(?P<body>.+?)"
-    r"(?P<clauses>\s+WHEN\s+(?:NOT\s+)?MATCHED\b.+?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+    r"^\s*MERGE\s+(?:WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\b", re.IGNORECASE
 )
-_MERGE_ON_RE = re.compile(
-    r"^\s*(?:(?:AS\s+)?(?!ON\b)(?P<salias>\w+)\s+)?ON\s+(?P<cond>.+)$",
-    re.IGNORECASE | re.DOTALL,
+_INSERT_REPLACE_RE = re.compile(
+    rf"^\s*INSERT\s+INTO\s+{_IDENT}\s+REPLACE\s+WHERE\b", re.IGNORECASE
 )
-# MERGE clauses are split at top-level `WHEN [NOT] MATCHED` boundaries
-# (string literals masked first) and each segment must then FULLY match
-# exactly one anchored pattern — trailing garbage or an unsupported
-# clause shape raises instead of silently changing semantics (both
-# review-found failure modes of lazier spellings). The lookahead
-# disarms most `CASE WHEN matched ...` expressions over a column
-# literally named "matched": a boundary must be followed by AND, by
-# BY SOURCE, or by THEN + a merge ACTION keyword, so `WHEN matched
-# THEN 1` is not a boundary. Residual limitation (documented): `CASE
-# WHEN matched AND ...` still splits — the segment then fails the
-# anchored fullmatch and the statement is rejected LOUDLY with
-# "unsupported clause" (never a silent semantic change); backtick the
-# column or alias it to sidestep.
-_CLAUSE_BOUNDARY_RE = re.compile(
-    r"\bWHEN\s+(?:NOT\s+)?MATCHED\b"
-    r"(?=\s+(?:BY\s+SOURCE\b|AND\b|THEN\s+(?:UPDATE|DELETE|INSERT)\b))",
-    re.IGNORECASE,
-)
-_WHEN_MATCHED_UPDATE_RE = re.compile(
-    r"WHEN\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+UPDATE\s+SET\s+"
-    r"(?P<sets>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_MATCHED_DELETE_RE = re.compile(
-    r"WHEN\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+DELETE\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+(?:AND\s+(?P<cond>.+?)\s+)?THEN\s+INSERT\s+"
-    r"(?:(?P<star>\*)|\(\s*(?P<cols>[^)]+?)\s*\)\s*VALUES\s*\("
-    r"(?P<vals>.+)\))\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_BY_SOURCE_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(?P<cond>.+?)\s+)?"
-    r"THEN\s+DELETE\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_WHEN_NOT_MATCHED_BY_SOURCE_UPD_RE = re.compile(
-    r"WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+(?:AND\s+(?P<cond>.+?)\s+)?"
-    r"THEN\s+UPDATE\s+SET\s+(?P<sets>.+)$",
-    re.IGNORECASE | re.DOTALL,
+_DELETE_RE = re.compile(r"^\s*DELETE\s+FROM\b", re.IGNORECASE)
+_UPDATE_RE = re.compile(r"^\s*UPDATE\b", re.IGNORECASE)
+
+
+class _Merge(NamedTuple):
+    """A parsed ``MERGE INTO``, as both DML routes consume it. ``source``
+    is a table name, or the USING subquery's text when ``source_query``.
+    ``on`` holds each ``alias.col = alias.col`` term as two name-part
+    tuples. ``matched``, ``inserts`` and ``by_source`` hold each kind's
+    clauses in statement order as ``(cond, action, assigns)``: action
+    update, delete or insert; ``assigns`` the ``(name parts, expr text)``
+    pairs, or None for ``*``. ``subquery``: a clause expression holds
+    a subquery."""
+
+    table: str
+    talias: str | None
+    source: str
+    source_query: bool
+    salias: str | None
+    on: list
+    matched: list
+    inserts: list
+    by_source: list
+    evolve: bool
+    subquery: bool
+
+
+class _Dml(NamedTuple):
+    """A parsed DELETE, UPDATE or ``INSERT ... REPLACE WHERE``: the
+    condition text (None when absent), UPDATE's ``(name parts, expr
+    text)`` assignments, the REPLACE WHERE query text, and whether any
+    of these expressions holds a subquery."""
+
+    table: str
+    cond: str | None
+    assigns: list
+    body: str | None
+    subquery: bool
+
+
+class _Column(NamedTuple):
+    """One parsed CREATE TABLE column: ``identity`` is ``(start, step,
+    always)`` when declared."""
+
+    name: str
+    type: str
+    not_null: bool
+    default: str | None
+    identity: tuple | None
+
+
+_MERGE_CLAUSES = (
+    "supported: UPDATE SET c = expr, ... | UPDATE SET * | DELETE on a "
+    "match; INSERT * | INSERT (cols) VALUES (exprs) on a source row no "
+    "target row matches; UPDATE SET c = expr, ... | DELETE on a target "
+    "row no source row matches (no SET * there: it needs a source row) "
+    "— each with an optional AND condition, several of a kind allowed, "
+    "evaluated in order"
 )
 
 
-def _split_merge_clauses(clauses: str) -> list[str]:
-    """Split a MERGE clause tail into its top-level WHEN segments.
-    Literals are masked so a string containing 'WHEN MATCHED' can't
-    start a clause; segments come back with literals restored."""
-    masked, restore = _mask_literals(clauses)
-    starts = [m.start() for m in _CLAUSE_BOUNDARY_RE.finditer(masked)]
-    if not starts or masked[: starts[0]].strip():
-        raise ValueError(
-            f"MERGE: unsupported clause text (no recognized WHEN "
-            f"[NOT] MATCHED boundary) in {clauses!r}"
+def _engine_error(text: str, e: ParseException) -> ValueError | None:
+    """The engine's error for a ParseException of ``text``, or None to
+    let Spark's stand: MERGE and CREATE TABLE keep the messages they had
+    before Spark parsed them."""
+    cond = e.getCondition() or ""
+    msg = str(e).strip().splitlines()[0]
+    if cond.startswith("NON_LAST_") and cond.endswith("_OMIT_CONDITION"):
+        return ValueError(
+            "MERGE: all but the last clause of a kind must have a "
+            "condition (Delta's ordered-evaluation rule — an "
+            f"unconditional earlier clause would shadow the rest): {msg}"
         )
-    segs = []
-    for a, b in zip(starts, starts[1:] + [len(masked)]):
-        segs.append(restore(masked[a:b]).strip())
-    return segs
-_EQ_PAIR_RE = re.compile(
-    r"^\s*(?P<la>\w+)\s*\.\s*(?P<lc>\w+|`[^`]+`)\s*=\s*"
-    r"(?P<ra>\w+)\s*\.\s*(?P<rc>\w+|`[^`]+`)\s*$"
-)
-_MERGE_ASSIGN_RE = re.compile(
-    r"^\s*(?P<col>(?:\w+\s*\.\s*)?(?:\w+|`[^`]+`))\s*=\s*(?P<expr>.+)$",
-    re.DOTALL,
-)
+    if cond == "CREATE_TABLE_COLUMN_DESCRIPTOR_DUPLICATE":
+        p = e.getMessageParameters()
+        return ValueError(
+            f"CREATE TABLE: duplicate {p['optionName']} clause on column "
+            f"{p['columnName']!r}"
+        )
+    verb = text.split(None, 1)[0].upper()
+    if verb == "MERGE" and cond == "_LEGACY_ERROR_TEMP_0006":
+        return ValueError(
+            "MERGE INSERT: VALUES must give one expression for each of the "
+            "named columns but gives a different number"
+        )
+    if verb == "MERGE":
+        return ValueError(f"MERGE: unsupported clause ({msg}) — {_MERGE_CLAUSES}")
+    if verb == "CREATE":
+        return ValueError(f"CREATE TABLE: {msg}")
+    return None
+
+
+def _parse(spark: SparkSession, query: str):
+    """Parse a MERGE, DELETE, UPDATE, ``INSERT ... REPLACE WHERE`` or
+    column-list CREATE TABLE statement with Spark's own SQL parser and
+    return plain values: ``_Merge``, ``_Dml`` or a list of ``_Column``.
+    The parser is reached through the JVM session, so these statements
+    need classic Spark, not Spark Connect. No Spark job runs.
+
+    ``t@vN`` is spelled ``t VERSION AS OF N`` first (literals and
+    backticked names masked): Spark's grammar has no ``@v``. Expression
+    text is the statement sliced between the smallest start and the
+    largest stop of the subtree's origins, never a rendering of the
+    tree, so the SELECT rewriter and ``F.expr`` see the user's own
+    spelling. Only subtrees whose text is needed are walked."""
+    literals: list[str] = []
+    masked, restore = _mask_literals(query, literals=literals)
+    masked, _ = _mask_literals(masked, _BACKTICK_RE, literals)
+    text = restore(_AT_RE.sub(r"\g<table> VERSION AS OF \g<ver>", masked))
+    try:
+        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+    except ParseException as e:
+        err = _engine_error(text, e)
+        if err is None:
+            raise
+        raise err from e
+    # the plan's own expressions only: a MERGE source or REPLACE WHERE
+    # body is a child plan, whose subqueries do not count
+    subquery = not plan.subqueries().isEmpty()
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    def start(node) -> int | None:
+        # TRUE and FALSE parse to shared Literal singletons: their origin
+        # is whatever was current when Spark first built them
+        if node.nodeName() == "Literal" and node.sql() in ("true", "false"):
+            return None
+        return node.origin().startIndex().get()
+
+    def span(e) -> str:
+        lo = start(e)
+        if lo is None:
+            return e.sql()
+        hi = e.origin().stopIndex().get()
+        # a predicate's own origin starts at its keyword (IN, IS, LIKE,
+        # BETWEEN): its left operand lies down the leftmost children...
+        node = e
+        while not (kids := node.children()).isEmpty():
+            node = kids.head()
+            first = start(node)
+            if first is None or first >= lo:
+                break
+            lo = first
+        # ...and a parenthesized operand's origin leaves out its "("
+        seg, _ = _mask_literals(text[lo : hi + 1])
+        for _ in range(seg.count(")") - seg.count("(")):
+            lo = text.rindex("(", 0, lo)
+        return text[lo : hi + 1]
+
+    def relation(p) -> tuple[str, str | None]:
+        alias = None
+        if p.nodeName() == "SubqueryAlias":
+            alias, p = p.alias(), p.child()
+        return ".".join(seq(p.multipartIdentifier())), alias
+
+    def assigns(action) -> list:
+        return [
+            (tuple(seq(a.key().nameParts())), span(a.value()))
+            for a in seq(action.assignments())
+        ]
+
+    kind = plan.nodeName()
+    if kind == "CreateTable":
+        if not plan.tableSpec().constraints().isEmpty():
+            raise ValueError(
+                "CREATE TABLE: unsupported clause (a PRIMARY KEY, UNIQUE, "
+                "FOREIGN KEY or CHECK constraint; supported: GENERATED "
+                "... AS IDENTITY, DEFAULT expr, NOT NULL)"
+            )
+        cols = []
+        for c in seq(plan.columns()):
+            for clause, opt in (
+                ("COMMENT '{}'", c.comment()),
+                ("GENERATED ALWAYS AS ({})", c.generationExpression()),
+            ):
+                if opt.isDefined():
+                    raise ValueError(
+                        f"CREATE TABLE: unsupported clause "
+                        f"{clause.format(opt.get())!r} on column {c.name()!r} "
+                        "(supported: GENERATED ... AS IDENTITY, DEFAULT "
+                        "expr, NOT NULL)"
+                    )
+            d, i = c.defaultValue(), c.identityColumnSpec()
+            i = i.get() if i.isDefined() else None
+            cols.append(_Column(
+                c.name(), c.dataType().sql(), not c.nullable(),
+                d.get().originalSQL() if d.isDefined() else None,
+                None if i is None else (
+                    i.getStart(), i.getStep(), not i.isAllowExplicitInsert()
+                ),
+            ))
+        return cols
+    if kind == "MergeIntoTable":
+        table, talias = relation(plan.targetTable())
+        src = plan.sourceTable()
+        salias = None
+        if src.nodeName() == "SubqueryAlias":
+            salias, src = src.alias(), src.child()
+        query_src = src.nodeName() != "UnresolvedRelation"
+
+        def terms(e) -> list:
+            if e.nodeName() == "And":
+                return terms(e.left()) + terms(e.right())
+            sides = [e.left(), e.right()] if e.nodeName() == "EqualTo" else []
+            parts = [
+                tuple(seq(s.nameParts()))
+                for s in sides
+                if s.nodeName() == "UnresolvedAttribute"
+            ]
+            if len(parts) != 2 or any(len(p) != 2 for p in parts):
+                raise ValueError(
+                    "MERGE ON must be an equality conjunction of "
+                    f"alias.col = alias.col terms; got {span(e)!r}"
+                )
+            return [tuple(parts)]
+
+        def clause(a) -> tuple:
+            action = a.nodeName()  # UpdateAction, InsertStarAction, ...
+            cond = a.condition()
+            return (
+                span(cond.get()) if cond.isDefined() else None,
+                action.replace("Star", "")[: -len("Action")].lower(),
+                assigns(a) if action in ("UpdateAction", "InsertAction") else None,
+            )
+
+        clauses = [
+            [clause(a) for a in seq(actions)]
+            for actions in (
+                plan.matchedActions(),
+                plan.notMatchedActions(),
+                plan.notMatchedBySourceActions(),
+            )
+        ]
+        return _Merge(
+            table, talias,
+            span(src) if query_src else relation(src)[0], query_src, salias,
+            terms(plan.mergeCondition()), *clauses,
+            plan.withSchemaEvolution(), subquery,
+        )
+    if kind == "OverwriteByExpression":
+        return _Dml(
+            relation(plan.table())[0], span(plan.deleteExpr()), [],
+            span(plan.query()), subquery,
+        )
+    if kind == "DeleteFromTable":
+        cond = span(plan.condition())  # "true" without a WHERE
+        return _Dml(
+            relation(plan.table())[0], None if cond == "true" else cond, [],
+            None, subquery,
+        )
+    if kind == "UpdateTable":
+        cond = plan.condition()
+        return _Dml(
+            relation(plan.table())[0],
+            span(cond.get()) if cond.isDefined() else None,
+            assigns(plan), None, subquery,
+        )
+    raise ValueError(f"cannot run a parsed {kind} statement")
+
+
+def _target_col(parts: tuple, alias: str) -> str:
+    """The column a SET or INSERT target names: ``c``, or ``alias.c``
+    qualified by the statement's target. Any other qualified name comes
+    back dotted, which matches no column."""
+    if len(parts) == 2 and parts[0].lower() == alias.lower():
+        return parts[1]
+    return ".".join(parts)
 _CTAS_RE = re.compile(
     rf"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?TABLE\s+(?P<table>{_IDENT})\s+"
     r"(?:PARTITIONED\s+BY\s*\(\s*(?P<parts>[^()]+?)\s*\)\s+)?"
@@ -540,82 +748,12 @@ _ALTER_CLUSTER_RE = re.compile(
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
-def _parse_coldef(part: str) -> tuple[str, str, str] | None:
-    """(col, type, rest) from one CREATE TABLE column definition, or
-    None. The type consumes a balanced ``<...>`` generic section
-    (MAP/ARRAY/STRUCT nest arbitrarily — beyond a regex) and an
-    optional ``(p[, s])`` precision suffix; ``rest`` carries the
-    IDENTITY/DEFAULT/NOT NULL clauses."""
-    m = re.match(r"\s*(\w+)\s+(\w+)", part)
-    if not m:
-        return None
-    col = m.group(1)
-    j = m.end()
-    k = j
-    while k < len(part) and part[k].isspace():
-        k += 1
-    if k < len(part) and part[k] == "<":
-        depth = 0
-        while k < len(part):
-            if part[k] == "<":
-                depth += 1
-            elif part[k] == ">":
-                depth -= 1
-                if depth == 0:
-                    k += 1
-                    break
-            k += 1
-        if depth != 0:
-            return None
-        j = k
-    k = j
-    while k < len(part) and part[k].isspace():
-        k += 1
-    mp = re.match(r"\(\s*\d+(?:\s*,\s*\d+)?\s*\)", part[k:])
-    if mp:
-        j = k + mp.end()
-    return col, part[m.start(2) : j].strip(), part[j:].strip()
-_COLDEF_IDENTITY_RE = re.compile(
-    r"^\s*GENERATED\s+(?P<mode>ALWAYS|BY\s+DEFAULT)\s+AS\s+IDENTITY"
-    r"(?:\s*\(\s*(?:START\s+WITH\s+(?P<start>-?\d+)"
-    r"(?:\s+INCREMENT\s+BY\s+(?P<step>-?\d+))?"
-    r"|INCREMENT\s+BY\s+(?P<step2>-?\d+))\s*\))?(?P<rest>.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_COLDEF_DEFAULT_RE = re.compile(
-    # the expression ends before any FOLLOWING clause keyword, so a
-    # duplicate DEFAULT (or a trailing GENERATED) surfaces in `rest`
-    # for the duplicate/conflict checks instead of being silently
-    # swallowed into the expression text (r12 review)
-    r"^\s*DEFAULT\s+(?P<expr>.+?)"
-    r"(?P<rest>\s+(?:NOT\s+NULL|DEFAULT\s.+|GENERATED\s.+)\s*)?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_COLDEF_NOT_NULL_RE = re.compile(
-    r"^\s*NOT\s+NULL(?P<rest>.*)$", re.IGNORECASE | re.DOTALL
-)
 _INSERT_RE = re.compile(
     rf"^\s*INSERT\s+INTO\s+(?P<table>{_IDENT})\s*"
     r"(?:\(\s*(?P<cols>[^)]+?)\s*\)\s*)?"
     r"(?P<body>(?:SELECT|VALUES)\b.*?)\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_INSERT_REPLACE_RE = re.compile(
-    rf"^\s*INSERT\s+INTO\s+(?P<table>{_IDENT})\s+REPLACE\s+WHERE\s+"
-    r"(?P<cond>.+?)\s+(?P<body>(?:SELECT|VALUES)\b.*?)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    rf"^\s*DELETE\s+FROM\s+(?P<table>{_IDENT})"
-    r"(?:\s+WHERE\s+(?P<cond>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_UPDATE_RE = re.compile(
-    rf"^\s*UPDATE\s+(?P<table>{_IDENT})\s+SET\s+(?P<sets>.*?)"
-    r"(?:\s+WHERE\s+(?P<cond>.*?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ASSIGN_RE = re.compile(rf"^\s*(?P<col>{_IDENT})\s*=\s*(?P<expr>.+)$", re.DOTALL)
 _CREATE_BRANCH_RE = re.compile(
     rf"^\s*CREATE\s+BRANCH\s+(?P<name>{_IDENT})(?:\s+FROM\s+(?P<src>{_IDENT}))?\s*;?\s*$",
     re.IGNORECASE,
@@ -672,53 +810,6 @@ def _split_top_level(s: str) -> list[str]:
             cur = []
         else:
             cur.append(ch)
-    parts.append("".join(cur))
-    return [restore(p).strip() for p in parts]
-
-
-def _split_coldefs(s: str) -> list[str]:
-    """Split a CREATE TABLE column-definition list on top-level commas:
-    like ``_split_top_level`` but ALSO angle-bracket aware, so complex
-    types keep their internal commas — ``m MAP<STRING, INT>, a INT`` is
-    two definitions (r12 review: the paren-only splitter cut
-    ``MAP<STRING`` in half and surfaced a fragment the user never
-    wrote). A ``<`` opens a bracket level only when the identifier
-    before it is a complex-type keyword (``ARRAY``/``MAP``/``STRUCT``,
-    glued or spaced), so a comparison in a DEFAULT expression
-    (``DEFAULT 1<2`` or ``DEFAULT 1 < 2``) never unbalances the scan
-    (r12 advice: the glued-word rule ate ``DEFAULT 1<2, b INT``)."""
-    masked, restore = _mask_literals(s)
-    parts, depth, angle, cur = [], 0, 0, []
-    # '<' opens a generic-type bracket ONLY after a complex-type keyword
-    # (ARRAY<...>, MAP<...>, STRUCT<...>); a '<' after anything else is a
-    # comparison (e.g. DEFAULT 1<2) and must not swallow the next
-    # top-level comma
-    word: list[str] = []  # identifier being scanned
-    last_word = ""  # most recent completed identifier (survives spaces)
-    for ch in masked:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "<":
-            opener = ("".join(word) or last_word).upper()
-            if opener in ("ARRAY", "MAP", "STRUCT"):
-                angle += 1
-        elif ch == ">" and angle > 0:
-            angle -= 1
-        if ch == "," and depth == 0 and angle == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        if ch.isalnum() or ch == "_":
-            word.append(ch)
-        else:
-            if word:
-                last_word = "".join(word)
-                word = []
-            if not ch.isspace():
-                last_word = ""
     parts.append("".join(cur))
     return [restore(p).strip() for p in parts]
 
@@ -1650,14 +1741,7 @@ class LakeSQL:
             "row_count BIGINT, source STRING",
         )
 
-    def _merge_into(
-        self,
-        table: str,
-        talias: str | None,
-        body: str,
-        clauses: str,
-        evolve: bool = False,
-    ) -> DataFrame:
+    def _merge_into(self, stmt: _Merge) -> DataFrame:
         """``MERGE INTO t [AS a] USING <table|(SELECT ...)> [AS b]
         ON a.k = b.k [AND ...]
         [WHEN MATCHED [AND cond] THEN UPDATE SET * | SET c = expr, ... | DELETE]...
@@ -1666,8 +1750,8 @@ class LakeSQL:
         — SEVERAL clauses of each kind are legal (Delta's full 2.4
         grammar): they evaluate in statement order, the first clause
         whose condition passes acts on the row, and all but the last
-        clause of a kind must carry a condition. Anything left
-        unconsumed raises instead of silently changing semantics.
+        clause of a kind must carry a condition. ``stmt`` is the
+        statement as ``_parse`` read it with Spark's parser.
 
         The Delta MERGE surface a lakehouse actually runs: equality-
         conjunction ON, ordered update/delete clauses on match
@@ -1686,46 +1770,15 @@ class LakeSQL:
         against source keys that actually match a target row, so
         duplicate never-matching keys (a legal multi-row insert)
         pass."""
-        name = self._resolve_table(table)
-        ta = talias or name
-        # split body = "<src> [alias] ON <cond>": a parenthesized source is
-        # scanned for its balanced close (its own JOIN ... ON must not be
-        # mistaken for the merge condition)
-        body = body.strip()
-        if body.startswith("("):
-            depth = 0
-            end = -1
-            for i, ch in enumerate(body):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        end = i
-                        break
-            if end < 0:
-                raise ValueError(f"unbalanced parens in MERGE source: {body!r}")
-            src_text, rest = body[: end + 1], body[end + 1 :]
-            mo = _MERGE_ON_RE.match(rest)
-            if not mo:
-                raise ValueError(f"cannot parse MERGE USING ... ON from: {rest!r}")
-            sdf = self.sql(src_text[1:-1])
-            sa = mo.group("salias")
-            if not sa:
+        name = self._resolve_table(stmt.table)
+        ta = stmt.talias or name
+        if stmt.source_query:
+            if not stmt.salias:
                 raise ValueError("a subquery MERGE source needs an alias")
+            sdf = self.sql(stmt.source)
         else:
-            mi_ = re.match(rf"^({_IDENT})(.*)$", body, re.DOTALL)
-            if not mi_:
-                raise ValueError(f"cannot parse MERGE source: {body!r}")
-            src_name = mi_.group(1).strip("`")
-            mo = _MERGE_ON_RE.match(mi_.group(2))
-            if not mo:
-                raise ValueError(
-                    f"cannot parse MERGE USING ... ON from: {mi_.group(2)!r}"
-                )
-            sdf = self.sql(f"SELECT * FROM {src_name}")
-            sa = mo.group("salias") or src_name
-        cond = mo.group("cond")
+            sdf = self.sql(f"SELECT * FROM {stmt.source}")
+        sa = stmt.salias or stmt.source
         # the lateral __lg_cl clause-index alias (and the DV route's
         # lineage columns) live in the reserved __lg_ namespace; a
         # source or target column there would SHADOW the alias at
@@ -1743,83 +1796,20 @@ class LakeSQL:
         # equality-conjunction ON, sides identified by alias
         t_keys: list[str] = []
         s_keys: list[str] = []
-        for part in re.split(r"\bAND\b", cond, flags=re.IGNORECASE):
-            pm = _EQ_PAIR_RE.match(part)
-            if not pm:
+        for (la, lc), (ra, rc) in stmt.on:
+            sides = {la.lower(): lc, ra.lower(): rc}
+            if set(sides) != {ta.lower(), sa.lower()}:
                 raise ValueError(
-                    f"MERGE ON must be an equality conjunction of "
-                    f"alias.col = alias.col terms; got {part.strip()!r}"
-                )
-            la, lc, ra, rc = (
-                pm.group("la"),
-                pm.group("lc").strip("`"),
-                pm.group("ra"),
-                pm.group("rc").strip("`"),
-            )
-            if la.lower() == ta.lower() and ra.lower() == sa.lower():
-                t_keys.append(lc)
-                s_keys.append(rc)
-            elif la.lower() == sa.lower() and ra.lower() == ta.lower():
-                t_keys.append(rc)
-                s_keys.append(lc)
-            else:
-                raise ValueError(
-                    f"MERGE ON term {part.strip()!r} must relate "
+                    f"MERGE ON term {la}.{lc} = {ra}.{rc} must relate "
                     f"{ta!r} and {sa!r}"
                 )
-        # Clauses collect IN ORDER per kind (Delta r11 semantics: several
+            t_keys.append(sides[ta.lower()])
+            s_keys.append(sides[sa.lower()])
+        # Clauses come IN ORDER per kind (Delta r11 semantics: several
         # clauses of a kind are legal, evaluated in order — the FIRST
-        # clause whose condition passes acts on the row; every clause
-        # except the last of its kind must carry a condition, or the
-        # unconditional earlier clause would shadow the rest).
-        m_raw: list[tuple[str | None, str, re.Match]] = []   # matched
-        i_raw: list[tuple[str | None, re.Match]] = []        # not matched
-        bs_raw: list[tuple[str | None, str, re.Match]] = []  # by source
-        for seg in _split_merge_clauses(clauses):
-            for kind, rx in (
-                ("bsd", _WHEN_NOT_MATCHED_BY_SOURCE_RE),
-                ("bsu", _WHEN_NOT_MATCHED_BY_SOURCE_UPD_RE),
-                ("mu", _WHEN_MATCHED_UPDATE_RE),
-                ("md", _WHEN_MATCHED_DELETE_RE),
-                ("mi", _WHEN_NOT_MATCHED_RE),
-            ):
-                m = rx.fullmatch(seg)
-                if m:
-                    cond = m.group("cond")
-                    if kind in ("mu", "md"):
-                        m_raw.append(
-                            (cond, "update" if kind == "mu" else "delete", m)
-                        )
-                    elif kind == "mi":
-                        i_raw.append((cond, m))
-                    else:
-                        bs_raw.append(
-                            (cond, "update" if kind == "bsu" else "delete", m)
-                        )
-                    break
-            else:
-                raise ValueError(
-                    f"MERGE: unsupported clause {seg!r} — supported: WHEN "
-                    f"MATCHED [AND c] THEN UPDATE SET ...|DELETE, WHEN NOT "
-                    f"MATCHED [AND c] THEN INSERT *|(cols) VALUES (...), "
-                    f"WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET "
-                    f"...|DELETE — several of a kind allowed, evaluated "
-                    f"in order"
-                )
-        for label, entries in (
-            ("WHEN MATCHED", [c for c, _a, _m in m_raw]),
-            ("WHEN NOT MATCHED", [c for c, _m in i_raw]),
-            ("WHEN NOT MATCHED BY SOURCE", [c for c, _a, _m in bs_raw]),
-        ):
-            for cond in entries[:-1]:
-                if cond is None:
-                    raise ValueError(
-                        f"MERGE: with multiple {label} clauses, all but "
-                        f"the last must have a condition (Delta's ordered-"
-                        f"evaluation rule — an unconditional earlier "
-                        f"clause would shadow the rest)"
-                    )
-
+        # clause whose condition passes acts on the row; Spark's parser
+        # already refused an unconditional clause before the last).
+        evolve = stmt.evolve
         target = self.repo.read_table(
             self.spark, name, ref=self.branch, include_staged=True
         )
@@ -1851,33 +1841,13 @@ class LakeSQL:
             # old-columns-only) merge leaves the schema — and the DV
             # route eligibility — untouched even when the source
             # carries extra columns (r11 review).
-            star_used = any(
-                a == "update" and m.group("sets").strip() == "*"
-                for _c, a, m in m_raw
-            ) or any(m.group("star") for _c, m in i_raw)
-            named: set[str] = set()
-            if not star_used:
-                for _c, a, m in m_raw + bs_raw:
-                    if a != "update":
-                        continue
-                    for part in _split_top_level(m.group("sets")):
-                        am = _MERGE_ASSIGN_RE.match(part)
-                        if am:
-                            col = am.group("col").strip("`")
-                            qual = re.match(
-                                rf"^{re.escape(ta)}\s*\.\s*(.+)$",
-                                col,
-                                re.IGNORECASE,
-                            )
-                            if qual:
-                                col = qual.group(1).strip("`")
-                            named.add(col.lower())
-                for _c, m in i_raw:
-                    if not m.group("star"):
-                        named.update(
-                            c.strip().strip("`").lower()
-                            for c in _split_top_level(m.group("cols"))
-                        )
+            clauses = stmt.matched + stmt.by_source + stmt.inserts
+            star_used = any(a != "delete" and asg is None for _c, a, asg in clauses)
+            named = {
+                _target_col(parts, ta).lower()
+                for _c, _a, asg in clauses
+                for parts, _e in asg or ()
+            }
             new_fields = [
                 f
                 for f in candidates
@@ -1917,18 +1887,26 @@ class LakeSQL:
                 f"them before merging"
             )
 
-        def _parse_assigns(sets_text: str) -> dict[str, str]:
+        def _assigns(action: str, asg: list | None) -> dict[str, str] | None:
+            if action == "delete":
+                return None
+            if asg is None:
+                return {
+                    f.name: f"{sa}.`{f.name}`"
+                    for f in target.schema.fields
+                    # with evolution, SET * updates only the source-named
+                    # columns (target-only columns keep their values);
+                    # without it, the strict contract stands — a source
+                    # lacking a target column is a loud analysis error.
+                    # IDENTITY columns are excluded either way: matched
+                    # rows keep their allocated values (they are never
+                    # assignable)
+                    if (not evolve or f.name.lower() in src_lower)
+                    and f.name.lower() not in id_cols
+                }
             out: dict[str, str] = {}
-            for part in _split_top_level(sets_text):
-                am = _MERGE_ASSIGN_RE.match(part)
-                if not am:
-                    raise ValueError(f"cannot parse SET assignment: {part!r}")
-                col = am.group("col").strip("`")
-                qual = re.match(
-                    rf"^{re.escape(ta)}\s*\.\s*(.+)$", col, re.IGNORECASE
-                )
-                if qual:
-                    col = qual.group(1).strip("`")
+            for parts, expr in asg:
+                col = _target_col(parts, ta)
                 if col.lower() not in resolved:
                     raise KeyError(f"MERGE {name!r}: no column {col!r}")
                 if col.lower() in id_cols:
@@ -1942,7 +1920,7 @@ class LakeSQL:
                         f"{mode} AS IDENTITY — identity columns are "
                         "never assignable"
                     )
-                out[resolved[col.lower()]] = am.group("expr").strip()
+                out[resolved[col.lower()]] = expr
             return out
 
         # SET assignments and INSERT column lists parse up front (the
@@ -1950,47 +1928,14 @@ class LakeSQL:
         # typo'd SET/INSERT column raises here regardless of which
         # execution path runs. Clause lists carry (cond, action,
         # col->expr) in statement order.
-        m_clauses: list[tuple[str | None, str, dict[str, str] | None]] = []
-        for cond, action, m in m_raw:
-            if action == "update":
-                sets_text = m.group("sets").strip()
-                if sets_text == "*":
-                    assigns = {
-                        f.name: f"{sa}.`{f.name}`"
-                        for f in target.schema.fields
-                        # with evolution, SET * updates only the
-                        # source-named columns (target-only columns keep
-                        # their values); without it, the strict contract
-                        # stands — a source lacking a target column is a
-                        # loud analysis error. IDENTITY columns are
-                        # excluded either way: matched rows keep their
-                        # allocated values (they are never assignable)
-                        if (not evolve or f.name.lower() in src_lower)
-                        and f.name.lower() not in id_cols
-                    }
-                else:
-                    assigns = _parse_assigns(sets_text)
-                m_clauses.append((cond, "update", assigns))
-            else:
-                m_clauses.append((cond, "delete", None))
-        bs_clauses: list[tuple[str | None, str, dict[str, str] | None]] = []
-        for cond, action, m in bs_raw:
-            if action == "update":
-                sets_text = m.group("sets").strip()
-                if sets_text == "*":
-                    raise ValueError(
-                        "MERGE BY SOURCE UPDATE: SET * needs a source row "
-                        "— name target columns explicitly"
-                    )
-                bs_clauses.append((cond, "update", _parse_assigns(sets_text)))
-            else:
-                bs_clauses.append((cond, "delete", None))
+        m_clauses = [(c, a, _assigns(a, asg)) for c, a, asg in stmt.matched]
+        bs_clauses = [(c, a, _assigns(a, asg)) for c, a, asg in stmt.by_source]
         # insert exprs evaluate in SOURCE scope (the anti join of source
         # against target); unnamed target columns insert as NULL
         # (Delta's explicit-column INSERT rule)
         i_clauses: list[tuple[str | None, dict[str, str]]] = []
-        for cond, m in i_raw:
-            if m.group("star"):
+        for cond, _action, asg in stmt.inserts:
+            if asg is None:
                 id_clash = sorted(id_always & src_lower)
                 if id_clash:
                     # the other paths (INSERT lists, COPY INTO) refuse a
@@ -2004,64 +1949,38 @@ class LakeSQL:
                         "USING source"
                     )
                 i_provided.append((set(id_cols) - id_always) & src_lower)
-                if evolve:
-                    # automerge: target-only columns insert their
-                    # DEFAULT when declared (r12), else NULL; IDENTITY
-                    # columns are engine-allocated after the union
-                    # (except BY DEFAULT ones the source provides)
-                    exprs = {
-                        f.name: (
-                            "NULL"
-                            if f.name.lower() in id_cols
-                            and f.name.lower() not in i_provided[-1]
-                            else f"{sa}.`{f.name}`"
-                            if f.name.lower() in src_lower
-                            else col_defaults.get(f.name.lower(), "NULL")
-                        )
-                        for f in target.schema.fields
-                    }
-                else:
-                    # case-insensitive, like Spark's own resolution (and
-                    # the evolve branch above); IDENTITY columns are
-                    # never expected from the source
-                    missing = [
-                        f.name
-                        for f in target.schema.fields
-                        if f.name.lower() not in src_lower
-                        and f.name.lower() not in id_cols
-                    ]
-                    if missing:
-                        raise ValueError(
-                            f"MERGE INSERT *: source lacks target columns "
-                            f"{missing}"
-                        )
-                    exprs = {
-                        f.name: (
-                            "NULL"
-                            if f.name.lower() in id_cols
-                            and f.name.lower() not in i_provided[-1]
-                            else f"{sa}.`{f.name}`"
-                        )
-                        for f in target.schema.fields
-                    }
-            else:
-                cols = [
-                    c.strip() for c in _split_top_level(m.group("cols"))
+                # case-insensitive, like Spark's own resolution; IDENTITY
+                # columns are never expected from the source
+                missing = [
+                    f.name
+                    for f in target.schema.fields
+                    if f.name.lower() not in src_lower
+                    and f.name.lower() not in id_cols
                 ]
-                vals = _split_top_level(m.group("vals"))
-                if len(cols) != len(vals):
+                if missing and not evolve:
                     raise ValueError(
-                        f"MERGE INSERT: {len(cols)} columns but "
-                        f"{len(vals)} VALUES expressions"
+                        f"MERGE INSERT *: source lacks target columns "
+                        f"{missing}"
                     )
+                # automerge: target-only columns insert their DEFAULT
+                # when declared (r12), else NULL; IDENTITY columns are
+                # engine-allocated after the union (except BY DEFAULT
+                # ones the source provides)
+                exprs = {
+                    f.name: (
+                        "NULL"
+                        if f.name.lower() in id_cols
+                        and f.name.lower() not in i_provided[-1]
+                        else f"{sa}.`{f.name}`"
+                        if f.name.lower() in src_lower
+                        else col_defaults.get(f.name.lower(), "NULL")
+                    )
+                    for f in target.schema.fields
+                }
+            else:
                 named: dict[str, str] = {}
-                for c, v in zip(cols, vals):
-                    col = c.strip("`")
-                    qual = re.match(
-                        rf"^{re.escape(ta)}\s*\.\s*(.+)$", col, re.IGNORECASE
-                    )
-                    if qual:
-                        col = qual.group(1).strip("`")
+                for parts, v in asg:
+                    col = _target_col(parts, ta)
                     if col.lower() not in resolved:
                         raise KeyError(f"MERGE {name!r}: no column {col!r}")
                     if col.lower() in id_always:
@@ -2111,14 +2030,6 @@ class LakeSQL:
         # an unqualified name shared with the source is never ambiguous
         # (review r10 #5: the lexical guard had both false negatives via
         # backticks and false positives via string literals)
-        dv_texts: list[str | None] = []
-        for cond, _action, asg in m_clauses + bs_clauses:
-            dv_texts.append(cond)
-            if asg:
-                dv_texts.extend(asg.values())
-        for cond, exprs in i_clauses:
-            dv_texts.append(cond)
-            dv_texts.extend(exprs.values())
         if (
             # an actually-evolving merge changes the STORED schema —
             # the rewrite route owns that (it overwrites the snapshot
@@ -2126,11 +2037,11 @@ class LakeSQL:
             # source adds no columns routes normally
             not new_fields
             and self._dv_enabled(name)
-            # only the SET/INSERT expressions and the clause conditions
-            # can smuggle a subquery — the ON condition is already
+            # a subquery in a clause binds on the DV route's RAW lineage
+            # read (``_delete``'s rule); the ON condition is already
             # constrained to alias.col equality pairs and the USING
             # source was rewriter-resolved above
-            and self._dv_routable(*dv_texts)
+            and not stmt.subquery
             # generated columns recompute on read; the rewrite path owns
             # that discipline — decline rather than risk storing them
             and not self.repo._generated_names(
@@ -3009,65 +2920,29 @@ class LakeSQL:
         defaults: dict[str, str] = {}
         not_null: list[str] = []
         seen: set[str] = set()
-        for part in _split_coldefs(cols_text):
-            parsed = _parse_coldef(part)
-            if parsed is None:
+        # Spark's parser reads the column list (the newline ends a
+        # trailing comment); PARTITIONED BY and CLUSTER BY stay this
+        # statement's own, since Spark refuses the pair
+        for col in _parse(self.spark, f"CREATE TABLE t ({cols_text}\n)"):
+            low = col.name.lower()
+            if low in seen:
+                raise ValueError(f"CREATE TABLE: duplicate column {col.name!r}")
+            seen.add(low)
+            if col.identity and col.default is not None:
                 raise ValueError(
-                    f"CREATE TABLE: cannot parse column definition "
-                    f"{part.strip()!r}"
-                )
-            col, typ, rest = parsed
-            if col.lower() in seen:
-                raise ValueError(f"CREATE TABLE: duplicate column {col!r}")
-            seen.add(col.lower())
-            while rest:
-                mi = _COLDEF_IDENTITY_RE.match(rest)
-                if mi:
-                    if col.lower() in identity:
-                        raise ValueError(
-                            f"CREATE TABLE: duplicate IDENTITY clause "
-                            f"on column {col!r}"
-                        )
-                    identity[col.lower()] = self.repo.build_identity_entry(
-                        col,
-                        typ,
-                        int(mi.group("start") or 1),
-                        int(mi.group("step") or mi.group("step2") or 1),
-                        always=mi.group("mode").upper() == "ALWAYS",
-                    )
-                    rest = (mi.group("rest") or "").strip()
-                    continue
-                md = _COLDEF_DEFAULT_RE.match(rest)
-                if md:
-                    if col.lower() in defaults:
-                        raise ValueError(
-                            f"CREATE TABLE: duplicate DEFAULT clause "
-                            f"on column {col!r}"
-                        )
-                    defaults[col.lower()] = md.group("expr").strip()
-                    rest = (md.group("rest") or "").strip()
-                    continue
-                mn = _COLDEF_NOT_NULL_RE.match(rest)
-                if mn:
-                    if col in not_null:
-                        raise ValueError(
-                            f"CREATE TABLE: duplicate NOT NULL clause "
-                            f"on column {col!r}"
-                        )
-                    not_null.append(col)
-                    rest = (mn.group("rest") or "").strip()
-                    continue
-                raise ValueError(
-                    f"CREATE TABLE: unsupported clause {rest!r} on "
-                    f"column {col!r} (supported: GENERATED ALWAYS AS "
-                    f"IDENTITY, DEFAULT expr, NOT NULL)"
-                )
-            if col.lower() in identity and col.lower() in defaults:
-                raise ValueError(
-                    f"CREATE TABLE: column {col!r} cannot be both "
+                    f"CREATE TABLE: column {col.name!r} cannot be both "
                     "IDENTITY and DEFAULT"
                 )
-            defs.append((col, typ))
+            if col.identity:
+                start, step, always = col.identity
+                identity[low] = self.repo.build_identity_entry(
+                    col.name, col.type, start, step, always=always
+                )
+            if col.default is not None:
+                defaults[low] = col.default
+            if col.not_null:
+                not_null.append(col.name)
+            defs.append((col.name, col.type))
         parts = _parse_partition_spec(parts_text, [c for c, _ in defs])
         for p in parts:
             if p.lower() in identity:
@@ -3400,7 +3275,7 @@ class LakeSQL:
             cached.unpersist(blocking=False)
         return self._dml_result(name, c.version, rows)
 
-    def _insert_replace(self, table: str, cond: str, body: str) -> DataFrame:
+    def _insert_replace(self, stmt: _Dml) -> DataFrame:
         """``INSERT INTO t REPLACE WHERE cond SELECT ...`` — Delta's
         atomic partition/predicate-scoped overwrite: rows matching
         ``cond`` are deleted and the source rows land, in ONE commit.
@@ -3414,8 +3289,8 @@ class LakeSQL:
         aligned cond rewrites only the matching partition dirs); the
         insert half is one append. Both land in one staged unit, so a
         reader never sees the gap between delete and insert."""
-        name = self._resolve_table(table)
-        if not self._dv_routable(cond):
+        name, cond, body = self._resolve_table(stmt.table), stmt.cond, stmt.body
+        if stmt.subquery:
             # cond is bound with raw F.expr on DataFrames (violation
             # check + delete filters), where a subquery's table names
             # resolve against the SPARK SESSION CATALOG, not the repo
@@ -3543,7 +3418,7 @@ class LakeSQL:
             return None
         return safe, cand, info
 
-    def _delete(self, table: str, cond: str | None) -> DataFrame:
+    def _delete(self, stmt: _Dml) -> DataFrame:
         """DELETE FROM t [WHERE cond] — rows where cond IS TRUE are
         removed (NULL-condition rows survive, ANSI DELETE semantics);
         the snapshot is rewritten and committed. The condition runs
@@ -3554,9 +3429,18 @@ class LakeSQL:
         files that may hold matching rows; provably match-free files are
         carried into the new commit by reference — zero bytes rewritten
         for them, the Delta data-skipping cost model. Any failure in the
-        pruned path falls back to the full rewrite."""
-        name = self._resolve_table(table)
-        if cond is not None and self._dv_enabled(name) and self._dv_routable(cond):
+        pruned path falls back to the full rewrite.
+
+        A DV DELETE binds its condition on a RAW lineage read, where a
+        subquery's table names resolve against the SPARK SESSION CATALOG
+        instead of the repo rewriter — a user temp view named like a
+        repo table would silently change which rows match (the rewriter
+        scopes its own views under lake__ precisely to coexist with user
+        views). A parsed subquery therefore keeps DELETE, UPDATE and
+        MERGE off the DV route; plain column expressions can't reach
+        foreign tables."""
+        name, cond = self._resolve_table(stmt.table), stmt.cond
+        if cond is not None and self._dv_enabled(name) and not stmt.subquery:
             out = self._try_dv_dml(
                 name, lambda: self.repo.delete_where_dv(
                     self.spark, self.branch, name, cond
@@ -3591,21 +3475,6 @@ class LakeSQL:
         self.repo.write_table(self.branch, name, kept, mode="overwrite")
         c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
         return self._dml_result(name, c.version, rows)
-
-    @staticmethod
-    def _dv_routable(*texts: str | None) -> bool:
-        """A DV DML binds its texts on a RAW lineage read, where any
-        subquery's table names resolve against the SPARK SESSION CATALOG
-        instead of the repo rewriter — a user temp view named like a
-        repo table would silently change which rows match (the rewriter
-        scopes its own views under lake__ precisely to coexist with
-        user views). Any embedded SELECT therefore disqualifies the DV
-        route up front; plain column expressions can't reach foreign
-        tables."""
-        return not any(
-            t is not None and re.search(r"\bSELECT\b", t, re.IGNORECASE)
-            for t in texts
-        )
 
     def _try_dv_dml(self, name: str, op, meta_key: str, stmt: str) -> DataFrame | None:
         """Run a deletion-vector DML; None means "fall back to the
@@ -3870,13 +3739,13 @@ class LakeSQL:
         self.repo.stage_table_files(self.branch, name, files)
         return rows
 
-    def _update(self, table: str, sets: str, cond: str | None) -> DataFrame:
+    def _update(self, stmt: _Dml) -> DataFrame:
         """UPDATE t SET c = expr, ... [WHERE cond] — rewritten as one
         projection (CASE WHEN cond IS TRUE THEN expr ELSE c END, cast
         back to the column's type so the table schema never drifts).
         Generated column references are backticked, so a column named
         like a repo table survives the lexical table rewrite."""
-        name = self._resolve_table(table)
+        name, cond = self._resolve_table(stmt.table), stmt.cond
         target = self.repo.read_table(self.spark, name, ref=self.branch, include_staged=True)
         id_cols = self.repo.identity_columns(name, self.branch)
         gen_cols = self.repo._generated_names(
@@ -3884,11 +3753,8 @@ class LakeSQL:
         )
         resolved = {f.name.lower(): f.name for f in target.schema.fields}
         assigns: dict[str, str] = {}
-        for part in _split_top_level(sets):
-            m = _ASSIGN_RE.match(part)
-            if not m:
-                raise ValueError(f"cannot parse SET assignment: {part!r}")
-            col = m.group("col")
+        for parts, expr in stmt.assigns:
+            col = _target_col(parts, name)
             if col.lower() not in resolved:
                 raise KeyError(f"UPDATE {name!r}: no column {col!r}")
             if col.lower() in gen_cols:
@@ -3907,12 +3773,8 @@ class LakeSQL:
                     f"{mode} AS IDENTITY — identity columns are never "
                     "assignable"
                 )
-            assigns[resolved[col.lower()]] = m.group("expr").strip()
-        if (
-            cond is not None
-            and self._dv_enabled(name)
-            and self._dv_routable(cond, *assigns.values())
-        ):
+            assigns[resolved[col.lower()]] = expr
+        if cond is not None and self._dv_enabled(name) and not stmt.subquery:
             # conditioned UPDATE → vector-append + image-append commit
             # (a condition-less UPDATE touches every row: the rewrite IS
             # the cheaper spelling there, so it keeps that path)
@@ -4514,12 +4376,9 @@ _STATEMENTS = (
     (_CREATE_SCHEMA_RE.match, lambda s, m: s._create_table_schema(
         m.group("table"), m.group("cols"), bool(m.group("replace")),
         m.group("parts"), m.group("clus"))),
-    (_INSERT_REPLACE_RE.match, lambda s, m: s._insert_replace(
-        m.group("table"), m.group("cond"), m.group("body"))),
+    (_INSERT_REPLACE_RE.match, lambda s, m: s._insert_replace(_parse(s.spark, m.string))),
     (_INSERT_RE.match, lambda s, m: s._insert(m.group("table"), m.group("body"), m.group("cols"))),
-    (_MERGE_INTO_RE.match, lambda s, m: s._merge_into(
-        m.group("table"), m.group("talias"), m.group("body"), m.group("clauses"),
-        evolve=m.group("evolve") is not None)),
-    (_DELETE_RE.match, lambda s, m: s._delete(m.group("table"), m.group("cond"))),
-    (_UPDATE_RE.match, lambda s, m: s._update(m.group("table"), m.group("sets"), m.group("cond"))),
+    (_MERGE_INTO_RE.match, lambda s, m: s._merge_into(_parse(s.spark, m.string))),
+    (_DELETE_RE.match, lambda s, m: s._delete(_parse(s.spark, m.string))),
+    (_UPDATE_RE.match, lambda s, m: s._update(_parse(s.spark, m.string))),
 )

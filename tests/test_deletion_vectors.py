@@ -1910,3 +1910,136 @@ def test_dv_keys_spell_files_as_spark_does_and_round_trip(spark, tmp_path):
     stored = spark.createDataFrame([(rel, 0), (rel, 1)], "file string, pos long")
     assert sorted(repo._dv_keys(spark, stored, scanned).collect()) == sorted(scanned.collect())
     assert sorted(repo._dv_rows(spark, scanned).collect()) == sorted(stored.collect())
+
+
+def test_repo_paths_with_glob_characters_read_back(spark, tmp_path):
+    """Spark globs every path it reads, but repo paths are data: the DV
+    script answers under a root holding ``[``, ``{`` and ``?`` as under
+    a plain one, and partition values holding ``[`` and ``{`` read back
+    under such a root."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    root = tmp_path / "br[1]" / "cu{a}" / "q?"
+    plain = _dv_dml_script(spark, str(tmp_path / "plain"))
+    assert _dv_dml_script(spark, str(root)) == plain
+    repo = LakeRepo.init(str(root / "parts"))
+    sql = LakeSQL(spark, repo, "main")
+    sql.sql("CREATE TABLE p (k INT, g STRING) PARTITIONED BY (g)")
+    sql.sql("INSERT INTO p VALUES (1, 'a[1]'), (2, 'b{2}'), (3, 'c')")
+    sql.sql("DELETE FROM p WHERE g = 'c'")
+    got = sorted(tuple(r) for r in repo.read_table(spark, "p", "main").collect())
+    assert got == [(1, "a[1]"), (2, "b{2}")]
+
+
+# (as users write it, a spelling the keyword-and-regex parser also read)
+_PARITY = [
+    (
+        "MERGE INTO t USING (SELECT k, v, ')' AS x FROM s) b ON t.k = b.k "
+        "WHEN MATCHED THEN UPDATE SET v = b.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v, matched) VALUES (b.k, b.v, false)",
+        "MERGE INTO t USING (SELECT k, v FROM s) b ON t.k = b.k "
+        "WHEN MATCHED THEN UPDATE SET v = b.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v, matched) VALUES (b.k, b.v, false)",
+    ),
+    (
+        "MERGE INTO t USING s ON t.k = s.k -- keys\n"
+        "WHEN MATCHED THEN UPDATE SET v = s.v + 1",
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v + 1",
+    ),
+    (
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND CASE WHEN "
+        "matched AND s.v > 110 THEN true ELSE false END THEN UPDATE SET v = 0",
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND CASE WHEN "
+        "`matched` AND s.v > 110 THEN true ELSE false END THEN UPDATE SET v = 0",
+    ),
+    ("UPDATE t SET v = 100 -- bump\nWHERE k = 2", "UPDATE t SET v = 100 WHERE k = 2"),
+    ("DELETE FROM t WHERE k = 3 -- just three", "DELETE FROM t WHERE k = 3"),
+]
+
+
+def test_dml_spellings_agree_on_both_routes(spark, tmp_path):
+    """A comment, a ``)`` in a source literal and ``CASE WHEN matched``
+    over a column named ``matched`` change nothing: on the DV and the
+    copy-on-write route alike, each statement gives the rows and
+    ``rows_affected`` of its plain spelling, and the routes agree."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    finals = []
+    for dv in (True, False):
+        repo = LakeRepo.init(str(tmp_path / f"dv{dv}"))
+        repo.write_table(
+            "main", "t", _kv(spark, 0, 12).withColumn("matched", F.col("k") % 2 == 0)
+        )
+        repo.write_table("main", "s", _kv(spark, 8, 16).withColumn("v", F.col("v") * 7))
+        repo.commit("main", "base")
+        repo.create_branch("plain", "main")
+        got, want = LakeSQL(spark, repo, "main", dv), LakeSQL(spark, repo, "plain", dv)
+        for stmt, plain in _PARITY:
+            assert got.sql(stmt).first().rows_affected == (
+                want.sql(plain).first().rows_affected
+            ), stmt
+        rows = [
+            sorted(tuple(r) for r in repo.read_table(spark, "t", b).collect())
+            for b in ("main", "plain")
+        ]
+        assert rows[0] == rows[1]
+        finals.append(rows[0])
+    assert finals[0] == finals[1]
+
+
+@pytest.mark.parametrize("dv", [True, False])
+def test_at_version_shorthand_inside_parsed_dml(spark, repo, dv):
+    """``s@vN`` (MIGRATION.md) reads like ``s VERSION AS OF N`` inside a
+    MERGE source subquery and a DELETE condition's subquery."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 12))
+    repo.write_table("main", "s", _kv(spark, 6, 10))
+    v = repo.commit("main", "base").version
+    repo.write_table("main", "s", _kv(spark, 0, 3))
+    repo.commit("main", "s moves on")
+    repo.create_branch("asof", "main")
+    at, asof = LakeSQL(spark, repo, "main", dv), LakeSQL(spark, repo, "asof", dv)
+    for short, long in (
+        (
+            f"MERGE INTO t USING (SELECT k, v * 5 AS v FROM s@v{v}) b ON t.k = b.k "
+            "WHEN MATCHED THEN UPDATE SET v = b.v",
+            f"MERGE INTO t USING (SELECT k, v * 5 AS v FROM s VERSION AS OF {v}) b "
+            "ON t.k = b.k WHEN MATCHED THEN UPDATE SET v = b.v",
+        ),
+        (
+            f"DELETE FROM t WHERE k IN (SELECT k + 1 FROM s@v{v})",
+            f"DELETE FROM t WHERE k IN (SELECT k + 1 FROM s VERSION AS OF {v})",
+        ),
+    ):
+        assert at.sql(short).first().rows_affected == asof.sql(long).first().rows_affected == 4
+        assert sorted(repo.read_table(spark, "t", "main").collect()) == sorted(
+            repo.read_table(spark, "t", "asof").collect()
+        )
+
+
+def test_parsed_expression_text_is_the_users_own(spark):
+    """Expression text is the statement's own slice: a predicate's left
+    operand (parenthesized or a CAST) is kept whole, and TRUE/FALSE,
+    which Spark parses to shared literals with a stale origin, come back
+    as written. A DELETE without WHERE has no condition."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import _parse
+
+    upd = _parse(
+        spark,
+        "UPDATE t SET a = true, b = false WHERE (k + 1) IN (3, 4) "
+        "AND CAST(v AS INT) BETWEEN 1 AND (3) AND true = flag -- note",
+    )
+    assert upd.cond == (
+        "(k + 1) IN (3, 4) AND CAST(v AS INT) BETWEEN 1 AND (3) AND true = flag"
+    )
+    assert upd.assigns == [(("a",), "true"), (("b",), "false")]
+    assert _parse(spark, "DELETE FROM t").cond is None
+    m = _parse(
+        spark,
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND (s.v) IS NULL "
+        "THEN UPDATE SET t.m = false WHEN NOT MATCHED THEN INSERT (k, m) "
+        "VALUES (s.k, true)",
+    )
+    assert m.matched == [("(s.v) IS NULL", "update", [(("t", "m"), "false")])]
+    assert m.inserts == [(None, "insert", [(("k",), "s.k"), (("m",), "true")])]

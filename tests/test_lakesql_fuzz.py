@@ -238,7 +238,7 @@ def test_view_name_in_literal_survives(view_env):
     assert r[0].s == "recent FROM recent" and r[0].n == 5
 
 
-# CREATE TABLE column-definition splitter (r13) ------------------------------
+# CREATE TABLE column-definition list (r13) ---------------------------------
 
 _COLTYPES = st.sampled_from(
     [
@@ -269,13 +269,18 @@ _COLDEF_TAILS = st.sampled_from(
 
 @given(defs=st.lists(st.tuples(_COLTYPES, _COLDEF_TAILS), min_size=1, max_size=6))
 @settings(deadline=None, max_examples=80)
-def test_split_coldefs_roundtrips(defs):
-    """Joining N column definitions with commas and re-splitting yields
-    exactly the N definitions — commas inside generic types (nested
-    MAP/ARRAY/STRUCT), DECIMAL precision, and literals never split, and
-    comparison operators in DEFAULT expressions (glued or spaced) never
-    open a phantom type bracket (ADVICE r12)."""
-    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import _split_coldefs
+def test_create_table_column_list_roundtrips(spark, defs):
+    """Joining N column definitions with commas and parsing the CREATE
+    TABLE yields exactly the N columns — commas inside generic types
+    (nested MAP/ARRAY/STRUCT), DECIMAL precision, and literals never
+    split a definition, and a DEFAULT expression holding a comparison
+    (glued or spaced) comes back as written (ADVICE r12)."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import _parse
 
     parts = [f"c{i} {t}{tail}" for i, (t, tail) in enumerate(defs)]
-    assert _split_coldefs(", ".join(parts)) == parts
+    cols = _parse(spark, f"CREATE TABLE t ({', '.join(parts)})")
+    assert [c.name for c in cols] == [f"c{i}" for i in range(len(defs))]
+    for c, (t, tail) in zip(cols, defs):
+        assert c.type.replace(" ", "") == t.replace(" ", "")
+        assert c.not_null == (tail == " NOT NULL")
+        assert c.default == (tail[len(" DEFAULT ") :] if "DEFAULT" in tail else None)

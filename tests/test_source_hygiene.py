@@ -47,3 +47,38 @@ def test_lineage_key_prefix_is_spelled_once():
         and node.value.startswith("file:")
     ]
     assert len(hits) == 1, f"'file:' prefix spelled {len(hits)} times: {hits}"
+
+
+def test_sql_parser_handle_is_reached_once():
+    """Spark's SQL parser is reached through a private JVM handle. One
+    function reaches it (``versioning/sql.py``'s ``_parse``), so the
+    statements parsed there share one error and text-slicing policy."""
+    hits = [
+        f"{path.relative_to(PACKAGE.parent)}:{node.lineno}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "sqlParser"
+    ]
+    assert len(hits) == 1, f"sqlParser reached {len(hits)} times: {hits}"
+
+
+def test_merge_grammar_is_not_spelled_in_the_sql_module():
+    """MERGE's clause grammar is Spark's: no string constant in
+    ``versioning/sql.py`` other than a docstring spells ``MATCHED``."""
+    tree = ast.parse((PACKAGE / "versioning" / "sql.py").read_text())
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef))
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+    }
+    hits = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "MATCHED" in node.value
+        and id(node) not in docs
+    ]
+    assert not hits, f"MATCHED spelled at sql.py lines {hits}"
