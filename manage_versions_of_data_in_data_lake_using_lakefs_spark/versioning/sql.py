@@ -81,7 +81,10 @@ name referenced in the same query would be rewritten too — the standard
 hazard of rewriting identifiers without a parse tree (backtick-quote the
 column to protect it); and a backticked table ref in a comma-separated
 FROM list (``FROM a, `events```) is treated as opaque rather than
-resolved (spell it with JOIN, or drop the redundant backticks).
+resolved (spell it with JOIN, or drop the redundant backticks). In
+parsed DML, a comment between a ``(`` and the left operand it opens
+(``( /* c */ k) IN (1)``) leaves that ``(`` out of the condition's
+text, which then fails to parse.
 """
 
 from __future__ import annotations
@@ -124,6 +127,12 @@ _LITERAL_RE = re.compile(r"'(?:[^'\\]|''|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
 # bare-name rewrite can never touch text inside it (`order-events` must
 # not become `order-lake__events`)
 _BACKTICK_RE = re.compile(r"`[^`]*`")
+# what may hold an unbalanced parenthesis inside parsed expression text
+_OPAQUE_RE = re.compile(
+    rf"{_LITERAL_RE.pattern}|{_BACKTICK_RE.pattern}|--[^\n]*|/\*.*?\*/", re.S
+)
+# a TRUE or FALSE left operand, possibly parenthesized, ending the text
+_BOOL_BEFORE_RE = re.compile(r"\b(?:true|false)[\s)]*$", re.I)
 _MASK_RE = re.compile(r"\x00(\d+)\x00")
 
 
@@ -595,19 +604,27 @@ def _parse(spark: SparkSession, query: str):
         if lo is None:
             return e.sql()
         hi = e.origin().stopIndex().get()
-        # a predicate's own origin starts at its keyword (IN, IS, LIKE,
-        # BETWEEN): its left operand lies down the leftmost children...
+        # a predicate's own origin starts at its keyword (NOT, IN, IS,
+        # LIKE, BETWEEN), and so does a NOT wrapped round it: its left
+        # operand lies down the leftmost children, a TRUE or FALSE one
+        # written just before the keyword...
         node = e
         while not (kids := node.children()).isEmpty():
             node = kids.head()
             first = start(node)
-            if first is None or first >= lo:
+            if first is None:
+                if m := _BOOL_BEFORE_RE.search(text, 0, lo):
+                    lo = m.start()
                 break
-            lo = first
-        # ...and a parenthesized operand's origin leaves out its "("
-        seg, _ = _mask_literals(text[lo : hi + 1])
+            lo = min(lo, first)
+        # ...and a parenthesized operand's origin leaves out its "(",
+        # which is the text just before it
+        seg, _ = _mask_literals(text[lo : hi + 1], _OPAQUE_RE)
         for _ in range(seg.count(")") - seg.count("(")):
-            lo = text.rindex("(", 0, lo)
+            before = text[:lo].rstrip()
+            if not before.endswith("("):
+                break
+            lo = len(before) - 1
         return text[lo : hi + 1]
 
     def relation(p) -> tuple[str, str | None]:

@@ -1954,6 +1954,14 @@ _PARITY = [
     ),
     ("UPDATE t SET v = 100 -- bump\nWHERE k = 2", "UPDATE t SET v = 100 WHERE k = 2"),
     ("DELETE FROM t WHERE k = 3 -- just three", "DELETE FROM t WHERE k = 3"),
+    (
+        "DELETE FROM t WHERE k NOT IN (0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11)",
+        "DELETE FROM t WHERE k >= 12",
+    ),
+    (
+        "UPDATE t SET v = 1 WHERE v IS DISTINCT FROM k * 2",
+        "UPDATE t SET v = 1 WHERE NOT (v <=> k * 2)",
+    ),
 ]
 
 
@@ -2043,3 +2051,17 @@ def test_parsed_expression_text_is_the_users_own(spark):
     )
     assert m.matched == [("(s.v) IS NULL", "update", [(("t", "m"), "false")])]
     assert m.inserts == [(None, "insert", [(("k",), "s.k"), (("m",), "true")])]
+    # a negated predicate is Not(<predicate>), both starting at NOT; a
+    # ")" in a comment or a backticked name is not a parenthesis
+    for cond in (
+        "k NOT IN (1, 2)",
+        "name NOT LIKE 'a%'",
+        "a IS DISTINCT FROM b",
+        "(k + 1) NOT BETWEEN 1 AND 3",
+        "TRUE IN (a, b)",
+        "(`a)b`) IN (1)",
+    ):
+        assert _parse(spark, f"DELETE FROM t WHERE {cond}").cond == cond
+    assert _parse(spark, "UPDATE t SET v = abs(v) + (k /* ) */)").assigns == [
+        (("v",), "abs(v) + (k /* ) */)")
+    ]
