@@ -616,7 +616,9 @@ def _parse(spark: SparkSession, query: str):
                 if m := _BOOL_BEFORE_RE.search(text, 0, lo):
                     lo = m.start()
                 break
-            lo = min(lo, first)
+            if first > lo:
+                break
+            lo = first
         # ...and a parenthesized operand's origin leaves out its "(",
         # which is the text just before it
         seg, _ = _mask_literals(text[lo : hi + 1], _OPAQUE_RE)
