@@ -133,6 +133,8 @@ _OPAQUE_RE = re.compile(
 )
 # a TRUE or FALSE left operand, possibly parenthesized, ending the text
 _BOOL_BEFORE_RE = re.compile(r"\b(?:true|false)[\s)]*$", re.I)
+# the keyword that opens a FROM-first or a TABLE query, ending the text
+_QUERY_LEAD_RE = re.compile(r"\b(?:FROM|TABLE)\s*$", re.I)
 _MASK_RE = re.compile(r"\x00(\d+)\x00")
 
 
@@ -599,7 +601,11 @@ def _parse(spark: SparkSession, query: str):
             return None
         return node.origin().startIndex().get()
 
-    def span(e) -> str:
+    def span(e, query: bool = False) -> str:
+        if e.nodeName() == "Exists":
+            # built under its parent's origin (the whole statement for a
+            # WHERE), not one of its own: its text is its subquery's
+            return f"EXISTS ({span(e.plan(), True)})"
         lo = start(e)
         if lo is None:
             return e.sql()
@@ -607,7 +613,8 @@ def _parse(spark: SparkSession, query: str):
         # a predicate's own origin starts at its keyword (NOT, IN, IS,
         # LIKE, BETWEEN), and so does a NOT wrapped round it: its left
         # operand lies down the leftmost children, a TRUE or FALSE one
-        # written just before the keyword...
+        # written just before the keyword. A query hint's origin is its
+        # /*+ */ comment alone, inside the query below it...
         node = e
         while not (kids := node.children()).isEmpty():
             node = kids.head()
@@ -619,6 +626,12 @@ def _parse(spark: SparkSession, query: str):
             if first > lo:
                 break
             lo = first
+            if query:
+                hi = max(hi, node.origin().stopIndex().get())
+        # ...the FROM of a FROM-first query and the TABLE of ``TABLE t``
+        # are in no origin...
+        if query and (m := _QUERY_LEAD_RE.search(text, 0, lo)):
+            lo = m.start()
         # ...and a parenthesized operand's origin leaves out its "(",
         # which is the text just before it
         seg, _ = _mask_literals(text[lo : hi + 1], _OPAQUE_RE)
@@ -715,14 +728,14 @@ def _parse(spark: SparkSession, query: str):
         ]
         return _Merge(
             table, talias,
-            span(src) if query_src else relation(src)[0], query_src, salias,
+            span(src, True) if query_src else relation(src)[0], query_src, salias,
             terms(plan.mergeCondition()), *clauses,
             plan.withSchemaEvolution(), subquery,
         )
     if kind == "OverwriteByExpression":
         return _Dml(
             relation(plan.table())[0], span(plan.deleteExpr()), [],
-            span(plan.query()), subquery,
+            span(plan.query(), True), subquery,
         )
     if kind == "DeleteFromTable":
         cond = span(plan.condition())  # "true" without a WHERE

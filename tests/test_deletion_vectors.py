@@ -1962,6 +1962,16 @@ _PARITY = [
         "UPDATE t SET v = 1 WHERE v IS DISTINCT FROM k * 2",
         "UPDATE t SET v = 1 WHERE NOT (v <=> k * 2)",
     ),
+    (
+        "UPDATE t SET v = -1 WHERE EXISTS (SELECT 1 FROM s WHERE s.k = t.k)",
+        "UPDATE t SET v = -1 WHERE k >= 8",
+    ),
+    (
+        "MERGE INTO t USING (FROM s SELECT /*+ BROADCAST(s) */ k, v + 1 AS v) b "
+        "ON t.k = b.k WHEN MATCHED THEN UPDATE SET v = b.v",
+        "MERGE INTO t USING (SELECT k, v + 1 AS v FROM s) b "
+        "ON t.k = b.k WHEN MATCHED THEN UPDATE SET v = b.v",
+    ),
 ]
 
 
@@ -2060,8 +2070,22 @@ def test_parsed_expression_text_is_the_users_own(spark):
         "(k + 1) NOT BETWEEN 1 AND 3",
         "TRUE IN (a, b)",
         "(`a)b`) IN (1)",
+        "EXISTS (SELECT 1 FROM s WHERE s.k = t.k)",
+        "NOT EXISTS (SELECT 1)",
+        "EXISTS ((SELECT 1) ORDER BY 1)",
     ):
         assert _parse(spark, f"DELETE FROM t WHERE {cond}").cond == cond
+    # an EXISTS takes its parent's origin, the whole statement at the top
+    assert _parse(spark, "UPDATE t SET m = EXISTS (SELECT 1)").assigns == [
+        (("m",), "EXISTS (SELECT 1)")
+    ]
+    # a hint's origin is its comment alone; the FROM of a FROM-first query
+    # and the TABLE of a TABLE query are in no origin
+    src = "FROM s SELECT /*+ BROADCAST(s) */ k, v"
+    assert _parse(
+        spark, f"MERGE INTO t USING ({src}) b ON t.k = b.k WHEN MATCHED THEN DELETE"
+    ).source == src
+    assert _parse(spark, "INSERT INTO t REPLACE WHERE k > 1 TABLE s").body == "TABLE s"
     assert _parse(spark, "UPDATE t SET v = abs(v) + (k /* ) */)").assigns == [
         (("v",), "abs(v) + (k /* ) */)")
     ]
