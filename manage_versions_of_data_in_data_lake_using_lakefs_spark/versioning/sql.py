@@ -601,7 +601,7 @@ def _parse(spark: SparkSession, query: str):
             return None
         return node.origin().startIndex().get()
 
-    def span(e, query: bool = False) -> str:
+    def span(e, is_query: bool = False) -> str:
         if e.nodeName() == "Exists":
             # built under its parent's origin (the whole statement for a
             # WHERE), not one of its own: its text is its subquery's
@@ -626,11 +626,11 @@ def _parse(spark: SparkSession, query: str):
             if first > lo:
                 break
             lo = first
-            if query:
+            if is_query:
                 hi = max(hi, node.origin().stopIndex().get())
         # ...the FROM of a FROM-first query and the TABLE of ``TABLE t``
         # are in no origin...
-        if query and (m := _QUERY_LEAD_RE.search(text, 0, lo)):
+        if is_query and (m := _QUERY_LEAD_RE.search(text, 0, lo)):
             lo = m.start()
         # ...and a parenthesized operand's origin leaves out its "(",
         # which is the text just before it
