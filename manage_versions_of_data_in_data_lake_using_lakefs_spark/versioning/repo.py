@@ -446,8 +446,8 @@ class LakeRepo:
         if not _internal:
             _check_name_unreserved(table, "table")
         # the __lg_ COLUMN namespace is reserved for engine internals
-        # (row lineage __lg_fp/__lg_ri, MERGE's clause index __lg_cl,
-        # fate tags): a stored column there would shadow those at
+        # (row lineage __lg_fp/__lg_ri, MERGE's clause index __lg_cl):
+        # a stored column there would shadow those at
         # resolution time — Spark resolves FROM columns before lateral
         # aliases, case-insensitively — and silently corrupt DV DML and
         # MERGE clause selection (r11 review)
@@ -2762,9 +2762,11 @@ class LakeRepo:
         include_staged: bool = False,
         merge_schema: bool = False,
         prune_where: str | None = None,
+        lineage: bool = False,
     ) -> DataFrame:
         """Read a table snapshot. ``ref`` may be a branch, commit id, or
         ``branch~n``; ``version_as_of`` pins a global version (V14).
+        ``lineage=True`` keeps each row's ``__lg_fp``/``__lg_ri`` keys.
         ``merge_schema=True`` unions the schemas of all snapshot files
         (columns added by later appends surface as null on older rows) at
         the cost of reading every file's footer — leave off for
@@ -2814,9 +2816,10 @@ class LakeRepo:
                     dv = committed_dv(self.get_commit(refd["head"]))
                 files = entry["files"]
                 df = self._read_files(
-                    spark, self._pruned(files, prune_where), ms, with_lineage=bool(dv)
+                    spark, self._pruned(files, prune_where), ms,
+                    with_lineage=lineage or bool(dv),
                 )
-                df = self._apply_dv(spark, df, dv) if dv else df
+                df = self._apply_dv(spark, df, dv, lineage) if dv else df
                 return self.apply_schema_map(df, steps) if steps else df
             decided, dv_staged = staged_dv(refd)
         else:
@@ -2826,9 +2829,10 @@ class LakeRepo:
             raise KeyError(f"table {table} not in snapshot {c.id[:8]} ({ref})")
         dv = dv_staged if decided else committed_dv(c)
         df = self._read_files(
-            spark, self._pruned(c.tables[table], prune_where), ms, with_lineage=bool(dv)
+            spark, self._pruned(c.tables[table], prune_where), ms,
+            with_lineage=lineage or bool(dv),
         )
-        df = self._apply_dv(spark, df, dv) if dv else df
+        df = self._apply_dv(spark, df, dv, lineage) if dv else df
         return self.apply_schema_map(df, steps) if steps else df
 
     def _apply_dv(
@@ -2855,16 +2859,18 @@ class LakeRepo:
         uri = spark._jvm.org.apache.hadoop.fs.Path(self.root).toUri()
         return "file:" + uri.toString() + "/"
 
+    def _dv_file(self, spark: SparkSession):
+        """``__lg_fp`` as the real path of its file relative to the
+        root: the ``file`` of a stored vector row. ``url_decode`` alone
+        would turn a ``+`` into a space, so ``+`` is escaped first."""
+        start = len(self._dv_prefix(spark)) + 1
+        return F.expr(f"url_decode(replace(substring(__lg_fp, {start}), '+', '%2B'))")
+
     def _dv_rows(self, spark: SparkSession, keys: DataFrame) -> DataFrame:
         """Lineage keys (``__lg_fp``, ``__lg_ri``) → stored vector rows
-        (``file``, ``pos``), ``file`` being the real path relative to
-        the root. ``url_decode`` alone would turn a ``+`` into a space,
-        so ``+`` is escaped first."""
-        start = len(self._dv_prefix(spark)) + 1
+        (``file``, ``pos``)."""
         return keys.select(
-            F.expr(
-                f"url_decode(replace(substring(__lg_fp, {start}), '+', '%2B'))"
-            ).alias("file"),
+            self._dv_file(spark).alias("file"),
             F.col("__lg_ri").cast("long").alias("pos"),
         )
 
@@ -2970,6 +2976,66 @@ class LakeRepo:
             raise
         self._maybe_materialize_dv(spark, branch, table)
         return c
+
+    def _cow_publish(
+        self,
+        spark: SparkSession,
+        branch: str,
+        table: str,
+        rows: DataFrame,
+        positions: DataFrame | None,
+        images: DataFrame | None,
+        files: list[str] | None,
+        message: str,
+    ) -> "Commit":
+        """The copy-on-write twin of ``_dv_publish``, in one data-change
+        commit. ``rows`` is the lineage read of the branch's staged state
+        that ``positions`` were found in. The part files ``files``
+        (spelled as ``_dv_rows`` spells them; None = every file) are
+        rewritten from it, without the rows ``positions`` names and
+        together with ``images``; every other part file is carried by
+        reference, and the vector sheds the rewritten files' positions.
+        A failure before the commit lands puts the table's and its
+        vector's staged entries back as they were. It never resets: the
+        branch may hold other staged writes."""
+        dvt = DV_PREFIX + table
+        snaps = {t: self.staged_entry(branch, t) for t in (table, dvt)}
+        try:
+            entries = self.current_files(branch, table)
+            if files is None:
+                from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import _files_of
+
+                files = _files_of(self.root, entries)
+            else:
+                # a filter on the file path reads only the touched files
+                rows = rows.where(self._dv_file(spark).isin(files))
+            out = self._carried(entries, set(files))
+            if positions is not None:
+                rows = rows.join(positions, ["__lg_fp", "__lg_ri"], "left_anti")
+            rewritten = rows.drop("__lg_fp", "__lg_ri")
+            if images is not None:
+                rewritten = rewritten.unionByName(images)
+            if files or images is not None:
+                # the new group carries the schema, so an entry that holds
+                # no rows (CREATE TABLE's schema placeholder) goes
+                out = [e for e in out if self._holds_rows(e)]
+                out.append(self.write_table(branch, table, rewritten, mode="overwrite"))
+                # the overwrite dropped the vector; only the rewritten
+                # files' positions leave it
+                self.restore_staged_entry(branch, dvt, snaps[dvt])
+                if files:
+                    try:
+                        dv0 = self.current_files(branch, dvt)
+                    except KeyError:
+                        dv0 = None
+                    if dv0:
+                        self._shrink_dv(spark, branch, table, dv0, files)
+            self.stage_table_files(branch, table, out)
+            return self.commit(branch, message)
+        except Exception:
+            for t, entry in snaps.items():
+                self.restore_staged_entry(branch, t, entry)
+            raise
 
     def delete_where_dv(
         self,
@@ -3127,7 +3193,6 @@ class LakeRepo:
         every vectored file. A per-file footer-row count that cannot be
         read conservatively skips that file when a threshold is set."""
         from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning import stats as stats_mod
-        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import _files_of
 
         if self._is_dirty(self._read_ref(branch)):
             raise DirtyBranchError(
@@ -3158,16 +3223,7 @@ class LakeRepo:
         if not sel:
             return head
         sel_set = set(sel)
-        # carried entries: a group dir none of whose files are selected
-        # rides whole; a touched group decomposes into its surviving
-        # part files (the pruned-DML copy-on-write convention)
-        carried: list[str] = []
-        for e in head.tables[table]:
-            files = _files_of(self.root, [e])
-            if not (set(files) & sel_set):
-                carried.append(e)
-            else:
-                carried.extend(f for f in files if f not in sel_set)
+        carried = self._carried(head.tables[table], sel_set)
         smap = self.table_schema_map(table, ref=branch)
         df = self._read_files(
             spark, sorted(sel_set), merge_schema=smap, with_lineage=True
@@ -3217,8 +3273,7 @@ class LakeRepo:
         positions, and commit ``data_change=false`` INSIDE the
         reset-on-failure guard (a commit-time failure must never leave
         the rearrangement staged to ride a later data-change commit)."""
-        dvt = DV_PREFIX + table
-        dv0 = self.head(branch).tables.get(dvt)
+        dv0 = self.head(branch).tables.get(DV_PREFIX + table)
         try:
             files = list(carried)
             if rewritten.limit(1).count() or not files:
@@ -3227,17 +3282,7 @@ class LakeRepo:
                 )
             self.stage_table_files(branch, table, files)
             if dv0:
-                drop_df = local_df(spark,
-                    [(f,) for f in sorted(materialized_files)], "file string"
-                )
-                dv = self._read_files(spark, dv0)
-                remaining = dv.join(F.broadcast(drop_df), "file", "left_anti")
-                if remaining.limit(1).count():
-                    self.write_table(
-                        branch, dvt, remaining, mode="overwrite", _internal=True
-                    )
-                else:
-                    self.stage_table_files(branch, dvt, [], op="drop")
+                self._shrink_dv(spark, branch, table, dv0, materialized_files)
             return self.commit(branch, message, meta=meta)
         except Exception:
             # never leave half a rearrangement staged: a re-filed table
@@ -3246,6 +3291,47 @@ class LakeRepo:
             # CDF rows that never changed
             self.reset(branch)
             raise
+
+    def _carried(self, entries: list[str], rewritten: set[str]) -> list[str]:
+        """The entries a file-scoped rewrite carries by reference when
+        it rewrites the part files ``rewritten``: a group none of whose
+        files is rewritten rides whole, a touched group decomposes into
+        its other part files."""
+        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.changes import _files_of
+
+        carried: list[str] = []
+        for e in entries:
+            files = _files_of(self.root, [e])
+            if not (set(files) & rewritten):
+                carried.append(e)
+            else:
+                carried.extend(f for f in files if f not in rewritten)
+        return carried
+
+    def _holds_rows(self, entry: str) -> bool:
+        """False only when ``entry`` is a file group whose manifest
+        counts zero rows (a manifest read, no footer)."""
+        from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.stats import read_group_manifest
+
+        files = (read_group_manifest(os.path.join(self.root, entry)) or {}).get("files")
+        return not files or any(f.get("rows") != 0 for f in files.values())
+
+    def _shrink_dv(
+        self, spark: SparkSession, branch: str, table: str,
+        dv0: list[str], rewritten: list[str],
+    ) -> None:
+        """Stage the vector ``dv0`` of ``table`` without the positions
+        of the part files ``rewritten`` (their deleted rows are gone
+        from the rewrite); a vector drained empty is dropped."""
+        dvt = DV_PREFIX + table
+        drop_df = local_df(spark, [(f,) for f in sorted(rewritten)], "file string")
+        remaining = self._read_files(spark, dv0).join(
+            F.broadcast(drop_df), "file", "left_anti"
+        )
+        if remaining.limit(1).count():
+            self.write_table(branch, dvt, remaining, mode="overwrite", _internal=True)
+        else:
+            self.stage_table_files(branch, dvt, [], op="drop")
 
     def _maybe_materialize_dv(
         self, spark: SparkSession, branch: str, table: str

@@ -92,12 +92,13 @@ from __future__ import annotations
 import os
 import re
 from collections.abc import Callable
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from datetime import datetime, timezone
-from functools import reduce
+from functools import partial, reduce
 from typing import NamedTuple
 
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -136,6 +137,8 @@ _BOOL_BEFORE_RE = re.compile(r"\b(?:true|false)[\s)]*$", re.I)
 # the keyword that opens a FROM-first or a TABLE query, ending the text
 _QUERY_LEAD_RE = re.compile(r"\b(?:FROM|TABLE)\s*$", re.I)
 _MASK_RE = re.compile(r"\x00(\d+)\x00")
+# the lineage keys of a row in a lineage read (``LakeRepo.read_table``)
+_LINEAGE = ("__lg_fp", "__lg_ri")
 
 
 def _mask_literals(
@@ -580,6 +583,10 @@ def _parse(spark: SparkSession, query: str):
     masked, restore = _mask_literals(query, literals=literals)
     masked, _ = _mask_literals(masked, _BACKTICK_RE, literals)
     text = restore(_AT_RE.sub(r"\g<table> VERSION AS OF \g<ver>", masked))
+    # PySpark logs every ParseException it converts as a JSON record of
+    # the JVM stack; the exception raised here carries the message
+    log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    quiet, log.disabled = log.disabled, True
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
     except ParseException as e:
@@ -587,6 +594,8 @@ def _parse(spark: SparkSession, query: str):
         if err is None:
             raise
         raise err from e
+    finally:
+        log.disabled = quiet
     # the plan's own expressions only: a MERGE source or REPLACE WHERE
     # body is a child plan, whose subqueries do not count
     subquery = not plan.subqueries().isEmpty()
@@ -903,12 +912,11 @@ def _first_match_sel(conds: list[str | None]) -> str:
     clause conditions (Delta's multi-clause rule: clauses of a kind are
     evaluated in order; the first whose condition passes acts on the
     row). Yields the 1-based index of the first TRUE condition (an
-    unconditional clause always matches) or 0 when none does. Shared by
-    the rewrite and DV routes so clause selection can never diverge.
+    unconditional clause always matches) or 0 when none does.
 
-    Both routes project it exactly ONCE per row as a lateral column
-    alias ``__lg_cl`` and make every other expression (per-column
-    projections, fate tags, filters) reference the ALIAS — the clause
+    ``_merge_classified`` projects it exactly ONCE per row as a lateral
+    column alias ``__lg_cl`` and makes every other expression (per-column
+    projections, filters, counts) reference the ALIAS — the clause
     conditions are therefore evaluated once per row, so even a
     non-deterministic condition (``rand()``) cannot pick one winning
     clause for a row's fate and a different one for its values, and the
@@ -928,9 +936,7 @@ def _clause_proj_cols(clause_list, cols, types, ta) -> list[str]:
     ``__lg_cl`` clause index: update clause i's assignment applies when
     the index is i+1, everything else rides the target value through
     (rows a DELETE clause claimed are filtered out downstream, so their
-    projected values never surface). ONE definition shared by the
-    rewrite and DV routes — like ``_first_match_sel`` — so the merge
-    projection semantics can never diverge between them."""
+    projected values never surface)."""
     out = []
     for c in cols:
         branches = [
@@ -950,8 +956,7 @@ def _clause_proj_cols(clause_list, cols, types, ta) -> list[str]:
 
 def _insert_proj_cols(i_clauses, cols, types) -> list[str]:
     """Per-column projection for insert clauses over ``__lg_cl`` (the
-    first NOT-MATCHED clause whose condition passed): shared by both
-    routes."""
+    first NOT-MATCHED clause whose condition passed)."""
     out = []
     for c in cols:
         branches = " ".join(
@@ -960,23 +965,6 @@ def _insert_proj_cols(i_clauses, cols, types) -> list[str]:
         )
         out.append(f"CASE (__lg_cl) {branches} END AS `{c}`")
     return out
-
-
-def _fate_expr(clause_list, del_tag: str, upd_tag: str) -> str:
-    """Row-fate tag from the precomputed ``__lg_cl`` index: 'pass' when
-    no clause claimed the row, ``del_tag`` when a DELETE clause did,
-    else ``upd_tag``."""
-    del_idx = [
-        str(i + 1)
-        for i, (_c, action, _a) in enumerate(clause_list)
-        if action == "delete"
-    ]
-    del_branch = (
-        f"WHEN __lg_cl IN ({', '.join(del_idx)}) THEN '{del_tag}' "
-        if del_idx
-        else ""
-    )
-    return f"CASE WHEN __lg_cl = 0 THEN 'pass' {del_branch}ELSE '{upd_tag}' END"
 
 
 class LakeSQL:
@@ -1792,16 +1780,17 @@ class LakeSQL:
         explicit ``(cols) VALUES (exprs)`` with unnamed columns NULL —
         and the Delta-2.4 sync clauses deleting or updating target rows
         absent from the source (condition and SET expressions see
-        target columns only, enforced BY SCOPE). Declarative plan: one
-        LEFT [ANTI] JOIN per branch over the snapshot — with a small
-        source the join broadcasts and the big target streams through
-        narrow (same shape as ``upsert_table``); the clause selector is
-        computed once per row as a lateral column alias and the tagged
-        union is persisted and counted in ONE pass. Like Delta, raises
-        when several source rows hit the same target row — checked only
-        against source keys that actually match a target row, so
-        duplicate never-matching keys (a legal multi-row insert)
-        pass."""
+        target columns only, enforced BY SCOPE).
+
+        One classification (``_merge_classified``) finds, over a lineage
+        read of the target, the positions of the rows that leave the
+        table and the images that join it, and raises Delta's
+        multiple-match error before any write. Two publishes consume
+        it, as Delta's MERGE does: a deletion-vector table appends the
+        positions to its vector (``repo._dv_publish``); otherwise the
+        part files the positions name are rewritten without those rows
+        and every other file is carried by reference
+        (``repo._cow_publish``)."""
         name = self._resolve_table(stmt.table)
         ta = stmt.talias or name
         if stmt.source_query:
@@ -1843,11 +1832,12 @@ class LakeSQL:
         # already refused an unconditional clause before the last).
         evolve = stmt.evolve
         target = self.repo.read_table(
-            self.spark, name, ref=self.branch, include_staged=True
+            self.spark, name, ref=self.branch, include_staged=True, lineage=True
         )
+        fields = [f for f in target.schema.fields if f.name not in _LINEAGE]
         # MERGE WITH SCHEMA EVOLUTION (Delta 3.x spelling of automerge):
         # source columns absent from the target JOIN the target schema —
-        # the rewrite route overwrites the whole snapshot, so the
+        # the copy-on-write route rewrites every file, so the
         # extended view (existing rows read the new columns as NULL)
         # makes every downstream scope — pass-through, SET/INSERT *
         # expansion, BY-SOURCE projections — uniform. SET * then updates
@@ -1856,7 +1846,7 @@ class LakeSQL:
         # evolution, both keep the strict all-columns contract.
         new_fields = []
         if evolve:
-            tlower = {f.name.lower() for f in target.schema.fields}
+            tlower = {f.name.lower() for f in fields}
             candidates = [
                 f for f in sdf.schema.fields if f.name.lower() not in tlower
             ]
@@ -1893,10 +1883,11 @@ class LakeSQL:
                         for f in new_fields
                     ],
                 )
+                fields += new_fields
         src_lower = {c.lower() for c in sdf.columns}
-        resolved = {f.name.lower(): f.name for f in target.schema.fields}
+        resolved = {f.name.lower(): f.name for f in fields}
         # IDENTITY columns (r12): never SET, never in an INSERT list —
-        # inserted rows get engine-allocated values after the union;
+        # inserted rows get engine-allocated values once counted;
         # DEFAULT values substitute for NULL on unnamed INSERT columns
         _cm = self.repo.column_metadata(name, self.branch)
         id_cols, col_defaults = _cm["identity"], _cm["defaults"]
@@ -1925,7 +1916,7 @@ class LakeSQL:
             if asg is None:
                 return {
                     f.name: f"{sa}.`{f.name}`"
-                    for f in target.schema.fields
+                    for f in fields
                     # with evolution, SET * updates only the source-named
                     # columns (target-only columns keep their values);
                     # without it, the strict contract stands — a source
@@ -1985,7 +1976,7 @@ class LakeSQL:
                 # columns are never expected from the source
                 missing = [
                     f.name
-                    for f in target.schema.fields
+                    for f in fields
                     if f.name.lower() not in src_lower
                     and f.name.lower() not in id_cols
                 ]
@@ -1996,7 +1987,7 @@ class LakeSQL:
                     )
                 # automerge: target-only columns insert their DEFAULT
                 # when declared (r12), else NULL; IDENTITY columns are
-                # engine-allocated after the union (except BY DEFAULT
+                # engine-allocated once counted (except BY DEFAULT
                 # ones the source provides)
                 exprs = {
                     f.name: (
@@ -2007,7 +1998,7 @@ class LakeSQL:
                         if f.name.lower() in src_lower
                         else col_defaults.get(f.name.lower(), "NULL")
                     )
-                    for f in target.schema.fields
+                    for f in fields
                 }
             else:
                 named: dict[str, str] = {}
@@ -2028,7 +2019,7 @@ class LakeSQL:
                     named[rc] = v
                 # unnamed columns insert their DEFAULT when declared
                 # (r12), else NULL; unprovided identity stays NULL here
-                # and is allocated after the union
+                # and is allocated once the inserts are counted
                 i_provided.append(
                     {c.lower() for c in named} & (set(id_cols) - id_always)
                 )
@@ -2039,7 +2030,7 @@ class LakeSQL:
                         if f.name.lower() in id_cols
                         else col_defaults.get(f.name.lower(), "NULL"),
                     )
-                    for f in target.schema.fields
+                    for f in fields
                 }
             i_clauses.append((cond, exprs))
         # all-or-none per BY DEFAULT column across insert clauses
@@ -2054,197 +2045,49 @@ class LakeSQL:
                 )
             elif any(hits):  # the raise above makes any() imply all()
                 del ids_fill[c]
-        # BY-SOURCE conditions and SET expressions are enforced
-        # target-only BY SCOPE, not lexically: every place they evaluate
-        # (the rewrite route's anti-join part, the DV route's anti-join
-        # frame) excludes the source alias, so a source reference —
-        # however quoted — is a loud analysis error on every route, and
-        # an unqualified name shared with the source is never ambiguous
-        # (review r10 #5: the lexical guard had both false negatives via
-        # backticks and false positives via string literals)
+        # the DV route takes a statement only where it stores what the
+        # copy-on-write route would: an evolving schema, generated
+        # columns and identity allocation are the rewrite's, and a clause
+        # subquery keeps the statement off the DV route (``_delete``'s
+        # rule)
+        msg = f"SQL: MERGE INTO {name}"
+        classify = partial(
+            self._merge_classified, name, sdf, ta, sa, t_keys, s_keys,
+            m_clauses, i_clauses, bs_clauses, stmt.subquery,
+        )
         if (
-            # an actually-evolving merge changes the STORED schema —
-            # the rewrite route owns that (it overwrites the snapshot
-            # with the extended schema); a WITH SCHEMA EVOLUTION whose
-            # source adds no columns routes normally
             not new_fields
             and self._dv_enabled(name)
-            # a subquery in a clause binds on the DV route's RAW lineage
-            # read (``_delete``'s rule); the ON condition is already
-            # constrained to alias.col equality pairs and the USING
-            # source was rewriter-resolved above
             and not stmt.subquery
-            # generated columns recompute on read; the rewrite path owns
-            # that discipline — decline rather than risk storing them
             and not self.repo._generated_names(
                 self.repo.table_schema_map(name, ref=self.branch)
             )
-            # identity allocation happens on the rewrite route's staged
-            # union (r12) — the DV route would insert NULLs (fully
-            # provided BY DEFAULT inserts carry their values and may
-            # route)
             and not (ids_fill and i_clauses)
         ):
-            out = self._try_dv_dml(
-                name,
-                lambda: self._merge_dv_op(
-                    name, ta, sa, sdf, t_keys, s_keys,
-                    m_clauses=m_clauses, i_clauses=i_clauses,
-                    bs_clauses=bs_clauses,
-                ),
-                "dv_merge", "MERGE INTO",
-            )
+            def dv_merge():
+                df, _ = self.repo._dv_read(self.spark, self.branch, name, msg)
+                with classify(df) as (positions, images, _files, rows):
+                    if not rows:
+                        return self.repo.head(self.branch)  # no-op
+                    return self.repo._dv_publish(
+                        self.spark, self.branch, name, positions, images, msg,
+                        {"dv_merge": {"table": name, "rows": rows}},
+                    )
+
+            out = self._try_dv_dml(name, dv_merge, "dv_merge", "MERGE INTO")
             if out is not None:
                 return out
-        tview, sview = "lake__merge_t", "lake__merge_s"
-        target.createOrReplaceTempView(tview)
-        sdf.createOrReplaceTempView(sview)
-        on_sql = " AND ".join(
-            f"{ta}.`{tk}` = {sa}.`{sk}`" for tk, sk in zip(t_keys, s_keys)
-        )
-        marker_raw = f"{sa}.`{s_keys[0]}` IS NOT NULL"
-        has_bs = bool(bs_clauses)
-        tcols = [f.name for f in target.schema.fields]
-        types = {
-            f.name: f.dataType.simpleString() for f in target.schema.fields
-        }
-        out_cols = ", ".join(f"`{c}`" for c in tcols)
-        passthrough = ", ".join(f"{ta}.`{c}` AS `{c}`" for c in tcols)
-        parts: list[str] = []
-        # Each part computes the clause selector ONCE per row as the
-        # lateral column alias __lg_cl; projections and fate tags in the
-        # same inner SELECT reference the alias, and the outer SELECT
-        # keeps only the target columns + fate. The tagged union is
-        # persisted and counted ONCE (one groupBy) instead of the three
-        # eager COUNT jobs the r10 route ran — each of which re-ran the
-        # join against the source.
-        # PART 1a: the matched rows' fate. With a by-source clause in
-        # play, this covers MATCHED rows only (WHERE marker) — unmatched
-        # rows are handled uniformly in part 1b's anti join. Without one,
-        # unmatched target rows ride through the same LEFT JOIN with
-        # selector 0 ('pass').
-        if m_clauses:
-            # the guard stays UNconditioned (Delta errors on ambiguous
-            # matches even when the clause conditions would filter one
-            # of them out); it also bounds the LEFT JOIN's fan-out
-            self._merge_dup_guard(tview, sview, t_keys, s_keys)
-            msel = _first_match_sel([c for c, _a, _x in m_clauses])
-            mcl = f"CASE WHEN {marker_raw} THEN ({msel}) ELSE 0 END"
-            scope = f" WHERE {marker_raw}" if has_bs else ""
-            inner = (
-                f"SELECT ({mcl}) AS __lg_cl, "
-                f"{', '.join(_clause_proj_cols(m_clauses, tcols, types, ta))} "
-                f"FROM {tview} {ta} LEFT JOIN {sview} {sa} "
-                f"ON {on_sql}{scope}"
+        # the staged identity high-water bump rolls back with a failed
+        # publish; an evolving schema rewrites every file
+        with (
+            self._colmeta_rollback(name) if ids_fill and i_clauses else nullcontext(),
+            classify(target, ids_fill) as (positions, images, files, rows),
+        ):
+            c = self.repo._cow_publish(
+                self.spark, self.branch, name, target, positions, images,
+                None if new_fields else files, msg,
             )
-            parts.append(
-                f"SELECT {out_cols}, "
-                f"{_fate_expr(m_clauses, 'del', 'upd')} AS __lg_fate "
-                f"FROM ({inner})"
-            )
-        elif has_bs:
-            # no matched action: matched rows pass through a semi join
-            # untouched — no LEFT JOIN, so duplicate source keys can't
-            # fan target rows out and no dup guard is needed (Delta only
-            # raises when multiple matches would MODIFY a row)
-            parts.append(
-                f"SELECT {passthrough}, 'pass' AS __lg_fate "
-                f"FROM {tview} {ta} "
-                f"LEFT SEMI JOIN {sview} {sa} ON {on_sql}"
-            )
-        else:
-            # insert-only merge: the target passes through untouched
-            parts.append(
-                f"SELECT {passthrough}, 'pass' AS __lg_fate "
-                f"FROM {tview} {ta}"
-            )
-        # PART 1b: the unmatched rows' fate, always in anti-join scope —
-        # the source alias does not exist there, so BY-SOURCE conditions
-        # and SET expressions resolve against TARGET columns only, by
-        # construction, exactly as on the DV route: a source reference
-        # is a loud analysis error everywhere, a shared unqualified name
-        # is never ambiguous.
-        if has_bs:
-            bsel = _first_match_sel([c for c, _a, _x in bs_clauses])
-            inner = (
-                f"SELECT ({bsel}) AS __lg_cl, "
-                f"{', '.join(_clause_proj_cols(bs_clauses, tcols, types, ta))} "
-                f"FROM {tview} {ta} "
-                f"LEFT ANTI JOIN {sview} {sa} ON {on_sql}"
-            )
-            parts.append(
-                f"SELECT {out_cols}, "
-                f"{_fate_expr(bs_clauses, 'bsdel', 'bsupd')} AS __lg_fate "
-                f"FROM ({inner})"
-            )
-        # PART 2: inserts, in source-anti-target scope; the first insert
-        # clause whose condition passes provides the row's expressions,
-        # source rows matching no clause don't insert.
-        if i_clauses:
-            isel = _first_match_sel([c for c, _e in i_clauses])
-            inner = (
-                f"SELECT ({isel}) AS __lg_cl, "
-                f"{', '.join(_insert_proj_cols(i_clauses, tcols, types))} "
-                f"FROM {sview} {sa} "
-                f"LEFT ANTI JOIN {tview} {ta} ON {on_sql}"
-            )
-            parts.append(
-                f"SELECT {out_cols}, 'ins' AS __lg_fate "
-                f"FROM ({inner}) WHERE __lg_cl > 0"
-            )
-        # ONE source-scan pass: the tagged union is persisted, counted
-        # once, and the same cached frame feeds the write — the r10
-        # route ran up to three eager COUNT jobs first, each re-running
-        # the join (the _merge_dv_op persist discipline, applied here).
-        staged = self.spark.sql(
-            " UNION ALL ".join(f"({p})" for p in parts)
-        ).persist()
-        try:
-            counts = {
-                r["__lg_fate"]: r["n"]
-                for r in staged.groupBy("__lg_fate")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            rows = sum(n for f, n in counts.items() if f != "pass")
-            n_ins = int(counts.get("ins", 0))
-            if ids_fill and n_ins:
-                # allocate identity values for the inserted rows only
-                # (r12): pass/update rows carry their existing values
-                # through the union untouched; the insert part projected
-                # NULL, replaced here by the numbered allocation — cost
-                # ∝ inserted rows. The staged high-water bump rolls
-                # back with a failed write/commit.
-                keep = staged.where(
-                    ~F.col("__lg_fate").isin("del", "bsdel", "ins")
-                ).drop("__lg_fate")
-                ins = staged.where(F.col("__lg_fate") == "ins").drop(
-                    "__lg_fate"
-                )
-                with self._colmeta_rollback(name):
-                    filled = self._fill_identity(
-                        name,
-                        ins.drop(*[resolved[c] for c in ids_fill]),
-                        list(target.schema.fields),
-                        ids_fill,
-                        n_ins,
-                    )
-                    merged = keep.unionByName(filled)
-                    self.repo.write_table(
-                        self.branch, name, merged, mode="overwrite"
-                    )
-                    c = self.repo.commit(
-                        self.branch, f"SQL: MERGE INTO {name}"
-                    )
-                return self._dml_result(name, c.version, int(rows))
-            merged = staged.where(
-                ~F.col("__lg_fate").isin("del", "bsdel")
-            ).drop("__lg_fate")
-            self.repo.write_table(self.branch, name, merged, mode="overwrite")
-        finally:
-            staged.unpersist(blocking=False)
-        c = self.repo.commit(self.branch, f"SQL: MERGE INTO {name}")
-        return self._dml_result(name, c.version, int(rows))
+        return self._dml_result(name, c.version, rows)
 
     _SIMPLE_SELECT_RE = re.compile(
         r"^\s*SELECT\b.*?\bFROM\s+(?P<table>[A-Za-z_]\w*)"
@@ -3500,10 +3343,9 @@ class LakeSQL:
                 # fall back to the always-correct full rewrite — from the
                 # SAME staged state the pruned attempt started from
                 self.repo.restore_staged_entry(self.branch, name, snap)
-        keep_where = f"({cond}) IS NOT TRUE" if cond else "FALSE"
-        total = self.sql(f"SELECT * FROM {name}").count()
-        kept = self.sql(f"SELECT * FROM {name} WHERE {keep_where}")
-        rows = total - kept.count()
+        match = f"({cond}) IS TRUE" if cond else "TRUE"
+        rows = self.sql(f"SELECT * FROM {name} WHERE {match}").count()
+        kept = self.sql(f"SELECT * FROM {name} WHERE NOT ({match})")
         self.repo.write_table(self.branch, name, kept, mode="overwrite")
         c = self.repo.commit(self.branch, f"SQL: DELETE FROM {name}")
         return self._dml_result(name, c.version, rows)
@@ -3547,188 +3389,119 @@ class LakeSQL:
         rows = int(c.meta.get(meta_key, {}).get("rows", 0))
         return self._dml_result(name, c.version, rows)
 
-    def _merge_dup_guard(
-        self, tview: str, sview: str, t_keys: list[str], s_keys: list[str]
-    ) -> None:
-        """Delta's multiple-match guard, shared by the rewrite and DV
-        MERGE paths (one definition so the matching rule can never
-        diverge between them): raise on duplicate source keys that
-        actually HIT a target row — duplicate never-matching keys are
-        legal (a multi-row insert sharing a new key)."""
-        key_list = ", ".join(f"`{k}`" for k in s_keys)
-        t_key_list = ", ".join(f"`{k}`" for k in t_keys)
-        dup = self.spark.sql(
-            f"SELECT 1 FROM (SELECT {key_list} FROM {sview} "
-            f"GROUP BY {key_list} HAVING COUNT(*) > 1) d "
-            f"LEFT SEMI JOIN (SELECT {t_key_list} FROM {tview}) t ON "
-            + " AND ".join(
-                f"d.`{sk}` = t.`{tk}`" for tk, sk in zip(t_keys, s_keys)
-            )
-        )
-        if dup.take(1):
-            raise ValueError(
-                "MERGE source has multiple rows per join key that match "
-                "a target row — ambiguous (Delta raises here too)"
-            )
-
-    def _merge_dv_op(
-        self,
-        name: str,
-        ta: str,
-        sa: str,
-        sdf: DataFrame,
-        t_keys: list[str],
-        s_keys: list[str],
-        m_clauses: list[tuple[str | None, str, dict[str, str] | None]],
-        i_clauses: list[tuple[str | None, dict[str, str]]],
-        bs_clauses: list[tuple[str | None, str, dict[str, str] | None]],
+    @contextmanager
+    def _merge_classified(
+        self, name, sdf, ta, sa, t_keys, s_keys, m_clauses, i_clauses,
+        bs_clauses, subquery, target, ids_fill=None,
     ):
-        """Deletion-vector MERGE executor (Delta's DV-enabled MERGE):
-        WHEN-MATCHED rows become (file, pos) vector positions — plus,
-        for UPDATE, their rewritten images — and NOT-MATCHED inserts
-        append, ALL in one commit with ZERO existing-file rewrites. An
-        upsert touching a handful of rows in a huge table costs a few
-        vector rows + one small appended file instead of a full snapshot
-        rewrite. CDC needs no new machinery: vector append + file
-        append is the standard delete+insert change pair, identical in
-        shape to ``update_where_dv``.
+        """MERGE's one classification, which both routes publish. Over
+        ``target``, a lineage read (``__lg_fp``, ``__lg_ri``), it builds
+        the matched, not-matched-by-source and insert frames, each
+        projecting the winning clause once per row as ``__lg_cl``, and
+        yields ``(positions, images, files, rows)``: the lineage keys of
+        the target rows a clause claimed, the rows that join the table
+        (updated images, then inserts, their ``ids_fill`` identity
+        columns allocated), the part files the positions name (as
+        ``repo._dv_rows`` spells them) and the rows affected. A
+        statement whose clauses hold a subquery is classified through
+        the SELECT rewriter, so the subquery reads repo tables.
 
-        The clean-branch gate and lineage read are ``repo._dv_read``'s,
-        the vector and image appends, commit and auto-materialize
-        ``repo._dv_publish``'s, shared with ``delete_where_dv`` and
-        ``update_where_dv``; the clause matching is this method's own.
-        Called through ``_try_dv_dml`` so the fallback discipline (dirty
-        branch declines, reset on failure, ValueError surfaces, no-op
-        still lands a version) is shared with DELETE/UPDATE routing.
-        Returns the unchanged head for a no-op, else the DML commit
-        itself — under ``dv_materialize_fraction`` a trailing
-        data_change=false commit may follow
-        (``repo.last_maintenance_commit``)."""
-        repo, spark, branch = self.repo, self.spark, self.branch
-        df, _ = repo._dv_read(spark, branch, name, f"MERGE INTO {name} (dv)")
+        Delta's multiple-match rule is unconditioned: a target row that
+        more than one source row joins raises, whether or not a clause
+        claims it, in the job that counts the clauses and before any
+        write. The not-matched-by-source frame is an anti join, with no
+        source alias in scope: its conditions and SET values see target
+        columns only, by construction, and cannot fan out."""
+        spark = self.spark
+        run = self._select if subquery else spark.sql
         tview, sview = "lake__mdv_t", "lake__mdv_s"
-        df.createOrReplaceTempView(tview)
+        target.createOrReplaceTempView(tview)
         sdf.createOrReplaceTempView(sview)
         on_sql = " AND ".join(
             f"{ta}.`{tk}` = {sa}.`{sk}`" for tk, sk in zip(t_keys, s_keys)
         )
-        stored = [c for c in df.columns if not c.startswith("__lg_")]
-        types = {c: df.schema[c].dataType.simpleString() for c in stored}
-        matched = None
-        inserts = None
-        bs = None
-        n_matched = 0
-        n_ins = 0
-        n_bs = 0
-        n_m_img = 0
-        n_bs_img = 0
-        m_upd = [
-            i + 1
-            for i, (_c, action, _a) in enumerate(m_clauses)
-            if action == "update"
-        ]
-        bs_upd = [
-            i + 1
-            for i, (_c, action, _a) in enumerate(bs_clauses)
-            if action == "update"
-        ]
+        stored = [c for c in target.columns if c not in _LINEAGE]
+        types = {c: target.schema[c].dataType.simpleString() for c in stored}
+        cl = F.col("__lg_cl")
+        frames, tagged = [], []
         try:
-            if bs_clauses:
-                # NOT MATCHED BY SOURCE DELETE/UPDATE: unmatched target
-                # rows claimed by a clause go to the vector (UPDATE
-                # clauses also append their rewritten images, computed
-                # from TARGET columns only — the anti join has no source
-                # alias in scope) — an anti-join can't fan out, so no
-                # dup guard here. __lg_cl records the winning clause.
-                bsel = _first_match_sel([c for c, _a, _x in bs_clauses])
-                bs_cols = [
-                    f"({bsel}) AS __lg_cl",
-                    f"{ta}.`__lg_fp` AS __lg_fp",
-                    f"{ta}.`__lg_ri` AS __lg_ri",
-                    *_clause_proj_cols(bs_clauses, stored, types, ta),
-                ]
-                bs = spark.sql(
-                    f"SELECT * FROM ("
-                    f"SELECT {', '.join(bs_cols)} FROM {tview} {ta} "
-                    f"LEFT ANTI JOIN {sview} {sa} ON {on_sql}"
-                    f") WHERE __lg_cl > 0"
+            for kind, clauses, join in (
+                (0, m_clauses, "JOIN"), (1, bs_clauses, "LEFT ANTI JOIN")
+            ):
+                if not clauses:
+                    continue
+                sel = _first_match_sel([c for c, _a, _x in clauses])
+                f = run(
+                    f"SELECT * FROM (SELECT ({sel}) AS __lg_cl, "
+                    f"{ta}.`__lg_fp` AS __lg_fp, {ta}.`__lg_ri` AS __lg_ri, "
+                    f"{', '.join(_clause_proj_cols(clauses, stored, types, ta))} "
+                    f"FROM {tview} {ta} {join} {sview} {sa} ON {on_sql})"
+                    # the matched frame keeps unclaimed rows for the
+                    # multiple-match count
+                    + (" WHERE __lg_cl > 0" if kind else "")
                 ).persist()
-                # per-clause counts in ONE job: the total feeds the
-                # no-op gate; the update-clause share gates the image
-                # append (all-DELETE claims must not append empty files)
-                bs_by_cl = {
-                    int(r["__lg_cl"]): int(r["n"])
-                    for r in bs.groupBy("__lg_cl")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                n_bs = sum(bs_by_cl.values())
-                n_bs_img = sum(bs_by_cl.get(i, 0) for i in bs_upd)
-            if m_clauses:
-                self._merge_dup_guard(tview, sview, t_keys, s_keys)
-                msel = _first_match_sel([c for c, _a, _x in m_clauses])
-                # persist: the matched frame feeds the no-op count, the
-                # position write, and (UPDATE clauses) the image write.
-                # Rows claimed by no clause keep their original images
-                # untouched (selector 0, filtered in the outer SELECT —
-                # the lateral __lg_cl alias is computed once per row).
-                proj = [
-                    f"({msel}) AS __lg_cl",
-                    f"{ta}.`__lg_fp` AS __lg_fp",
-                    f"{ta}.`__lg_ri` AS __lg_ri",
-                    *_clause_proj_cols(m_clauses, stored, types, ta),
-                ]
-                matched = spark.sql(
-                    f"SELECT * FROM ("
-                    f"SELECT {', '.join(proj)} FROM {tview} {ta} "
-                    f"JOIN {sview} {sa} ON {on_sql}"
-                    f") WHERE __lg_cl > 0"
-                ).persist()
-                m_by_cl = {
-                    int(r["__lg_cl"]): int(r["n"])
-                    for r in matched.groupBy("__lg_cl")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-                n_matched = sum(m_by_cl.values())
-                n_m_img = sum(m_by_cl.get(i, 0) for i in m_upd)
+                upd = cl.isin([i + 1 for i, (_c, a, _x) in enumerate(clauses) if a == "update"])
+                frames.append((kind, f, upd))
+                tagged.append(f.select(
+                    F.lit(kind).alias("k"), (cl > 0).alias("claimed"),
+                    upd.alias("image"), *_LINEAGE, self.repo._dv_file(spark).alias("file"),
+                ))
             if i_clauses:
-                isel = _first_match_sel([c for c, _e in i_clauses])
-                icols = [
-                    f"({isel}) AS __lg_cl",
-                    *_insert_proj_cols(i_clauses, stored, types),
-                ]
-                stored_sel = ", ".join(f"`{c}`" for c in stored)
-                inserts = spark.sql(
-                    f"SELECT {stored_sel} FROM ("
-                    f"SELECT {', '.join(icols)} FROM {sview} {sa} "
-                    f"LEFT ANTI JOIN {tview} {ta} ON {on_sql}"
+                sel = _first_match_sel([c for c, _e in i_clauses])
+                ins = run(
+                    f"SELECT {', '.join(f'`{c}`' for c in stored)} FROM ("
+                    f"SELECT ({sel}) AS __lg_cl, "
+                    f"{', '.join(_insert_proj_cols(i_clauses, stored, types))} "
+                    f"FROM {sview} {sa} LEFT ANTI JOIN {tview} {ta} ON {on_sql}"
                     f") WHERE __lg_cl > 0"
                 ).persist()
-                n_ins = inserts.count()
-            if n_matched == 0 and n_ins == 0 and n_bs == 0:
-                return repo.head(branch)  # no-op: caller lands the version
-            lineage = ["__lg_fp", "__lg_ri", "__lg_cl"]
-            positions = [
-                f.select(*lineage[:2])
-                for f, n in ((matched, n_matched), (bs, n_bs)) if n
-            ]
-            images = [
-                f.where(F.col("__lg_cl").isin(upd)).drop(*lineage)
-                for f, upd, n in ((matched, m_upd, n_m_img), (bs, bs_upd, n_bs_img))
-                if n
-            ] + ([inserts] if n_ins else [])
-            return repo._dv_publish(
-                spark, branch, name,
+                frames.append((2, ins, None))
+                none = F.lit(None).cast("string")
+                tagged.append(ins.select(
+                    F.lit(2).alias("k"), F.lit(True).alias("claimed"),
+                    F.lit(True).alias("image"), none.alias("__lg_fp"),
+                    F.lit(None).cast("long").alias("__lg_ri"), none.alias("file"),
+                ))
+            k, claimed, image = F.col("k"), F.col("claimed"), F.col("image")
+            # every frame counted in one job (a MERGE has a clause)
+            counted = reduce(DataFrame.unionByName, tagged).agg(
+                *[F.count_if((k == i) & claimed).alias(f"n{i}") for i in range(3)],
+                *[F.count_if((k == i) & image).alias(f"image{i}") for i in range(3)],
+                F.collect_set(F.when(claimed, F.col("file"))).alias("files"),
+                (F.count_if(k == 0) > F.count_distinct(
+                    F.when(k == 0, F.col("__lg_fp")), F.col("__lg_ri")
+                )).alias("dup"),
+            ).first()
+            if counted.dup:
+                raise ValueError(
+                    "MERGE source has multiple rows per join key that "
+                    "match a target row — ambiguous (Delta raises here too)"
+                )
+            positions, images = [], []
+            for kind, f, upd in frames:
+                n = counted[f"n{kind}"]
+                if upd is not None:
+                    if n:
+                        positions.append(f.where(cl > 0).select(*_LINEAGE))
+                    if counted[f"image{kind}"]:
+                        images.append(f.where(upd).select(*stored))
+                elif n:
+                    if ids_fill:
+                        by_lower = {c.lower(): c for c in stored}
+                        f = self._fill_identity(
+                            name, f.drop(*[by_lower[c] for c in ids_fill]),
+                            [target.schema[c] for c in stored], ids_fill, n,
+                        )
+                    images.append(f)
+            yield (
                 reduce(DataFrame.unionByName, positions) if positions else None,
                 reduce(DataFrame.unionByName, images) if images else None,
-                f"SQL: MERGE INTO {name}",
-                {"dv_merge": {"table": name, "rows": n_matched + n_ins + n_bs}},
+                sorted(counted.files),
+                sum(counted[f"n{i}"] for i in range(3)),
             )
         finally:
-            for f in (matched, inserts, bs):
-                if f is not None:
-                    f.unpersist(blocking=False)
+            for _k, f, _u in frames:
+                f.unpersist(blocking=False)
 
     def _rewrite_pruned(
         self, name: str, split: tuple, cond: str, proj: list | None = None

@@ -1824,6 +1824,16 @@ def _dv_dml_script(spark, root):
     out.append(sorted(tuple(r) for r in changes))
     c = repo.purge_deletion_vectors(spark, "main", "t", min_fraction=0.1)
     observe(c.meta.get("dv_purge"))
+    # a copy-on-write MERGE on a multi-file table with a live vector: it
+    # reads the touched files and spells their vector rows under the root
+    _three_files(spark, repo, "m")
+    repo.delete_where_dv(spark, "main", "m", "k % 5 = 0")
+    r = LakeSQL(spark, repo, "main").sql(_COW_MERGE.format(t="m")).first()
+    vec = repo._resolve("main").tables.get(DV_PREFIX + "m")
+    left = repo._read_files(spark, vec).collect() if vec else []
+    assert all(os.path.isfile(os.path.join(repo.root, d.file)) for d in left)
+    rows = sorted(tuple(x) for x in repo.read_table(spark, "m", "main").collect())
+    out.append((r.rows_affected, len(left), rows))
     return out
 
 
@@ -2089,3 +2099,132 @@ def test_parsed_expression_text_is_the_users_own(spark):
     assert _parse(spark, "UPDATE t SET v = abs(v) + (k /* ) */)").assigns == [
         (("v",), "abs(v) + (k /* ) */)")
     ]
+
+
+def _three_files(spark, repo, table):
+    """``table`` holds k 0-29 (v = 2k) in three groups of one part file,
+    k 0-9, 10-19 and 20-29; returns the three group entries."""
+    for lo in (0, 10, 20):
+        repo.write_table("main", table, _kv(spark, lo, lo + 10).coalesce(1), mode="append")
+    repo.commit("main", f"{table} in three files")
+    return repo.current_files("main", table)
+
+
+_COW_MERGE = (
+    "MERGE INTO {t} USING s ON {t}.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v "
+    "WHEN NOT MATCHED THEN INSERT *"
+)
+
+
+def test_cow_merge_rewrites_only_the_touched_file(spark, repo, monkeypatch):
+    """A copy-on-write MERGE whose matches fall in one part file
+    rewrites that file alone and carries the others by reference, with
+    the rows and ``rows_affected`` of a whole-table reference. A live
+    vector from an earlier DV DELETE keeps only its positions on the
+    carried files. On a dirty branch the other staged write rides the
+    MERGE's commit, and a publish that fails leaves the staged state as
+    it was."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    low, mid, high = _three_files(spark, repo, "t")
+    u_low, _, u_high = _three_files(spark, repo, "u")
+    repo.write_table(
+        "main", "s",
+        spark.createDataFrame([(12, 1), (15, 2), (40, 3)], "k long, v long"),
+    )
+    repo.commit("main", "source")
+    sql = LakeSQL(spark, repo, "main", dv_writes=False)
+
+    def reference(deleted=()):
+        rows = {k: 2 * k for k in range(30) if k not in deleted}
+        rows.update({12: 1, 15: 2, 40: 3})
+        return sorted(rows.items())
+
+    def rows(table):
+        return sorted(tuple(r) for r in repo.read_table(spark, table, "main").collect())
+
+    assert sql.sql(_COW_MERGE.format(t="t")).first().rows_affected == 3
+    assert rows("t") == reference()
+    after = repo.current_files("main", "t")
+    assert low in after and high in after and mid not in after
+    assert len(after) == 3
+
+    # k 11 and 25 are vectored; the rewrite of 10-19 takes 11's position
+    # out of the vector, and 25's stays on its carried file
+    repo.delete_where_dv(spark, "main", "u", "k IN (11, 25)")
+    assert sql.sql(_COW_MERGE.format(t="u")).first().rows_affected == 3
+    assert rows("u") == reference(deleted=(11, 25))
+    assert {u_low, u_high} <= set(repo.current_files("main", "u"))
+    vector = repo._read_files(spark, repo.current_files("main", DV_PREFIX + "u"))
+    assert [r.file.startswith(u_high + os.sep) for r in vector.collect()] == [True]
+
+    # a dirty branch: the staged write to another table rides the commit
+    repo.write_table("main", "other", _kv(spark, 0, 2))
+    sql.sql("MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v + 1")
+    assert not repo.status("main")
+    assert repo.read_table(spark, "other", "main").count() == 2
+    assert dict(rows("t"))[12] == 2
+
+    # a failed publish puts every staged entry back
+    repo.write_table("main", "other", _kv(spark, 0, 3), mode="append")
+    staged, head = repo.status("main"), repo.head("main").id
+    real_write = LakeRepo.write_table
+
+    def fail_on_t(self, branch, table, df, mode="overwrite", **kw):
+        if table == "t":
+            raise OSError("injected write failure")
+        return real_write(self, branch, table, df, mode=mode, **kw)
+
+    monkeypatch.setattr(LakeRepo, "write_table", fail_on_t)
+    with pytest.raises(OSError, match="injected"):
+        sql.sql(_COW_MERGE.format(t="t"))
+    assert repo.status("main") == staged
+    assert repo.head("main").id == head
+
+
+@pytest.mark.parametrize("dv", [True, False])
+def test_merge_clause_subquery_reads_repo_tables(spark, repo, dv):
+    """A subquery in a MERGE clause reads the repo table it names, as a
+    DELETE condition's does, not a session temp view of the same name."""
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 6))
+    repo.write_table(
+        "main", "s", spark.range(0, 6).select(F.col("id").alias("k"), F.lit(-1).alias("v"))
+    )
+    repo.write_table("main", "pick", _kv(spark, 0, 2))
+    repo.commit("main", "base")
+    spark.createDataFrame([(3,), (4,), (5,)], "k long").createOrReplaceTempView("pick")
+    try:
+        r = LakeSQL(spark, repo, "main", dv).sql(
+            "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND s.k IN "
+            "(SELECT k FROM pick) THEN UPDATE SET v = s.v"
+        ).first()
+    finally:
+        spark.catalog.dropTempView("pick")
+    assert r.rows_affected == 2
+    got = sorted(tuple(x) for x in repo.read_table(spark, "t", "main").collect())
+    assert got == [(0, -1), (1, -1), (2, 4), (3, 6), (4, 8), (5, 10)]
+
+
+def test_refused_merge_prints_no_parse_log_record(spark, repo, capfd):
+    """A statement Spark's parser refuses and the engine turns into its
+    own ``ValueError`` prints nothing to stderr; a parse error the engine
+    leaves to Spark keeps Spark's message."""
+    from pyspark.errors import ParseException
+
+    from manage_versions_of_data_in_data_lake_using_lakefs_spark.versioning.sql import LakeSQL
+
+    repo.write_table("main", "t", _kv(spark, 0, 2))
+    repo.write_table("main", "s", _kv(spark, 0, 2))
+    repo.commit("main", "base")
+    sql = LakeSQL(spark, repo, "main")
+    capfd.readouterr()
+    with pytest.raises(ValueError, match="all but the last clause"):
+        sql.sql(
+            "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN DELETE "
+            "WHEN MATCHED THEN UPDATE SET v = s.v"
+        )
+    assert "SQLQueryContextLogger" not in capfd.readouterr().err
+    with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
+        sql.sql("DELETE FROM t WHERE k =")

@@ -82,3 +82,43 @@ def test_merge_grammar_is_not_spelled_in_the_sql_module():
         and id(node) not in docs
     ]
     assert not hits, f"MATCHED spelled at sql.py lines {hits}"
+
+
+def test_repo_path_reads_go_through_literal():
+    """Repo paths are data, never glob patterns: every parquet read
+    under ``versioning/`` passes its paths through ``LakeRepo._literal``,
+    which escapes Hadoop's glob characters."""
+
+    def receivers(node):
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute):
+                yield node.attr
+                node = node.value
+            else:
+                node = node.func
+        if isinstance(node, ast.Name):
+            yield node.id
+
+    def literal(arg):
+        return (
+            isinstance(arg, ast.Starred)
+            and isinstance(arg.value, ast.Call)
+            and isinstance(arg.value.func, ast.Attribute)
+            and arg.value.func.attr == "_literal"
+        )
+
+    reads, bad = 0, []
+    for path in sorted((PACKAGE / "versioning").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+                and not {"write", "writer"} & set(receivers(node.func.value))
+            ):
+                continue
+            reads += 1
+            if not (node.args and all(literal(a) for a in node.args)):
+                bad.append(f"{path.relative_to(PACKAGE.parent)}:{node.lineno}")
+    assert reads, "no parquet read found under versioning/"
+    assert not bad, f"parquet reads of unescaped paths: {bad}"
