@@ -2081,7 +2081,7 @@ class LakeSQL:
         # publish; an evolving schema rewrites every file
         with (
             self._colmeta_rollback(name) if ids_fill and i_clauses else nullcontext(),
-            classify(target, ids_fill) as (positions, images, files, rows),
+            classify(target, ids_fill, want_files=True) as (positions, images, files, rows),
         ):
             c = self.repo._cow_publish(
                 self.spark, self.branch, name, target, positions, images,
@@ -3392,7 +3392,7 @@ class LakeSQL:
     @contextmanager
     def _merge_classified(
         self, name, sdf, ta, sa, t_keys, s_keys, m_clauses, i_clauses,
-        bs_clauses, subquery, target, ids_fill=None,
+        bs_clauses, subquery, target, ids_fill=None, want_files=False,
     ):
         """MERGE's one classification, which both routes publish. Over
         ``target``, a lineage read (``__lg_fp``, ``__lg_ri``), it builds
@@ -3402,9 +3402,10 @@ class LakeSQL:
         the target rows a clause claimed, the rows that join the table
         (updated images, then inserts, their ``ids_fill`` identity
         columns allocated), the part files the positions name (as
-        ``repo._dv_rows`` spells them) and the rows affected. A
-        statement whose clauses hold a subquery is classified through
-        the SELECT rewriter, so the subquery reads repo tables.
+        ``repo._dv_rows`` spells them; None unless ``want_files``) and
+        the rows affected. A statement whose clauses hold a subquery is
+        classified through the SELECT rewriter, so the subquery reads
+        repo tables.
 
         Delta's multiple-match rule is unconditioned: a target row that
         more than one source row joins raises, whether or not a clause
@@ -3414,7 +3415,10 @@ class LakeSQL:
         columns only, by construction, and cannot fan out."""
         spark = self.spark
         run = self._select if subquery else spark.sql
-        tview, sview = "lake__mdv_t", "lake__mdv_s"
+        # the rewriter registers repo table t as lake__t, and no table
+        # name starts with a reserved prefix, so these names are safe
+        # from a subquery's registrations
+        tview, sview = "lake__lake__mdv_t", "lake__lake__mdv_s"
         target.createOrReplaceTempView(tview)
         sdf.createOrReplaceTempView(sview)
         on_sql = " AND ".join(
@@ -3424,6 +3428,10 @@ class LakeSQL:
         types = {c: target.schema[c].dataType.simpleString() for c in stored}
         cl = F.col("__lg_cl")
         frames, tagged = [], []
+
+        def file_col(c):  # the input of the ``files`` aggregate
+            return [c.alias("file")] if want_files else []
+
         try:
             for kind, clauses, join in (
                 (0, m_clauses, "JOIN"), (1, bs_clauses, "LEFT ANTI JOIN")
@@ -3436,15 +3444,21 @@ class LakeSQL:
                     f"{ta}.`__lg_fp` AS __lg_fp, {ta}.`__lg_ri` AS __lg_ri, "
                     f"{', '.join(_clause_proj_cols(clauses, stored, types, ta))} "
                     f"FROM {tview} {ta} {join} {sview} {sa} ON {on_sql})"
-                    # the matched frame keeps unclaimed rows for the
-                    # multiple-match count
                     + (" WHERE __lg_cl > 0" if kind else "")
-                ).persist()
+                )
+                if not kind:
+                    # the matched frame keeps unclaimed rows for the
+                    # multiple-match count, by their lineage keys alone
+                    f = f.select(cl, *_LINEAGE, *[
+                        F.when(cl > 0, F.col(f"`{c}`")).alias(c) for c in stored
+                    ])
+                f = f.persist()
                 upd = cl.isin([i + 1 for i, (_c, a, _x) in enumerate(clauses) if a == "update"])
                 frames.append((kind, f, upd))
                 tagged.append(f.select(
                     F.lit(kind).alias("k"), (cl > 0).alias("claimed"),
-                    upd.alias("image"), *_LINEAGE, self.repo._dv_file(spark).alias("file"),
+                    upd.alias("image"), *_LINEAGE,
+                    *file_col(self.repo._dv_file(spark)),
                 ))
             if i_clauses:
                 sel = _first_match_sel([c for c, _e in i_clauses])
@@ -3460,14 +3474,16 @@ class LakeSQL:
                 tagged.append(ins.select(
                     F.lit(2).alias("k"), F.lit(True).alias("claimed"),
                     F.lit(True).alias("image"), none.alias("__lg_fp"),
-                    F.lit(None).cast("long").alias("__lg_ri"), none.alias("file"),
+                    F.lit(None).cast("long").alias("__lg_ri"),
+                    *file_col(none),
                 ))
             k, claimed, image = F.col("k"), F.col("claimed"), F.col("image")
             # every frame counted in one job (a MERGE has a clause)
             counted = reduce(DataFrame.unionByName, tagged).agg(
                 *[F.count_if((k == i) & claimed).alias(f"n{i}") for i in range(3)],
                 *[F.count_if((k == i) & image).alias(f"image{i}") for i in range(3)],
-                F.collect_set(F.when(claimed, F.col("file"))).alias("files"),
+                *([F.collect_set(F.when(claimed, F.col("file"))).alias("files")]
+                  if want_files else []),
                 (F.count_if(k == 0) > F.count_distinct(
                     F.when(k == 0, F.col("__lg_fp")), F.col("__lg_ri")
                 )).alias("dup"),
@@ -3496,7 +3512,7 @@ class LakeSQL:
             yield (
                 reduce(DataFrame.unionByName, positions) if positions else None,
                 reduce(DataFrame.unionByName, images) if images else None,
-                sorted(counted.files),
+                sorted(counted.files) if want_files else None,
                 sum(counted[f"n{i}"] for i in range(3)),
             )
         finally:

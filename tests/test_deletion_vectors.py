@@ -2205,6 +2205,19 @@ def test_merge_clause_subquery_reads_repo_tables(spark, repo, dv):
     assert r.rows_affected == 2
     got = sorted(tuple(x) for x in repo.read_table(spark, "t", "main").collect())
     assert got == [(0, -1), (1, -1), (2, 4), (3, 6), (4, 8), (5, 10)]
+    # repo tables named like the classification's own views: the
+    # subquery's registration must not replace the MERGE target
+    repo.write_table("main", "mdv_t", _kv(spark, 3, 4))
+    repo.write_table("main", "mdv_s", _kv(spark, 4, 5))
+    repo.commit("main", "picks")
+    r = LakeSQL(spark, repo, "main", dv).sql(
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED AND (s.k IN "
+        "(SELECT k FROM mdv_t) OR s.k IN (SELECT k FROM mdv_s)) "
+        "THEN UPDATE SET v = s.v * 7"
+    ).first()
+    assert r.rows_affected == 2
+    got = sorted(tuple(x) for x in repo.read_table(spark, "t", "main").collect())
+    assert got == [(0, -1), (1, -1), (2, 4), (3, -7), (4, -7), (5, 10)]
 
 
 def test_refused_merge_prints_no_parse_log_record(spark, repo, capfd):
